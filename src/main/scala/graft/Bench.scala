@@ -171,7 +171,7 @@ object Bench {
       val rowWeight = Map("documents" -> 100L, "embeddings" -> 40L)
       for (t <- tables) {
         val src = s"$sfDir/$t.parquet"
-        val rows = spark.read.parquet(src).count()
+        val rows = graft.sources.Tables.rowCount(spark, src)
         val chunks = math.min(math.min(cfg.cpus, 8).toLong,
           math.max(1L, (rows * rowWeight.getOrElse(t, 1L) + 19999L) / 20000L))
           .toInt
@@ -183,7 +183,7 @@ object Bench {
         if (!fresh) {
           val tmp = new java.io.File(
             s"$dir/.tmp_${ProcessHandle.current.pid()}_$t.parquet")
-          spark.read.parquet(src).repartition(chunks)
+          graft.sources.Tables.parquet(spark, src).repartition(chunks)
             .write.mode("overwrite").parquet(tmp.toString)
           java.nio.file.Files.write(
             new java.io.File(tmp, "_graft_rechunk").toPath,

@@ -47,7 +47,7 @@ object Etl {
       try {
         Loader.truncateAndLoad(build, s"$outDir/$table")
         // footer-metadata count — no second pass over the data
-        val n = spark.read.parquet(s"$outDir/$table").count()
+        val n = Tables.rowCount(spark, s"$outDir/$table")
         report += StageRow(stage, table, n, (System.nanoTime() - t0) / 1e9, "ok")
       } catch {
         case e: Exception =>
@@ -57,7 +57,7 @@ object Etl {
     }
 
     def t(name: String) = Tables(spark, sfDir, name)
-    def out(name: String) = spark.read.parquet(s"$outDir/$name")
+    def out(name: String) = Tables.parquet(spark, s"$outDir/$name")
 
     // ---- phase 1: extraction (sources surfaced as-is; the reference
     // copies DB tables into staging frames — parquet sources already
@@ -253,9 +253,8 @@ object Etl {
     import spark.implicits._
     val tables = graft.sources.Fs.childDirs(spark, warehouseDir)
     val rows = tables.map { t =>
-      val df = spark.read.parquet(s"$warehouseDir/$t")
-      Tables.writeCsv(df, s"$exportDir/$t")
-      (t, df.count())
+      Tables.writeCsv(Tables.parquet(spark, s"$warehouseDir/$t"), s"$exportDir/$t")
+      (t, Tables.rowCount(spark, s"$warehouseDir/$t"))
     }
     rows.toDF("table", "rows")
   }

@@ -29,7 +29,7 @@ object Graft {
   def registerWarehouse(spark: SparkSession, warehouseDir: String): Seq[String] = {
     val tables = graft.sources.Fs.childDirs(spark, warehouseDir)
     tables.foreach { t =>
-      spark.read.parquet(s"$warehouseDir/$t").createOrReplaceTempView(t)
+      graft.sources.Tables.parquet(spark, s"$warehouseDir/$t").createOrReplaceTempView(t)
     }
     tables
   }

@@ -107,7 +107,7 @@ object SparkEntry {
       throw new IllegalStateException(
         "knn-truth artifact swap failed (concurrent writer?)")
     deleteRecursively(aside)
-    s.read.parquet(new java.io.File(live, "knn_truth.parquet").toString)
+    Tables.parquet(s, new java.io.File(live, "knn_truth.parquet").toString)
       .orderBy("qid", "rank")
   }
 
@@ -123,7 +123,7 @@ object SparkEntry {
     */
   private def knnTruth(s: SparkSession, d: String): Option[DataFrame] =
     Some(validTruthArtifact(d).flatMap { p =>
-      try Some(Similarity.knnTruthFrom(s.read.parquet(p.toString)))
+      try Some(Similarity.knnTruthFrom(Tables.parquet(s, p.toString)))
       catch { case e: Exception => // swapped mid-read → derive
         System.err.println(s"[knnTruth] artifact read failed, deriving fresh: $e")
         None }

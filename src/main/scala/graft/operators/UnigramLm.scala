@@ -514,7 +514,7 @@ object UnigramLm {
 
   /** The inverse of [[vocab]]: read a persisted piece-table artifact
     * (rank, piece, n_count, cost_micro — e.g.
-    * `spark.read.parquet(...)` of a `vocab().write.parquet(...)`)
+    * `Tables.parquet(spark, ...)` of a `vocab().write.parquet(...)`)
     * back into the [[Piece]] sequence the apply overloads take —
     * closing the train → persist → load → encode deployment loop.
     * Rows are re-sorted by rank, so storage order is irrelevant.

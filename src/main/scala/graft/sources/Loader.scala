@@ -143,7 +143,7 @@ object Loader {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
     val n = math.max(1, math.ceil(dataBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(path).repartition(n)
+    Tables.parquet(spark, path).repartition(n)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (!fs.rename(dir, old))
       throw new java.io.IOException(s"compact: rename $dir -> $old failed")

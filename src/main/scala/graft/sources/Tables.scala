@@ -1,16 +1,119 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers over the parquet star schema (reference extractors:
   * extractors/database_extractor.py + csv_extractor.py collapse to
   * Spark's parquet/csv/jdbc sources; schema-on-read, filters and
   * column pruning pushed to the scan by Catalyst).
+  *
+  * Every parquet read in graft goes through [[parquet]]. A bare
+  * `spark.read.parquet` infers the schema with a one-task Spark job
+  * that reads one footer (`ParquetFileFormat.mergeSchemasInParallel`,
+  * even with mergeSchema off), so each table a query touches costs a
+  * job before the query runs. [[parquet]] resolves the schema on the
+  * driver instead, from the same file and with the same converter
+  * Spark's inference would use:
+  *  - the leaf files are the ones `InMemoryFileIndex` lists for the
+  *    path (same hidden-file filter; globs expanded by `globStatus`);
+  *  - of those, `_common_metadata`, else `_metadata`, else the first
+  *    data file in path order is the one whose footer is read;
+  *  - `ParquetFileFormat.readSchemaFromFooter` with a converter built
+  *    from the session conf, so nanosAsLong, NTZ inference and
+  *    binary-as-string follow the session;
+  *  - the schema is passed as `spark.read.schema(st)`; partition
+  *    columns are still discovered from the directory names.
+  * It hands off to plain `spark.read.parquet` (Spark infers, and
+  * raises its own errors) when there is no readable file (missing path,
+  * empty directory, unreadable footer), when schema merging is on,
+  * and when a partition column shadows a file column.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** A parquet path (file, directory or glob) as a DataFrame, with the
+    * schema Spark's own inference would give, and no Spark job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(st) => spark.read.schema(st).parquet(path)
+      case None     => spark.read.parquet(path)
+    }
+
+  /** Rows under a parquet path, summed from the row groups in the
+    * footers of the files a scan would read (driver-side, no job).
+    * Equals `parquet(spark, path).count()`, which it hands off to when
+    * the path holds no data file. */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val files = fileIndex(spark, path).toSeq
+      .flatMap(_.listFiles(Nil, Nil)).flatMap(_.files).map(_.fileStatus)
+    if (files.isEmpty) parquet(spark, path).count()
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      files.map { f =>
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+      }.sum
+    }
+  }
+
+  /** The leaf files `DataSource` would index for `path`, or None when
+    * it names nothing (Spark raises its own not-found error then). */
+  private def fileIndex(spark: SparkSession, path: String): Option[InMemoryFileIndex] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val q = fs.makeQualified(p)
+    val roots =
+      if (path.exists("{}[]*?\\".contains(_)))
+        Option(fs.globStatus(q)).toSeq.flatten.map(_.getPath)
+      else if (fs.exists(q)) Seq(q)
+      else Nil
+    if (roots.isEmpty) None
+    else Some(new InMemoryFileIndex(spark, roots, Map.empty[String, String], None))
+  }
+
+  /** The schema `ParquetUtils.inferSchema` would give with mergeSchema
+    * off, read on the driver; None where Spark's inference must decide. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else fileIndex(spark, path).flatMap { index =>
+      val leaves = index.allFiles().sortBy(_.getPath.toString)
+      def named(n: String) = leaves.find(_.getPath.getName == n)
+      val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+        ParquetFileWriter.PARQUET_METADATA_FILE)
+      named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+        .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+        .orElse(leaves.find(f => !summaries(f.getPath.getName)))
+        .flatMap(readFooterSchema(spark, _))
+        .filter { st =>
+          val partCols = index.partitionSchema.fieldNames.map(_.toLowerCase).toSet
+          !st.fieldNames.exists(n => partCols(n.toLowerCase))
+        }
+    }
+
+  /** None for a footer that cannot be read or converted (a truncated
+    * file, a type the session conf rejects): Spark's own read then
+    * raises its error, or skips the file under ignoreCorruptFiles. */
+  private def readFooterSchema(spark: SparkSession, f: FileStatus): Option[StructType] =
+    try {
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      Some(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    } catch {
+      case NonFatal(_) => None
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

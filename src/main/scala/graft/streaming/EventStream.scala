@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftConfig
+import graft.sources.Tables
 
 /** Structured Streaming twins of the batch event pipeline
   * (graft.operators.EventOps). Same transforms, readStream source,
@@ -29,7 +30,7 @@ object EventStream {
     */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     // the file stream source monitors a directory; the test fixture is a
     // single file, so stage it into one (a production deployment points
     // this at the landing directory new files arrive in)
@@ -131,7 +132,7 @@ object EventStream {
   private def tableStream(spark: SparkSession, dir: String, table: String,
                           idCol: String,
                           splitAt: Option[Long] = None): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/$table.parquet").schema
     val staged = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_${table}_stream",
       Integer.toHexString(dir.hashCode ^ splitAt.##))
@@ -163,7 +164,7 @@ object EventStream {
           // wipe any stale earlier staging of this fixture dir
           Option(new java.io.File(staged.toString).listFiles())
             .foreach(_.foreach(rmAll))
-          val src = spark.read.parquet(s"$dir/$table.parquet")
+          val src = Tables.parquet(spark, s"$dir/$table.parquet")
           // the file source does not traverse nested non-partition
           // dirs: write each half via Spark, then lift the single part
           // file up as a flat file; distinct mtimes pin trigger order
@@ -256,7 +257,7 @@ object EventStream {
         val incoming = batch.withColumn("__batch", lit(batchId))
         val existing =
           if (new java.io.File(sinkPath).exists())
-            spark.read.parquet(sinkPath)
+            Tables.parquet(spark, sinkPath)
               .withColumn("__batch", lit(-1L)) // pre-existing rows lose ties
           else incoming.limit(0)
         val merged = graft.sources.Loader.upsertKeepLatest(
@@ -479,7 +480,7 @@ object EventStream {
     val id = path.substring(path.lastIndexOf("upto_") + 5).toLong
     val name = qualified(stateTableName(stateDir, id))
     if (spark.catalog.tableExists(name)) spark.table(name)
-    else spark.read.parquet(path)
+    else Tables.parquet(spark, path)
   }
 
   /** [[pruneStateBefore]] plus the catalog entries of bucketed
@@ -614,7 +615,7 @@ object EventStream {
       .getOrElse(throw new IllegalStateException(
         s"no admission state under $stateDir — has the stream committed a trigger?"))
     graft.operators.Dedup.reconcileAdmission(
-      spark.read.parquet(s"$stateDir/upto_$latest"))
+      Tables.parquet(spark, s"$stateDir/upto_$latest"))
   }
 
   /** Streaming twin of TextOps.qualityGate — corpus-RELATIVE filtering
@@ -649,7 +650,7 @@ object EventStream {
         val scored = graft.operators.TextOps.qualityScores(docs)
           .localCheckpoint(eager = true)
         val prevHist = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, Long, Long)]
             .toDF("lang", "score_micro", "n"))
         val newHist = graft.operators.TextOps.mergeHistograms(prevHist,
@@ -682,8 +683,8 @@ object EventStream {
       .reduceOption(_ max _)
       .getOrElse(throw new IllegalStateException(
         s"no gate state under $stateDir — has the stream committed a trigger?"))
-    val hist = spark.read.parquet(s"$stateDir/upto_$latest")
-    val scored = spark.read.parquet(s"$sinkPath/batch_*")
+    val hist = Tables.parquet(spark, s"$stateDir/upto_$latest")
+    val scored = Tables.parquet(spark, s"$sinkPath/batch_*")
       .select("doc_id", "lang", "n_tokens", "n_distinct_tokens", "score_micro")
     graft.operators.TextOps.gateAgainstThresholds(scored,
         graft.operators.TextOps.gateThresholds(hist, dropFraction))
@@ -834,7 +835,7 @@ object EventStream {
       .getOrElse(throw new IllegalStateException(
         s"no span state under $stateDir — has the stream committed a trigger?"))
     val counts = readStateVersion(spark, stateDir, s"$stateDir/upto_$latest")
-    val positions = spark.read.parquet(s"$sinkPath/pairs_*")
+    val positions = Tables.parquet(spark, s"$sinkPath/pairs_*")
     graft.operators.TextOps.spansAgainstCounts(positions, counts, n, minSpan)
   }
 
@@ -854,7 +855,7 @@ object EventStream {
       .getOrElse(throw new IllegalStateException(
         s"no novelty state under $stateDir — has the stream committed a trigger?"))
     val idx = readStateVersion(spark, stateDir, s"$stateDir/upto_$latest")
-    val pairs = spark.read.parquet(s"$sinkPath/pairs_*")
+    val pairs = Tables.parquet(spark, s"$sinkPath/pairs_*")
     graft.operators.TextOps.noveltyAgainstIndex(pairs, idx)
   }
 
@@ -885,7 +886,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val vecs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(Long, Long, Long, Long)]
             .toDF("di", "dj", "s", "n"))
         val newTerms = graft.operators.Similarity
@@ -946,7 +947,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val vecs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(Long, Long, Array[Float])]
             .toDF("vec_id", "cell_id", "embedding"))
         val admitted = graft.operators.Similarity
@@ -998,7 +999,7 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val docs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, String, Long)].toDF("kind", "k", "n"))
         val mb = graft.operators.TextOps.mergeBigramCounts(
             prev.filter(col("kind") === "b")
@@ -1046,9 +1047,9 @@ object EventStream {
       .reduceOption(_ max _)
       .getOrElse(throw new IllegalStateException(
         s"no bigram-model state under $stateDir — has the stream committed a trigger?"))
-    val st = spark.read.parquet(s"$stateDir/upto_$latest")
+    val st = Tables.parquet(spark, s"$stateDir/upto_$latest")
     graft.operators.TextOps.bigramLoglossFromPairs(
-      spark.read.parquet(s"$sinkPath/pairs_*"),
+      Tables.parquet(spark, s"$sinkPath/pairs_*"),
       st.filter(col("kind") === "b")
         .select(col("k").as("bigram"), col("n").as("bigram_freq")),
       st.filter(col("kind") === "t")
@@ -1084,7 +1085,7 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val docs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, Long, Long)].toDF("kind", "bucket", "n"))
         val mt = graft.operators.Corpus.mergeDsirCounts(
             prev.filter(col("kind") === "t").select("bucket", "n"),
@@ -1127,9 +1128,9 @@ object EventStream {
       .reduceOption(_ max _)
       .getOrElse(throw new IllegalStateException(
         s"no DSIR model state under $stateDir — has the stream committed a trigger?"))
-    val st = spark.read.parquet(s"$stateDir/upto_$latest")
+    val st = Tables.parquet(spark, s"$stateDir/upto_$latest")
     graft.operators.Corpus.dsirWeightsFromFeatures(
-      spark.read.parquet(s"$sinkPath/feats_*"),
+      Tables.parquet(spark, s"$sinkPath/feats_*"),
       st.filter(col("kind") === "t").select("bucket", "n"),
       st.filter(col("kind") === "r").select("bucket", "n"))
   }
@@ -1167,7 +1168,7 @@ object EventStream {
         val model = docs.filter(col("doc_id") % 2 === 0)
         val probesDocs = docs.filter(col("doc_id") % 2 =!= 0)
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, String, Long)].toDF("kind", "k", "n"))
         val m3 = graft.operators.TextOps.mergeTrigramCounts(
             prev.filter(col("kind") === "3")
@@ -1222,9 +1223,9 @@ object EventStream {
       .reduceOption(_ max _)
       .getOrElse(throw new IllegalStateException(
         s"no trigram-model state under $stateDir — has the stream committed a trigger?"))
-    val st = spark.read.parquet(s"$stateDir/upto_$latest")
+    val st = Tables.parquet(spark, s"$stateDir/upto_$latest")
     graft.operators.TextOps.trigramBackoffScore(
-      spark.read.parquet(s"$sinkPath/probes_*"),
+      Tables.parquet(spark, s"$sinkPath/probes_*"),
       st.filter(col("kind") === "3")
         .select(col("k").as("trigram"), col("n").as("trigram_freq")),
       st.filter(col("kind") === "2")
@@ -1278,7 +1279,7 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val docs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, String, Long)].toDF("kind", "k", "n"))
         val mb = graft.operators.TextOps.mergeBigramCounts(
             prev.filter(col("kind") === "b")
@@ -1355,14 +1356,14 @@ object EventStream {
       .reduceOption(_ max _)
       .getOrElse(throw new IllegalStateException(
         s"no perplexity state under $stateDir — has the stream committed a trigger?"))
-    val st = spark.read.parquet(s"$stateDir/upto_$latest")
+    val st = Tables.parquet(spark, s"$stateDir/upto_$latest")
     val settled = graft.operators.TextOps.bigramLoglossFromPairs(
-        spark.read.parquet(s"$sinkPath/pairs_*"),
+        Tables.parquet(spark, s"$sinkPath/pairs_*"),
         st.filter(col("kind") === "b")
           .select(col("k").as("bigram"), col("n").as("bigram_freq")),
         st.filter(col("kind") === "t")
           .select(col("k").as("term"), col("n").as("term_freq")))
-      .join(spark.read.parquet(s"$sinkPath/batch_*")
+      .join(Tables.parquet(spark, s"$sinkPath/batch_*")
         .select(col("doc_id"), col("lang")).distinct(), Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("logloss_microbits"))
       .localCheckpoint(eager = true)
@@ -1398,7 +1399,7 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val docs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, Long, Long)]
             .toDF("source", "doc_id", "n_chars"))
         // checkpointed: the snapshot feeds the sink AND the state write
@@ -1442,7 +1443,7 @@ object EventStream {
         val scored = graft.operators.TextOps.qualityScores(docs)
           .localCheckpoint(eager = true)
         val prevHist = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, Long, Long)]
             .toDF("lang", "score_micro", "bucket_tokens"))
         val newHist = graft.operators.Corpus.mergeBudgetHistograms(prevHist,
@@ -1473,8 +1474,8 @@ object EventStream {
       .reduceOption(_ max _)
       .getOrElse(throw new IllegalStateException(
         s"no selection state under $stateDir — has the stream committed a trigger?"))
-    val hist = spark.read.parquet(s"$stateDir/upto_$latest")
-    val scored = spark.read.parquet(s"$sinkPath/batch_*")
+    val hist = Tables.parquet(spark, s"$stateDir/upto_$latest")
+    val scored = Tables.parquet(spark, s"$sinkPath/batch_*")
       .select("doc_id", "lang", "n_tokens", "score_micro")
     graft.operators.Corpus.selectAgainstThresholds(scored,
         graft.operators.Corpus.budgetThresholds(hist, budgetTokens))
@@ -1506,7 +1507,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val docs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, Long)].toDF("lang", "n_tokens"))
         val merged = graft.operators.Corpus.mergeLangTokenCounts(prev,
             graft.operators.Corpus.langTokenCounts(docs))
@@ -1557,7 +1558,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val ev = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(Long, Long, Long)].toDF("i", "b", "cnt"))
         val newCells = graft.operators.EventOps.mergeCmsCells(prev,
             graft.operators.EventOps.cmsCells(ev))
@@ -1594,7 +1595,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val docs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, String, Long)]
             .toDF("lang", "term", "freq"))
         val newVocab = graft.operators.Corpus.mergeZipfVocab(prev,
@@ -1633,7 +1634,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val docs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(Long, Long)].toDF("bucket", "max_rank"))
         val newRegs = graft.operators.TextOps.mergeHllRegisters(prev,
             graft.operators.TextOps.vocabHllRegisters(docs))
@@ -1671,7 +1672,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val docs = batch.drop("ingest_ts")
         val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(Long, String, String, Double, Long)]
             .toDF("doc_id", "source", "lang", "weight", "priority_micro"))
         val merged = graft.operators.Corpus
@@ -1771,7 +1772,7 @@ object EventStream {
         // totals + the batch, written by overwrite to batch-suffixed
         // paths — a replayed trigger rewrites identical content
         val offsets = latestStateBefore(spark, stateDir, batchId)
-          .map(spark.read.parquet(_))
+          .map(Tables.parquet(spark, _))
           .getOrElse(Seq.empty[(String, Long)].toDF("lang", "base_tokens"))
         // checkpoint: consumed by BOTH the sink write and the totals
         // rollup (which reuses the plan's n_tokens instead of paying a

@@ -54,7 +54,8 @@ class EtlSpec extends AnyFunSuite {
     val stages = report.map(_._1)
     assert(stages.distinct.toSeq === Seq("extract", "dim", "fact", "validate"))
 
-    // the report's row counts reconcile with the parquet actually landed
+    // the report's row counts (summed from the landed files' footers)
+    // reconcile with a scan of the parquet actually landed
     report.filter(r => r._1 == "dim" || r._1 == "fact").foreach {
       case (_, table, rows, _) =>
         assert(spark.read.parquet(s"$out/$table").count() === rows,
@@ -111,6 +112,9 @@ class EtlSpec extends AnyFunSuite {
     val expReport = Etl.exportCsv(spark, out, exp).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(expReport("dim_customer") === 1500L)
+    expReport.foreach { case (t, n) =>
+      assert(spark.read.parquet(s"$out/$t").count() === n, s"export row count of $t")
+    }
     val csvCount = spark.read.option("header", "true")
       .csv(s"$exp/dim_customer").count()
     assert(csvCount === 1500L)

@@ -29,8 +29,9 @@ object TestSpark {
   def jobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
     val st = sc.statusTracker
-    def defaultGroupJobs = st.getJobIdsForGroup(null).length
-    def drain(tag: String): Unit = {
+    /** Runs a grouped sentinel job, waits until the tracker shows it,
+      * and returns its job id. */
+    def drain(tag: String): Int = {
       val sentinel = s"jobs-during-$tag-${System.nanoTime()}"
       sc.setJobGroup(sentinel, "listener-bus drain sentinel")
       try spark.range(1).count() finally sc.clearJobGroup()
@@ -39,14 +40,17 @@ object TestSpark {
         System.currentTimeMillis < deadline) Thread.sleep(20)
       assert(st.getJobIdsForGroup(sentinel).nonEmpty,
         "sentinel job never reached the status tracker")
+      st.getJobIdsForGroup(sentinel).max
     }
     // drain BEFORE sampling too (r18): the tracker is listener-bus-fed,
     // so job-end events from a heavy preceding test can land inside the
-    // measured window and charge the block with jobs it never launched
-    drain("pre")
-    val before = defaultGroupJobs
+    // measured window and charge the block with jobs it never launched.
+    // Count job ids above the first sentinel's rather than a difference
+    // of sizes: the tracker keeps only spark.ui.retainedJobs jobs and
+    // drops the oldest in batches, which made the difference negative.
+    val floor = drain("pre")
     body
     drain("post")
-    defaultGroupJobs - before
+    st.getJobIdsForGroup(null).count(_ > floor)
   }
 }
