@@ -64,6 +64,42 @@ object Bench {
     s"""{"jvm_spin_sec":${r3(jvmSec)},"spark_range_agg_sec":${r3(sparkSec)},"loadavg":${r3(load)}}"""
   }
 
+  // Settle barrier, OUTSIDE every timed region: a full GC enqueues
+  // the previous rep's dead block/broadcast references, then the
+  // poll waits until the (asynchronous, in-process) ContextCleaner's
+  // removal storm stops moving the block census — a deterministic
+  // drain signal where a fixed sleep was a guess (r11: 25 ms was
+  // usually enough, and the times it wasn't showed up as 2-6x
+  // in-suite-vs-isolated outliers with util ~0.1 and zero in-rep
+  // GC). Bounded at ~500 ms so a pathological census can't hang the
+  // run. This replaces the old targeted after-checkpointing-queries
+  // GC — targeting was the bug's other half: every query broadcasts
+  // and shuffles, so garbage accumulated across the ~200 untargeted
+  // ones and collected mid-rep wherever the heap filled.
+  // The census spans storage blocks AND disk blocks: shuffle
+  // data/index files never register as storage blocks, so the
+  // storage count alone declares "drained" while the cleaner is
+  // still deleting the previous queries' shuffle files — deletion
+  // I/O and block-manager lock traffic that then lands inside the
+  // next timed rep (r11: the residual 2-6x in-suite outliers with
+  // util ~0.1 and zero in-rep GC, e.g. validate_ri 2.72 s in-suite
+  // vs 0.47 isolated, fit exactly this blind spot).
+  private def census(): Long =
+    org.apache.spark.sql.graft.ColumnBridge.numStorageBlocks +
+      org.apache.spark.sql.graft.ColumnBridge.numDiskBlocks
+  private[graft] def settle(): Unit = {
+    System.gc()
+    var prev = -1L
+    var cur = census()
+    var polls = 0
+    while (cur != prev && polls < 25) {
+      Thread.sleep(20)
+      prev = cur
+      cur = census()
+      polls += 1
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // file > env > defaults — see GraftConfig (config-file parity with
     // the reference's etl_config.yaml; the driver sets env only)
@@ -253,41 +289,6 @@ object Bench {
       var ms = 0L
       gcBeans.forEach(b => ms += math.max(0L, b.getCollectionTime))
       ms / 1e3
-    }
-    // Settle barrier, OUTSIDE every timed region: a full GC enqueues
-    // the previous rep's dead block/broadcast references, then the
-    // poll waits until the (asynchronous, in-process) ContextCleaner's
-    // removal storm stops moving the block census — a deterministic
-    // drain signal where a fixed sleep was a guess (r11: 25 ms was
-    // usually enough, and the times it wasn't showed up as 2-6x
-    // in-suite-vs-isolated outliers with util ~0.1 and zero in-rep
-    // GC). Bounded at ~500 ms so a pathological census can't hang the
-    // run. This replaces the old targeted after-checkpointing-queries
-    // GC — targeting was the bug's other half: every query broadcasts
-    // and shuffles, so garbage accumulated across the ~200 untargeted
-    // ones and collected mid-rep wherever the heap filled.
-    // The census spans storage blocks AND disk blocks: shuffle
-    // data/index files never register as storage blocks, so the
-    // storage count alone declares "drained" while the cleaner is
-    // still deleting the previous queries' shuffle files — deletion
-    // I/O and block-manager lock traffic that then lands inside the
-    // next timed rep (r11: the residual 2-6x in-suite outliers with
-    // util ~0.1 and zero in-rep GC, e.g. validate_ri 2.72 s in-suite
-    // vs 0.47 isolated, fit exactly this blind spot).
-    def census(): Long =
-      org.apache.spark.sql.graft.ColumnBridge.numStorageBlocks +
-        org.apache.spark.sql.graft.ColumnBridge.numDiskBlocks
-    def settle(): Unit = {
-      System.gc()
-      var prev = -1L
-      var cur = census()
-      var polls = 0
-      while (cur != prev && polls < 25) {
-        Thread.sleep(20)
-        prev = cur
-        cur = census()
-        polls += 1
-      }
     }
     // one rep's full measurement — cpu/gc must come from the same rep
     // as the reported wall or util is meaningless. `err` carries the

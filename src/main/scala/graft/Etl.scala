@@ -26,11 +26,6 @@ object Etl {
   final case class StageRow(stage: String, table: String, rows: Long,
                             seconds: Double, status: String)
 
-  /** Build every dim + fact to `outDir`, run the validation suite, and
-    * return the run report (stage, table, rows, seconds, status).
-    * Tables land as parquet under `outDir/<table>`; the report itself
-    * is also written to `outDir/etl_run_report`.
-    */
   /** [[buildAll]] driven by a [[GraftConfig]] — the config-file
     * orchestration shape of the reference's main.py (etl_config.yaml
     * through config_manager): source and landing locations come from
@@ -39,6 +34,11 @@ object Etl {
   def buildAll(spark: SparkSession, config: GraftConfig): DataFrame =
     buildAll(spark, config.sfDir, config.outDir)
 
+  /** Build every dim + fact to `outDir`, run the validation suite, and
+    * return the run report (stage, table, rows, seconds, status).
+    * Tables land as parquet under `outDir/<table>`; the report itself
+    * is also written to `outDir/etl_run_report`.
+    */
   def buildAll(spark: SparkSession, sfDir: String, outDir: String): DataFrame = {
     val report = scala.collection.mutable.ArrayBuffer[StageRow]()
 
@@ -211,8 +211,6 @@ object Etl {
     // the small side by construction (CDC's point); eager checkpoint
     // also hands AQE real size stats so the apply joins can go
     // broadcast. In production this is the landed CDC artifact anyway.
-    // (fact_transactions_cdc is in SparkEntry.checkpointingQueries so
-    // the harnesses GC the pinned blocks afterwards.)
     val changes = Validation.snapshotDiff(
       currentFact, newFact, keys, Seq("n_events", "total_value"))
       .localCheckpoint(true)

@@ -1,38 +1,40 @@
 package graft
 
-/** Typed run configuration — parity with the reference's config-file
-  * orchestration (main.py loads config/etl_config.yaml directly before
-  * run_full_etl; connection, chunk and flag settings come from the
-  * file). The Spark re-expression keeps a file > environment >
-  * defaults precedence chain over a dependency-free
-  * java.util.Properties file (the YAML the reference uses is a flat
-  * key/value mapping, which Properties covers without adding a
-  * parser dependency). Because the file outranks env, every file-key
-  * override of a set env var is logged at load — a stale file mounted
-  * via SPARK_GRAFT_CONFIG silently shadowing a driver-exported knob
-  * (e.g. SPARK_GRAFT_CPUS) was exactly the failure mode worth a line
-  * of stderr.
+/** Run and deployment settings — where the fixture and the landed
+  * warehouse live, how many cores a run takes, the plan-family knob
+  * and the bench rep count. Parity with the reference's config-file
+  * orchestration (main.py loads config/etl_config.yaml, whose
+  * connection, chunk and flag settings are deployment settings too).
   *
-  * Consumed by Bench (sfDir/cpus/reps) and Verify (those plus
-  * broadcastThreshold — the plan-diversity knob) and by Etl.buildAll's
-  * config overload. Bench deliberately ignores broadcastThreshold so
-  * its round artifacts always measure the same (broadcast) plan
-  * family; use Verify for shuffle-plan crosschecks. The env names are
-  * the ones the round driver already sets, so an absent file changes
-  * nothing.
+  * Operator parameters are NOT configuration: they are code constants
+  * beside their operators (e.g. `TextOps.SpanGramN`,
+  * `TextOps.GateDropFraction`, `TextOps.PerplexityKept`), used as the
+  * operators' default arguments and rendered into the oracle text, and
+  * a non-default value is passed explicitly at the call site. In the
+  * program only `Bench` and `Verify` call [[GraftConfig.load]]
+  * (`ConfigReadLintSpec` pins this).
+  *
+  * Precedence is file > environment > defaults over a dependency-free
+  * java.util.Properties file (the YAML the reference uses is a flat
+  * key/value mapping, which Properties covers without adding a parser
+  * dependency). Because the file outranks env, every file-key override
+  * of a set env var is logged at load — a stale file mounted via
+  * SPARK_GRAFT_CONFIG silently shadowing an exported env knob (e.g.
+  * SPARK_GRAFT_CPUS) was exactly the failure mode worth a line of
+  * stderr.
+  *
+  * Bench reads sfDir/cpus/benchReps; Verify reads cpus and
+  * broadcastThreshold (the plan-diversity knob); Etl.buildAll's config
+  * overload reads sfDir/outDir. Bench deliberately ignores
+  * broadcastThreshold so its artifacts always measure the same
+  * (broadcast) plan family; use Verify for shuffle-plan crosschecks.
   */
 final case class GraftConfig(
     sfDir: String,
     outDir: String,
     cpus: Int,
     broadcastThreshold: Option[String],
-    benchReps: Int,
-    curateSelector: String,
-    gateDropFraction: Double,
-    perplexityKeptNumer: Int,
-    perplexityKeptDenom: Int,
-    spanGramN: Int,
-    spanMinTokens: Int)
+    benchReps: Int)
 
 object GraftConfig {
 
@@ -68,13 +70,6 @@ object GraftConfig {
             s"config value for '$key' (env $env) is not an integer: '$v'")
         }
       }.getOrElse(default)
-    // read + parse the kept fraction ONCE (r11 ADVICE): two
-    // independent get/parseKept calls — one per tuple element — could
-    // yield an inconsistent numer/denom pair from a config source with
-    // side effects or a concurrent writer between the reads
-    val (keptN, keptD) = parseKept(
-      get("perplexity.kept.fraction", "SPARK_GRAFT_PERPLEXITY_KEPT")
-        .getOrElse("2/3"))
     GraftConfig(
       sfDir = get("sf.dir", "SPARK_GRAFT_SF_DIR")
         .getOrElse("/root/testdata/sf0.1"),
@@ -88,66 +83,6 @@ object GraftConfig {
       // the remaining in-suite outliers are co-tenant scheduling
       // noise, and min-of-3 is markedly more robust to a single
       // unlucky rep than min-of-2 for ~2 min more (untimed) suite wall
-      benchReps = getInt("bench.reps", "SPARK_GRAFT_BENCH_REPS", 3),
-      // which metering stage Corpus.curate composes: "budget"
-      // (score-bucket token budgeting — the default, oracle-pinned),
-      // "priority" (weighted A-Res sampling) or "dsir" (importance-
-      // based top-k vs the lang='en' target slice); validated at the
-      // operator, not here, so a bad value names the call site
-      curateSelector = get("curate.selector", "SPARK_GRAFT_CURATE_SELECTOR")
-        .getOrElse("budget"),
-      // kept-fraction knobs for the corpus-relative filters (r8 #7):
-      // the quality gate drops the worst `gate.drop.fraction` per
-      // language; the perplexity bucketing keeps the best
-      // `perplexity.kept.fraction` (a RATIONAL "N/D" so the bucket
-      // cuts stay exact-integer logic — cum·D ≥ n·N — with 2/3
-      // reproducing the CCNet tercile recipe bit-for-bit). Both flow
-      // to the operator AND its oracle at Verify dump time, so a
-      // non-default run stays oracle-checked.
-      gateDropFraction = {
-        val v = get("gate.drop.fraction", "SPARK_GRAFT_GATE_DROP_FRACTION")
-          .map { s =>
-            try s.trim.toDouble
-            catch {
-              case _: NumberFormatException => throw new IllegalArgumentException(
-                s"config value for 'gate.drop.fraction' is not a number: '$s'")
-            }
-          }.getOrElse(0.25)
-        require(v >= 0.0 && v < 1.0,
-          s"gate.drop.fraction must be in [0, 1): $v")
-        v
-      },
-      perplexityKeptNumer = keptN,
-      perplexityKeptDenom = keptD,
-      // ExactSubstr span-family knobs (the gate.drop.fraction
-      // convention): gram width and minimum reported span, flowing to
-      // the operator AND its oracle text at Verify dump time. The
-      // fixture default is the decontamination family's 8; a
-      // production ExactSubstr run is ~50/50 (Lee et al.).
-      spanGramN = {
-        val v = getInt("span.gram.n", "SPARK_GRAFT_SPAN_GRAM_N", 8)
-        require(v >= 2 && v <= 64, s"span.gram.n must be in [2, 64]: $v")
-        v
-      },
-      spanMinTokens = {
-        val v = getInt("span.min.tokens", "SPARK_GRAFT_SPAN_MIN_TOKENS", 8)
-        require(v >= 1, s"span.min.tokens must be >= 1: $v")
-        v
-      })
-  }
-
-  private[graft] def parseKept(raw: String): (Int, Int) = raw.trim.split("/") match {
-    case Array(n, d) =>
-      val (ni, di) =
-        try (n.trim.toInt, d.trim.toInt)
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"perplexity kept fraction must be 'N/D' integers: '$raw'")
-        }
-      require(ni > 0 && di >= ni,
-        s"perplexity kept fraction must satisfy 0 < N <= D: '$raw'")
-      (ni, di)
-    case _ => throw new IllegalArgumentException(
-      s"perplexity kept fraction must be 'N/D': '$raw'")
+      benchReps = getInt("bench.reps", "SPARK_GRAFT_BENCH_REPS", 3))
   }
 }

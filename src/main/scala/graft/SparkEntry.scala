@@ -48,7 +48,7 @@ object SparkEntry {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  private def truthArtifactRoot(d: String): java.io.File =
+  private[graft] def truthArtifactRoot(d: String): java.io.File =
     new java.io.File(s"target/graft_truth/${md5hex(d).substring(0, 8)}")
 
   /** Identity of the fixture's embeddings table: every file's name,
@@ -124,10 +124,22 @@ object SparkEntry {
   private def knnTruth(s: SparkSession, d: String): Option[DataFrame] =
     Some(validTruthArtifact(d).flatMap { p =>
       try Some(Similarity.knnTruthFrom(Tables.parquet(s, p.toString)))
-      catch { case e: Exception => // swapped mid-read → derive
+      catch { case e: Exception if fileVanished(e) => // swapped mid-read → derive
         System.err.println(s"[knnTruth] artifact read failed, deriving fresh: $e")
         None }
     }.getOrElse(Similarity.knnTruthPairs(t(s, d, "embeddings"))))
+
+  /** True iff `e` (or a cause) says a file disappeared under the read —
+    * the live truth dir swapped by a concurrent `ann_exact_truth`.
+    * Anything else, a malformed artifact above all, must propagate.
+    */
+  private def fileVanished(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.FileNotFoundException => true
+      case st: org.apache.spark.SparkThrowable =>
+        Set("PATH_NOT_FOUND", "FAILED_READ_FILE.FILE_NOT_EXIST")(st.getCondition)
+      case _ => false
+    }
 
   /** The composed OPQ-IVFPQ deployment artifact for the two
     * `_pretrained` entries — trained per call, inside the timed
@@ -139,58 +151,6 @@ object SparkEntry {
   private def opqArtifact(s: SparkSession,
                           d: String): Similarity.IvfPqResidualOpqArtifact =
     Similarity.trainIvfPqResidualOpqArtifact(t(s, d, "embeddings"))
-
-  /** Queries whose operators localCheckpoint (directly or via
-    * Dedup.clusters) and so pin storage blocks until a GC lets the
-    * ContextCleaner reap them. Bench and Verify both trigger a
-    * targeted GC after running one of these — single-sourced here so
-    * the two runners can't drift when a future query starts
-    * checkpointing.
-    */
-  val checkpointingQueries: Set[String] =
-    Set("dedup_clusters", "dedup_prune", "corpus_report", "decontaminate",
-      "decontaminate_bloom", "decontaminate_incremental", "dedup_admit",
-      "dedup_reconcile", "fact_transactions_cdc", "doc_unigram_logloss",
-      // doc_bigram_logloss{,_incremental} left this set in r12: the
-      // window-based scoring tail is checkpoint-free
-      "doc_perplexity_bucket", "doc_perplexity_bucket_reconciled",
-      "dedup_exact", "corpus_funnel", "bpe_merges", "bpe_token_counts",
-      "quality_classifier", "quality_classifier_score", "doc_ngram_novelty",
-      "seq_pack_bpe", "seq_pack_unigram",
-      "doc_ngram_novelty_incremental", "corpus_curate",
-      "corpus_curate_priority",
-      "embedding_covariance", "contamination_matrix",
-      "embedding_covariance_incremental", "bpe_encode", "source_overlap",
-      "source_overlap_incremental", "dedup_jaccard", "dedup_containment",
-      "dedup_lsh_recall", "opq_codes", "ann_recall_ivf_pq_opq",
-      "ann_recall_ivf_pq_opq_learned",
-      "ann_operating_curve_ivf_pq_opq_learned",
-      "knn_ivf_pq_residual_opq_learned",
-      "ann_recall_ivf_pq_residual_opq_learned",
-      "ann_operating_curve_ivf_pq_residual_opq_learned",
-      "knn_ivf_pq_residual_opq_pretrained",
-      "ann_recall_ivf_pq_residual_opq_pretrained",
-      "unigram_vocab", "unigram_vocab_kudo", "unigram_vocab_soft",
-      "unigram_token_counts", "unigram_encode",
-      // the _pretrained entries train their artifact inside the query
-      // fn (checkpointed dictionary, released explicitly) — GC after
-      // them reaps the transient blocks promptly
-      "bpe_encode_pretrained", "bpe_token_counts_pretrained",
-      "unigram_encode_pretrained", "unigram_token_counts_pretrained",
-      "unigram_encode_pretrained_soft",
-      "unigram_encode_pretrained_bytefallback",
-      "bpe_merges_bytes", "bpe_encode_bytes",
-      "bpe_merges_batched", "bpe_encode_batched", "multimodal_image_admit",
-      // the ExactSubstr family checkpoints its positional gram stream
-      "repeated_spans", "repeated_spans_incremental",
-      "repeated_spans_scrub", "repeated_spans_summary",
-      "repeated_spans_reconciled",
-      // r17: the graph-ANN searches checkpoint edges + per-hop scored
-      // frames; semantic admission checkpoints two assignment frames;
-      // the trigram reconcile checkpoints its probe stream
-      "knn_graph", "ann_recall_graph", "ann_operating_curve_graph",
-      "ann_family_comparison", "semdedup_admit",
-      "trigram_backoff_reconciled")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- A. dimensional warehouse ----
@@ -987,13 +947,8 @@ object SparkEntry {
     "doc_quality_verdict" -> ((s, d) => TextOps.qualityVerdict(t(s, d, "documents"))),
     "quality_classifier" -> ((s, d) => Classifier.train(t(s, d, "documents"))),
     "quality_classifier_score" -> ((s, d) => Classifier.score(t(s, d, "documents"))),
-    // kept-fraction knob (r8 #7): the drop fraction flows from
-    // GraftConfig to the operator here AND to the oracle text at
-    // Verify dump time (qualityGateSql reads the same config), so a
-    // non-default run stays fully oracle-checked
     "quality_gate_relative" -> ((s, d) =>
-      TextOps.qualityGate(t(s, d, "documents"),
-        GraftConfig.load().gateDropFraction)),
+      TextOps.qualityGate(t(s, d, "documents"))),
     // the streaming twin's continuation contract, batch-staged: carry
     // the associative histogram across two doc_id-split increments,
     // then retro-gate everything against the merged state — must equal
@@ -1006,7 +961,7 @@ object SparkEntry {
       val hist = TextOps.mergeHistograms(
         TextOps.qualityHistogram(a), TextOps.qualityHistogram(b))
       TextOps.gateAgainstThresholds(a.unionByName(b),
-          TextOps.gateThresholds(hist, GraftConfig.load().gateDropFraction))
+          TextOps.gateThresholds(hist))
         .orderBy("doc_id")
     }),
     "table_profile_orders" -> ((s, d) => Validation.tableProfile(t(s, d, "orders"))),
@@ -1014,30 +969,21 @@ object SparkEntry {
       Validation.columnHistogram(t(s, d, "orders"), "o_totalprice")),
     "passage_dedup" -> ((s, d) => TextOps.passageDedup(t(s, d, "documents"))),
     "passage_scrub" -> ((s, d) => TextOps.passageScrub(t(s, d, "documents"))),
-    // span gram width / min span are GraftConfig knobs flowing to the
-    // operator AND the oracle text at dump time (production
-    // ExactSubstr runs ~50/50; the fixture default is 8/8)
-    "repeated_spans" -> ((s, d) => {
-      val cfg = GraftConfig.load()
-      TextOps.repeatedSpans(t(s, d, "documents"), cfg.spanGramN, cfg.spanMinTokens)
-    }),
+    // gram width and min span are TextOps.SpanGramN (8/8 on the
+    // fixture; production ExactSubstr runs ~50/50), the same constant
+    // the oracle text renders
+    "repeated_spans" -> ((s, d) => TextOps.repeatedSpans(t(s, d, "documents"))),
     "repeated_spans_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
-      val cfg = GraftConfig.load()
       val docs = t(s, d, "documents")
       TextOps.repeatedSpansIncremental(
         docs.filter(col("doc_id") % 2 =!= 0),
-        docs.filter(col("doc_id") % 2 === 0),
-        cfg.spanGramN, cfg.spanMinTokens)
+        docs.filter(col("doc_id") % 2 === 0))
     }),
-    "repeated_spans_scrub" -> ((s, d) => {
-      val cfg = GraftConfig.load()
-      TextOps.repeatedSpanScrub(t(s, d, "documents"), cfg.spanGramN, cfg.spanMinTokens)
-    }),
-    "repeated_spans_summary" -> ((s, d) => {
-      val cfg = GraftConfig.load()
-      TextOps.repeatedSpansSummary(t(s, d, "documents"), cfg.spanGramN, cfg.spanMinTokens)
-    }),
+    "repeated_spans_scrub" -> ((s, d) =>
+      TextOps.repeatedSpanScrub(t(s, d, "documents"))),
+    "repeated_spans_summary" -> ((s, d) =>
+      TextOps.repeatedSpansSummary(t(s, d, "documents"))),
     // the streaming twin's reconcile math stated batch-side (the
     // doc_perplexity_bucket_reconciled convention): per-split counts
     // sum-merged via the STATIONARY full-outer form, every position
@@ -1045,24 +991,19 @@ object SparkEntry {
     // makes it ≡ the one-shot, so the SAME oracle grades it
     "repeated_spans_reconciled" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
-      val cfg = GraftConfig.load()
       val docs = t(s, d, "documents")
-      val pa = TextOps.spanGramPositions(docs.filter(col("doc_id") % 2 === 0),
-        cfg.spanGramN).localCheckpoint(true)
-      val pb = TextOps.spanGramPositions(docs.filter(col("doc_id") % 2 =!= 0),
-        cfg.spanGramN).localCheckpoint(true)
+      val pa = TextOps.spanGramPositions(docs.filter(col("doc_id") % 2 === 0))
+        .localCheckpoint(true)
+      val pb = TextOps.spanGramPositions(docs.filter(col("doc_id") % 2 =!= 0))
+        .localCheckpoint(true)
       TextOps.spansAgainstCounts(pa.unionByName(pb),
         TextOps.mergeSpanGramCountsStationary(
-          TextOps.spanGramCounts(pa), TextOps.spanGramCounts(pb)),
-        cfg.spanGramN, cfg.spanMinTokens)
+          TextOps.spanGramCounts(pa), TextOps.spanGramCounts(pb)))
     }),
     "doc_unigram_logloss" -> ((s, d) => TextOps.unigramLogloss(t(s, d, "documents"))),
     "doc_bigram_logloss" -> ((s, d) => TextOps.bigramLogloss(t(s, d, "documents"))),
-    "doc_perplexity_bucket" -> ((s, d) => {
-      val cfg = GraftConfig.load()
-      TextOps.perplexityBuckets(t(s, d, "documents"),
-        cfg.perplexityKeptNumer, cfg.perplexityKeptDenom)
-    }),
+    "doc_perplexity_bucket" -> ((s, d) =>
+      TextOps.perplexityBuckets(t(s, d, "documents"))),
     // model continuation: standing corpus carried as its count tables,
     // batch scored under the merged model ≡ one-shot restricted to
     // batch docs
@@ -1141,10 +1082,8 @@ object SparkEntry {
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .select(col("doc_id"), col("lang"), col("logloss_microbits"))
         .localCheckpoint(true)
-      val cfg = GraftConfig.load()
       TextOps.bucketAgainstThresholds(settled,
-        TextOps.perplexityThresholds(TextOps.perplexityHistogram(settled),
-          cfg.perplexityKeptNumer, cfg.perplexityKeptDenom))
+        TextOps.perplexityThresholds(TextOps.perplexityHistogram(settled)))
     })
   )
 
@@ -1837,14 +1776,11 @@ object SparkEntry {
     * unnests zip), duplicated-gram set (count >= 2 over EVERY row),
     * gaps-and-islands span merge. `restrict` narrows the emitted
     * positions (the incremental entry passes the batch predicate);
-    * duplication is always counted corpus-wide. DEFS, not vals (the
-    * gate.drop.fraction convention): gram width and min-span read
-    * GraftConfig at oracle-dump time, so the same knobs that
-    * parameterize the Spark operators parameterize this text — a
-    * non-default run stays hash-checked.
+    * duplication is always counted corpus-wide. Gram width and
+    * min-span render [[TextOps.SpanGramN]], the operators' default.
     */
   private def repeatedSpansCteFor(restrict: String): String = {
-    val n = GraftConfig.load().spanGramN
+    val n = TextOps.SpanGramN
     s"""t AS (SELECT doc_id, string_split(lower(trim(text)), ' ') AS tk FROM documents),
       |g AS (SELECT doc_id,
       |  unnest(range(1, greatest(len(tk)-${n - 2}, 1))) AS pos,
@@ -1867,7 +1803,7 @@ object SparkEntry {
   private def repeatedSpansSqlFor(restrict: String): String =
     s"""WITH ${repeatedSpansCteFor(restrict)}
       |SELECT doc_id, span_start, span_end, n_span_tokens, n_dup_grams
-      |FROM s WHERE n_span_tokens >= ${GraftConfig.load().spanMinTokens}
+      |FROM s WHERE n_span_tokens >= ${TextOps.SpanGramN}
       |ORDER BY doc_id, span_start""".stripMargin
 
   private def repeatedSpansSql: String = repeatedSpansSqlFor("")
@@ -1878,7 +1814,7 @@ object SparkEntry {
   private def repeatedSpanScrubSql: String =
     s"""WITH ${repeatedSpansCteFor("")},
       |k AS (SELECT doc_id, list(struct_pack(s := span_start, e := span_end)) AS spans
-      |  FROM s WHERE n_span_tokens >= ${GraftConfig.load().spanMinTokens} GROUP BY doc_id),
+      |  FROM s WHERE n_span_tokens >= ${TextOps.SpanGramN} GROUP BY doc_id),
       |r AS (SELECT t.doc_id, t.tk, coalesce(k.spans, []) AS spans
       |  FROM t LEFT JOIN k USING (doc_id)),
       |f AS (SELECT doc_id, tk, len(spans) AS n_spans,
@@ -1943,7 +1879,7 @@ object SparkEntry {
   private def repeatedSpansSummarySql: String =
     s"""WITH ${repeatedSpansCteFor("")},
       |a AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans, sum(n_span_tokens) AS n_dup
-      |  FROM s WHERE n_span_tokens >= ${GraftConfig.load().spanMinTokens} GROUP BY doc_id)
+      |  FROM s WHERE n_span_tokens >= ${TextOps.SpanGramN} GROUP BY doc_id)
       |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
       |  CAST(sum(CASE WHEN a.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_with_spans,
       |  CAST(sum(len(string_split(lower(trim(d.text)), ' '))) AS BIGINT) AS n_tokens,
@@ -1952,13 +1888,10 @@ object SparkEntry {
       |    / sum(len(string_split(lower(trim(d.text)), ' '))) AS dup_token_share
       |FROM documents d LEFT JOIN a USING (doc_id) GROUP BY 1 ORDER BY source""".stripMargin
 
-  // a DEF, not a val (r8 #7): the drop fraction reads GraftConfig at
-  // oracle-dump time, so the same knob that parameterizes the Spark
-  // operator parameterizes this text — a non-default run stays
-  // hash-checked. The literal renders via toString, the identical
-  // decimal both engines parse to the same double.
+  // the drop fraction renders TextOps.GateDropFraction via toString,
+  // the identical decimal both engines parse to the same double
   private def qualityGateSql: String = {
-    val f = GraftConfig.load().gateDropFraction
+    val f = TextOps.GateDropFraction
     s"""WITH s AS (SELECT doc_id, lang, string_split(lower(trim(text)), ' ') AS tk
       |  FROM documents),
       |sc AS (SELECT doc_id, lang,
@@ -1984,13 +1917,11 @@ object SparkEntry {
     * curation pipeline's oracle, each restating its source oracle
     * verbatim. `sc` carries n_tokens for the curate oracle's budget
     * stage; the verdict's final select simply doesn't read it. The
-    * gate fraction here stays the PINNED default 0.25 — matching the
-    * verdict/curate operators, which compose qualityGate at its
-    * default; only the standalone gate entries follow the
-    * `gate.drop.fraction` knob (qualityGateSql).
+    * gate fraction is [[TextOps.GateDropFraction]], the default the
+    * verdict/curate operators compose qualityGate at.
     */
   private val verdictCtes: String =
-    """t AS (SELECT doc_id, lang, text, lower(trim(text)) AS nt,
+    s"""t AS (SELECT doc_id, lang, text, lower(trim(text)) AS nt,
       |  string_split(lower(trim(text)), ' ') AS tk FROM documents),
       |gq AS (SELECT doc_id,
       |  (CAST(len(tk) AS BIGINT) BETWEEN 50 AND 100000)
@@ -2025,7 +1956,7 @@ object SparkEntry {
       |  sum(n) OVER (PARTITION BY lang ORDER BY score_micro) AS cum,
       |  sum(n) OVER (PARTITION BY lang) AS total FROM h),
       |th AS (SELECT lang, min(score_micro) AS threshold_micro FROM c
-      |  WHERE cum > floor(0.25 * total) GROUP BY lang)""".stripMargin
+      |  WHERE cum > floor(${TextOps.GateDropFraction} * total) GROUP BY lang)""".stripMargin
 
   // Quality classifier (Classifier.scala): base CTEs = the verdict
   // label (verdictCtes restated — the corpus_curate composition) +
@@ -6266,11 +6197,10 @@ object SparkEntry {
     * by the reconcile contract).
     */
   private def perplexityBucketSql: String = {
-    // kept fraction N/D from the same config the operator reads; the
-    // default 2/3 renders cum·6 ≥ n·2 / cum·3 ≥ n·2 — integer-
-    // equivalent to the r8 tercile cuts (both sides scaled by 2)
-    val cfg = GraftConfig.load()
-    val (kn, kd) = (cfg.perplexityKeptNumer, cfg.perplexityKeptDenom)
+    // kept fraction N/D is the operator's default; 2/3 renders
+    // cum·6 ≥ n·2 / cum·3 ≥ n·2 — integer-equivalent to the r8
+    // tercile cuts (both sides scaled by 2)
+    val (kn, kd) = TextOps.PerplexityKept
     s"""WITH $bigramModelCtes,
       |sb AS (SELECT doc_id,
       |  CAST(floor(CAST(sum(nll_micro) AS DOUBLE) / count(*) + 0.5) AS BIGINT)

@@ -103,11 +103,6 @@ object Verify {
                   queries: Map[String, (SparkSession, String) => DataFrame] =
                     SparkEntry.queries): Unit = {
     new java.io.File(outDir).mkdirs()
-    // after a checkpointing query, a GC lets the ContextCleaner reap
-    // the pinned blocks (same accumulation Bench guards against;
-    // targeted so the other ~230 queries don't each pay a full-heap
-    // collection)
-    val checkpointing = SparkEntry.checkpointingQueries
     val names = queries.keys.toSeq.sorted.filter(keep)
     val total = names.length
     names.zipWithIndex.foreach { case (name, idx) =>
@@ -154,7 +149,9 @@ object Verify {
           System.err.println(
             s"[verify] ${idx + 1}/$total $name FAILED: ${e.getMessage}")
       }
-      if (checkpointing(name)) System.gc()
+      // Bench's settle barrier: a GC, then wait for the ContextCleaner
+      // to reap the blocks and shuffle files the query left pinned
+      Bench.settle()
     }
   }
 

@@ -714,8 +714,7 @@ object Corpus {
     * ([[prioritySample]], `sampleN` winners) — production stacks
     * increasingly meter by weighted sampling, and both stages are
     * independently oracle-verified, so the switch only re-routes the
-    * SAME survivor frame (spec covers both paths). Configurable via
-    * GraftConfig's curate.selector / SPARK_GRAFT_CURATE_SELECTOR.
+    * SAME survivor frame (spec covers both paths).
     */
   def curate(documents: DataFrame, budgetTokens: Long = 500L,
              selector: String = "budget", sampleN: Int = 25): DataFrame = {
@@ -729,8 +728,7 @@ object Corpus {
     // driver thread) where each join separately costs <1 s; against
     // the two checkpoints the whole composition is ~0.3 s. The
     // survivor checkpoint then keeps selectBudget's three consumer
-    // branches reading one materialized frame. Verify GCs after this
-    // query (checkpointingQueries).
+    // branches reading one materialized frame.
     val v = graft.operators.TextOps.qualityVerdict(documents)
       .select(col("doc_id"), col("keep"))
       .localCheckpoint(true)
@@ -749,13 +747,6 @@ object Corpus {
       dsirSelect(surviving, col("lang") === "en", k = sampleN)
     else selectBudget(surviving, budgetTokens)
   }
-
-  /** [[curate]] driven by a [[graft.GraftConfig]] — the config-file
-    * orchestration shape: the metering stage comes from the mounted
-    * config (curate.selector) instead of code.
-    */
-  def curate(documents: DataFrame, cfg: graft.GraftConfig): DataFrame =
-    curate(documents, selector = cfg.curateSelector)
 
   /** Top-k terms per document by tf-idf. The score is the rational
     * form tf·N/df (monotone in the usual tf·ln(N/df) for fixed tf):
@@ -1065,8 +1056,7 @@ object Corpus {
     // self-join sides and the size rollup) and Spark does not dedupe
     // shared subtrees — checkpoint the vocabulary-sized result once so
     // the corpus token scan runs once, not three times (the
-    // unigramLogloss freq pattern; blocks released by the runners'
-    // targeted GC — checkpointingQueries)
+    // unigramLogloss freq pattern)
     sourceOverlapFromVocab(sourceVocab(documents).localCheckpoint(true))
 
   /** The distinct (source, term) set — [[sourceOverlap]]'s carried

@@ -82,8 +82,7 @@ object Dedup {
     // eager localCheckpoint pays the text scan once ((doc_id, 32-char
     // md5) rows — a sliver of corpus bytes); measured at sf0.1:
     // 0.36 s vs 0.45–0.61 s warm (ExactTime), and the at-scale win is
-    // the avoided second full-text scan. Registered in
-    // SparkEntry.checkpointingQueries for block release.
+    // the avoided second full-text scan.
     val fps = documents.select(col("doc_id"), fingerprint.as("fp_md5"))
       .localCheckpoint(true)
     val canon = fps.groupBy("fp_md5").agg(min(col("doc_id")).as("canonical_id"))
@@ -326,8 +325,6 @@ object Dedup {
     // built and shuffled only for docs that actually appear in a
     // candidate pair — at 100 TB a tiny fraction of the corpus, where
     // the unrestricted form paid the gram map stage for every doc.
-    // Checkpoint blocks are reaped by the runners' targeted GC
-    // (SparkEntry.checkpointingQueries lists jaccard/containment).
     val pairs = minhashPairs(documents).localCheckpoint(true)
     val candIds = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
@@ -417,8 +414,7 @@ object Dedup {
     // checkpoint each side re-runs the tokenize+md5 gram pipeline
     // over the probe subset — the most expensive stage in the
     // operator, paid twice for identical output (probe-bounded, so
-    // the pinned blocks are small; dedup_lsh_recall is in
-    // SparkEntry.checkpointingQueries like the other pinning ops)
+    // the pinned blocks are small)
     val gs = gramSets(subset).localCheckpoint(true)
     val pairs = gs.select(col("doc_id").as("doc_a"), col("gs").as("gs_a"))
       .join(broadcast(gs.select(col("doc_id").as("doc_b"), col("gs").as("gs_b"))),

@@ -332,7 +332,7 @@ object Multimodal {
     * corpus scale widen the bands — the knnLsh knob); the batch is
     * decoded ONCE (eager checkpoint shared by the corpus test, the
     * self test, and the returned survivors — the admitNearDup
-    * discipline; the registry entry is listed as checkpointing).
+    * discipline).
     */
   def imageAdmit(spark: SparkSession, corpusSigs: DataFrame,
                  batch: DataFrame, maxHamming: Int = 10): DataFrame = {

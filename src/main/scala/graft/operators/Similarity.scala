@@ -1751,8 +1751,7 @@ object Similarity {
     // dedup_exact lesson) — without materialization the corpus-wide
     // generate+aggregate would run twice. One eager localCheckpoint
     // pays the scan once and leaves ≤ d(d+3)/2 rows (2,144 at d=64)
-    // in block storage; Verify/Bench release it via the
-    // checkpointingQueries GC, covArrays releases it explicitly.
+    // in block storage; covArrays releases it explicitly.
     val terms = termsIn.localCheckpoint(true)
     val means = terms.filter(col("dj") === -1L)
       .select(col("di").as("mi"),
@@ -2016,7 +2015,7 @@ object Similarity {
       // without the checkpoint each re-runs the d² rotation fold
       // over the corpus — measured 20.8 s vs 2.6 s for the unrotated
       // twin at sf0.1 before the pin (the lshRecall gs lesson at d²
-      // cost). Registered in SparkEntry.checkpointingQueries.
+      // cost).
       knnIvfPq(opqRotate(embeddings).localCheckpoint(true), nProbes, k),
       nProbes, k, truth)
 

@@ -1023,8 +1023,7 @@ object TextOps {
     // once lets both the salted join and the total rollup
     // (Σ freq ≡ token count) read materialized rows instead of each
     // re-running the full corpus aggregation (Spark does not dedupe
-    // shared subtrees; blocks released by the runners' targeted GC —
-    // checkpointingQueries, the decontaminate pattern).
+    // shared subtrees).
     val terms = documents.select(col("doc_id"), explode(toks).as("term"))
     val freq = terms.groupBy("term").agg(count(lit(1)).as("term_freq"))
       .localCheckpoint(true)
@@ -1146,6 +1145,11 @@ object TextOps {
       mergeBigramCounts(corpusBigrams, bigramCounts(batch)),
       mergeTermCounts(corpusTerms, termCounts(batch)))
 
+  /** Default kept fraction N/D of the perplexity bucketing: 2/3
+    * reproduces the CCNet tercile recipe (head and middle kept).
+    */
+  val PerplexityKept: (Int, Int) = (2, 3)
+
   /** CCNet-style perplexity bucketing (r8) — the decision layer the
     * LM-perplexity pipeline exists for: per language, docs split into
     * head / middle / tail thirds by their [[bigramLogloss]] score
@@ -1163,10 +1167,11 @@ object TextOps {
     * ntile (whose positional tie-splitting is not oracle-exact).
     * The scored frame is checkpointed: it feeds the histogram AND the
     * final join, and recomputing it would re-run the whole bigram
-    * chain per consumer (checkpointingQueries releases the blocks).
+    * chain per consumer.
     */
-  def perplexityBuckets(documents: DataFrame, keptNumer: Int = 2,
-                        keptDenom: Int = 3): DataFrame = {
+  def perplexityBuckets(documents: DataFrame,
+                        keptNumer: Int = PerplexityKept._1,
+                        keptDenom: Int = PerplexityKept._2): DataFrame = {
     val scored = bigramLogloss(documents)
       .join(documents.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("logloss_microbits"))
@@ -1194,17 +1199,18 @@ object TextOps {
   /** Per-language bucket thresholds from a (lang, score, n)
     * histogram: BUCKET-GRAIN greedy — the ascending cumulative runs
     * over ≤ distinct-score rows per language. The KEPT fraction is
-    * the rational keptNumer/keptDenom (GraftConfig
-    * `perplexity.kept.fraction`, r8 #7): t2 is the smallest score
-    * whose cumulative covers kept·n (the keep|tail cut), t1 the
-    * smallest covering kept·n/2 (head = half the kept mass). All
-    * cuts are exact integer cross-multiplies — cum·D ≥ n·N, no
+    * the rational keptNumer/keptDenom ([[PerplexityKept]] by default):
+    * t2 is the smallest score whose cumulative covers kept·n (the
+    * keep|tail cut), t1 the smallest covering kept·n/2 (head = half
+    * the kept mass). All cuts are exact integer cross-multiplies —
+    * cum·D ≥ n·N, no
     * division, no ntile whose positional tie-splitting is not
     * oracle-exact — and the 2/3 default reproduces the CCNet tercile
     * recipe bit-for-bit (cum·3 ≥ n and cum·3 ≥ 2n, scaled by 2).
     */
-  def perplexityThresholds(hist: DataFrame, keptNumer: Int = 2,
-                           keptDenom: Int = 3): DataFrame = {
+  def perplexityThresholds(hist: DataFrame,
+                           keptNumer: Int = PerplexityKept._1,
+                           keptDenom: Int = PerplexityKept._2): DataFrame = {
     require(keptNumer > 0 && keptDenom >= keptNumer,
       s"kept fraction must satisfy 0 < N <= D: $keptNumer/$keptDenom")
     val totals = hist.groupBy("lang").agg(sum(col("n")).as("n_lang"))
@@ -1548,6 +1554,9 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** Default share of each language's documents [[qualityGate]] drops. */
+  val GateDropFraction: Double = 0.25
+
   /** Corpus-RELATIVE quality gate: drop the worst `dropFraction` of
     * each language's documents by type-token ratio (distinct tokens /
     * tokens — low = repetitive boilerplate). CCNet-style percentile
@@ -1566,7 +1575,8 @@ object TextOps {
     * exceeds floor(dropFraction · n_lang) — ties at the threshold are
     * kept, so at most the target fraction is dropped.
     */
-  def qualityGate(documents: DataFrame, dropFraction: Double = 0.25): DataFrame = {
+  def qualityGate(documents: DataFrame,
+                  dropFraction: Double = GateDropFraction): DataFrame = {
     // `scored` feeds the histogram AND the gate join, so the tokenize
     // pipeline runs twice — deliberately NOT checkpointed: same shape
     // and weight as tfidf/commonness, where the checkpoint measured
@@ -1607,7 +1617,8 @@ object TextOps {
   /** Per-language keep threshold from a histogram (the metadata-scale
     * cumulative window — never per-doc).
     */
-  def gateThresholds(hist: DataFrame, dropFraction: Double = 0.25): DataFrame = {
+  def gateThresholds(hist: DataFrame,
+                     dropFraction: Double = GateDropFraction): DataFrame = {
     val wCum = Window.partitionBy("lang").orderBy("score_micro")
     val wTot = Window.partitionBy("lang")
     hist
@@ -1637,7 +1648,7 @@ object TextOps {
   def qualityVerdict(documents: DataFrame,
                      entropyLoMicro: Long = 1000000L,
                      entropyHiMicro: Long = 6000000L,
-                     dropFraction: Double = 0.25): DataFrame = {
+                     dropFraction: Double = GateDropFraction): DataFrame = {
     val g = gopherQuality(documents).select(col("doc_id"), col("keep").as("gopher_keep"))
     val r = repetition(documents).select(col("doc_id"), col("is_repetitive"))
     val e = charEntropy(documents).select(col("doc_id"), col("entropy_microbits"))

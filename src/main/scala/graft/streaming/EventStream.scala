@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GraftConfig
+import graft.operators.TextOps
 import graft.sources.Tables
 
 /** Structured Streaming twins of the batch event pipeline
@@ -636,7 +636,7 @@ object EventStream {
     * block-release discipline as [[admissionPipelineStream]].
     */
   def qualityGateStream(spark: SparkSession, dir: String, sinkPath: String,
-                        dropFraction: Double = 0.25,
+                        dropFraction: Double = TextOps.GateDropFraction,
                         splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
     val stateDir = sinkPath + ".state"
@@ -675,7 +675,7 @@ object EventStream {
     * integer keep rule).
     */
   def reconcileQualityGate(spark: SparkSession, sinkPath: String,
-                           dropFraction: Double = 0.25): DataFrame = {
+                           dropFraction: Double = TextOps.GateDropFraction): DataFrame = {
     val stateDir = sinkPath + ".state"
     val latest = graft.sources.Fs.childDirs(spark, stateDir)
       .filter(_.startsWith("upto_"))
@@ -768,18 +768,17 @@ object EventStream {
     * the one-shot TextOps.repeatedSpans (spec-asserted frame
     * equality). Same versioned replay-idempotent bucketed state,
     * checkpoint, pruning and block-release discipline as
-    * [[noveltyStream]]. Gram width / min span default to the
-    * GraftConfig span knobs so a non-default config run gets a
-    * streaming view CONSISTENT with the batch query surface (the sunk
-    * positional streams are gram-width-specific, so a mismatch would
-    * be undetectable after the fact); [[reconcileRepeatedSpans]] must
-    * be called with the SAME n/minSpan the stream ran at (both read
-    * the same config by default).
+    * [[noveltyStream]]. Gram width / min span default to
+    * TextOps.SpanGramN, the batch operators' default;
+    * [[reconcileRepeatedSpans]] must be called with the SAME n/minSpan
+    * the stream ran at (the sunk positional streams are
+    * gram-width-specific, so a mismatch would be undetectable after
+    * the fact).
     */
   def repeatedSpansStream(spark: SparkSession, dir: String, sinkPath: String,
                           splitAt: Option[Long] = None,
-                          n: Int = GraftConfig.load().spanGramN,
-                          minSpan: Int = GraftConfig.load().spanMinTokens): org.apache.spark.sql.streaming.StreamingQuery = {
+                          n: Int = TextOps.SpanGramN,
+                          minSpan: Int = TextOps.SpanGramN): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
     val stateDir = sinkPath + ".state"
     documentsStream(spark, dir, splitAt)
@@ -822,11 +821,11 @@ object EventStream {
     * one-shot TextOps.repeatedSpans over everything that arrived.
     * Compact inputs only: the sunk positional streams + the count
     * table, never the texts. n/minSpan must match what the stream ran
-    * at — both default to the same GraftConfig span knobs.
+    * at — both default to TextOps.SpanGramN.
     */
   def reconcileRepeatedSpans(spark: SparkSession, sinkPath: String,
-      n: Int = GraftConfig.load().spanGramN,
-      minSpan: Int = GraftConfig.load().spanMinTokens): DataFrame = {
+      n: Int = TextOps.SpanGramN,
+      minSpan: Int = TextOps.SpanGramN): DataFrame = {
     val stateDir = sinkPath + ".state"
     val latest = graft.sources.Fs.childDirs(spark, stateDir)
       .filter(_.startsWith("upto_"))
@@ -1260,18 +1259,9 @@ object EventStream {
     */
   def perplexityBucketStream(spark: SparkSession, dir: String, sinkPath: String,
                              splitAt: Option[Long] = None,
-                             kept: Option[(Int, Int)] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+                             kept: (Int, Int) = TextOps.PerplexityKept): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
-    // kept fraction resolves through the SAME chain as the batch
-    // operator (r11 ADVICE): explicit param > GraftConfig (file > env
-    // > 2/3 default). The old hardcoded default silently diverged
-    // from the one-shot operator under a non-default
-    // perplexity.kept.fraction, breaking the reconcile-equals-one-shot
-    // contract exactly where the config knob was exercised.
-    val (keptN, keptD) = kept.getOrElse {
-      val c = graft.GraftConfig.load()
-      (c.perplexityKeptNumer, c.perplexityKeptDenom)
-    }
+    val (keptN, keptD) = kept
     val stateDir = sinkPath + ".state"
     documentsStream(spark, dir, splitAt)
       .writeStream.outputMode("append")
@@ -1341,14 +1331,10 @@ object EventStream {
     * everything that arrived.
     */
   def reconcilePerplexityBuckets(spark: SparkSession, sinkPath: String,
-                                 kept: Option[(Int, Int)] = None): DataFrame = {
-    // same resolution chain as the stream and the batch operator
-    // (r11 ADVICE): a non-default perplexity.kept.fraction must reach
-    // the reconcile too or it diverges from the one-shot it must equal
-    val (keptN, keptD) = kept.getOrElse {
-      val c = graft.GraftConfig.load()
-      (c.perplexityKeptNumer, c.perplexityKeptDenom)
-    }
+                                 kept: (Int, Int) = TextOps.PerplexityKept): DataFrame = {
+    // must match the kept fraction the stream ran at, or the reconcile
+    // diverges from the one-shot it must equal
+    val (keptN, keptD) = kept
     val stateDir = sinkPath + ".state"
     val latest = graft.sources.Fs.childDirs(spark, stateDir)
       .filter(_.startsWith("upto_"))

@@ -353,7 +353,7 @@ class CorpusSpec extends AnyFunSuite {
 
   test("curate priority selector routes the SAME survivors through A-Res sampling") {
     // both metering stages compose the identical verdict+dedup
-    // survivor frame — the switch (GraftConfig curate.selector) only
+    // survivor frame — the switch (the selector argument) only
     // picks which independently-verified selector runs after it
     val out = Corpus.curate(docs, selector = "priority").cache()
     val verdict = graft.operators.TextOps.qualityVerdict(docs)
@@ -367,11 +367,6 @@ class CorpusSpec extends AnyFunSuite {
     // A-Res output shape: exactly n winners, dense ranks, all survivors
     assert(out.count() === 25)
     assert(out.select("doc_id").exceptAll(survivors).count() === 0)
-    // the config-driven overload resolves the same path
-    val cfg = GraftConfig.load(None).copy(curateSelector = "priority")
-    val viaCfg = Corpus.curate(docs, cfg)
-    assert(viaCfg.exceptAll(out).count() === 0)
-    assert(out.exceptAll(viaCfg).count() === 0)
     // and a bad selector fails loudly at the call site
     intercept[IllegalArgumentException] {
       Corpus.curate(docs, selector = "typo")

@@ -166,21 +166,10 @@ class RepeatedSpansSpec extends AnyFunSuite {
     assert(inc === oneShot)
   }
 
-  test("span knobs flow through the real config chain and cut where stated") {
-    val f = java.nio.file.Files.createTempFile("graft_spanknob", ".properties")
-    java.nio.file.Files.writeString(f, "span.gram.n=4\nspan.min.tokens=12\n")
-    val cfg = graft.GraftConfig.load(Some(f.toString))
-    assert(cfg.spanGramN === 4 && cfg.spanMinTokens === 12)
-    // defaults untouched when the file says nothing
-    val d = graft.GraftConfig.load(Some("/nonexistent"))
-    assert(d.spanGramN === 8 && d.spanMinTokens === 8)
-    // malformed knobs name themselves
-    val bad = java.nio.file.Files.createTempFile("graft_spanknob_bad", ".properties")
-    java.nio.file.Files.writeString(bad, "span.gram.n=1\n")
-    intercept[IllegalArgumentException](graft.GraftConfig.load(Some(bad.toString)))
-    // the knob-driven run: at n=4 the planted 12-token run exactly
-    // meets min.span=12; one token more and it is gone
-    val got = TextOps.repeatedSpans(plantedShared, cfg.spanGramN, cfg.spanMinTokens)
+  test("span knobs cut where stated when passed explicitly") {
+    // at n=4 the planted 12-token run exactly meets minSpan=12; one
+    // token more and it is gone
+    val got = TextOps.repeatedSpans(plantedShared, 4, 12)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.toSet === Set((1L, 6L, 17L), (2L, 1L, 12L)))
     assert(TextOps.repeatedSpans(plantedShared, 4, 13).count() === 0)

@@ -417,7 +417,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("streaming repeated spans at NON-DEFAULT knobs stays consistent with the batch family") {
     // r15 ADVICE: the stream used to hardcode n=8/minSpan=8 while the
-    // batch surface read the GraftConfig knobs — the sunk positional
+    // batch surface took them as parameters — the sunk positional
     // streams are gram-width-specific, so that mismatch is
     // undetectable after the fact. Explicit-knob run must reconcile
     // to the batch one-shot AT THOSE KNOBS.
@@ -770,14 +770,14 @@ class ScaleSpec extends AnyFunSuite {
   test("streaming perplexity buckets under a NON-DEFAULT kept fraction (r11 ADVICE): the explicit 1/2 reaches both the online triggers and the reconcile") {
     val sink = Files.createTempDirectory("graft_ppxstream_kept").toString + "/ppx"
     val q = EventStream.perplexityBucketStream(spark, sf, sink,
-      splitAt = Some(250L), kept = Some((1, 2)))
+      splitAt = Some(250L), kept = (1, 2))
     q.processAllAvailable(); q.stop()
     val docs = Tables.documents(spark, sf)
     // reconcile must equal the one-shot AT THE SAME fraction — the
     // old hardcoded 2/3 default silently broke exactly this contract
     val oneShot = graft.operators.TextOps.perplexityBuckets(docs, 1, 2)
     val settled = EventStream.reconcilePerplexityBuckets(spark, sink,
-      kept = Some((1, 2)))
+      kept = (1, 2))
     assert(settled.exceptAll(oneShot).count() === 0)
     assert(oneShot.exceptAll(settled).count() === 0)
     // and the ONLINE path used 1/2 too: trigger-2's published buckets

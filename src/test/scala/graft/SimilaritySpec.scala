@@ -168,6 +168,30 @@ class SimilaritySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Similarity.knnTruthFrom(tooMany) }
   }
 
+  test("a stamped but malformed knn-truth artifact fails its consumer instead of being re-derived") {
+    import org.apache.commons.io.FileUtils
+    // a private fixture copy: the artifact is keyed by the fixture path
+    val dst = java.nio.file.Files.createTempDirectory("graft_truth_sf").toFile
+    FileUtils.copyDirectory(new java.io.File(sf), dst)
+    val d = dst.toString
+    val root = SparkEntry.truthArtifactRoot(d)
+    try {
+      SparkEntry.queries("ann_exact_truth")(spark, d).collect()
+      val live = new java.io.File(root, "live")
+      assert(new java.io.File(live, "_stamp").isFile)
+      // same stamp, corrupt body: probe 0 skips rank 2
+      Seq((0L, 1L, 3L), (0L, 3L, 4L)).toDF("qid", "rank", "nid")
+        .write.mode("overwrite")
+        .parquet(new java.io.File(live, "knn_truth.parquet").toString)
+      intercept[IllegalArgumentException] {
+        SparkEntry.queries("ann_recall")(spark, d).collect()
+      }
+    } finally {
+      FileUtils.deleteDirectory(root)
+      FileUtils.deleteDirectory(dst)
+    }
+  }
+
   test("semdedup index and admission: single-scan forms bit-equal the compose-from-decision references (r18)") {
     val emb = Tables.embeddings(spark, sf)
     val code = Similarity.kmeansCodebook(emb, 8, 3)

@@ -829,23 +829,17 @@ class TextDedupSpec extends AnyFunSuite {
     }
   }
 
-  test("kept-fraction knob (r8 #7): non-default fractions parse, flow, and cut where the integer logic says") {
-    // config parse through the real file > env > default chain
-    val f = java.nio.file.Files.createTempFile("graft_knob", ".properties")
-    java.nio.file.Files.writeString(f,
-      "gate.drop.fraction=0.4\nperplexity.kept.fraction=1/2\n")
-    val cfg = GraftConfig.load(Some(f.toString))
-    assert(cfg.gateDropFraction === 0.4)
-    assert((cfg.perplexityKeptNumer, cfg.perplexityKeptDenom) === ((1, 2)))
-    // malformed knobs name themselves instead of burying an NFE
-    intercept[IllegalArgumentException](GraftConfig.parseKept("three quarters"))
-    intercept[IllegalArgumentException](GraftConfig.parseKept("5/4"))
-    intercept[IllegalArgumentException](GraftConfig.parseKept("0/3"))
+  test("kept-fraction knob (r8 #7): non-default fractions validate and cut") {
     val docs = Tables.documents(spark, sf)
+    // a kept fraction outside 0 < N <= D fails before any plan is built
+    val hist = TextOps.perplexityHistogram(
+      Seq(("en", 1L)).toDF("lang", "logloss_microbits"))
+    intercept[IllegalArgumentException](TextOps.perplexityThresholds(hist, 5, 4))
+    intercept[IllegalArgumentException](TextOps.perplexityThresholds(hist, 0, 3))
     // the gate at 0.4 drops strictly more than the 0.25 default, and
     // per language the drop count respects floor(f·n) exactly (ties
     // at the threshold are KEPT — the documented semantics)
-    val g40 = TextOps.qualityGate(docs, cfg.gateDropFraction)
+    val g40 = TextOps.qualityGate(docs, 0.4)
     val g25 = TextOps.qualityGate(docs)
     assert(g40.filter(!col("kept")).count() > g25.filter(!col("kept")).count())
     g40.groupBy("lang")
