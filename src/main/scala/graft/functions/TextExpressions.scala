@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the text-dedup hot paths. Each one
@@ -26,8 +27,10 @@ object TextExpressions {
     2531011L, 826366247L, 998244353L, 2891336453L, 69069L, 4294967291L,
     1566083941L)
 
-  def simhash32(md5s: Column): Column =
-    ColumnBridge.column(SimHash32(ColumnBridge.expression(md5s)))
+  def simhash32(tokens: Column): Column =
+    ColumnBridge.column(SimHash32(ColumnBridge.expression(tokens)))
+  def md5Keys(tokens: Column, n: Int, bits: Int, distinct: Boolean = false): Column =
+    ColumnBridge.column(Md5Keys(ColumnBridge.expression(tokens), n, bits, distinct))
   def profileHitCounts(tokens: Column, profiles: Seq[Seq[String]]): Column =
     ColumnBridge.column(ProfileHitCounts(ColumnBridge.expression(tokens), profiles))
   def sortedIntersectCount(a: Column, b: Column): Column =
@@ -70,22 +73,107 @@ object CharCountsHelper {
   }
 }
 
-/** 32-bit SimHash over an array of md5 hex digests: bit j set iff the
-  * majority of digests have the top bit of hex nibble j set. One pass
-  * over the digest bytes ('8'↔0x38 splits the nibble range in ASCII).
+/** Shared eval body of [[Md5Keys]] and [[SimHash32]], also called from
+  * their generated code (the CharCountsHelper pattern). The elements
+  * of a row are copied once into one buffer, each followed by a space,
+  * so every window of consecutive elements joined by single spaces is
+  * a contiguous byte range and is digested in place. Elements must be
+  * non-null (the arrays come from `split`).
   */
-case class SimHash32(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "simhash32"
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
+object Md5KeysHelper {
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** The UTF-8 bytes of every element, each followed by one space;
+    * element i starts at `starts(i)`, and `starts(k)` is the length.
+    */
+  private def spaced(tokens: ArrayData, starts: Array[Int]): Array[Byte] = {
+    val k = tokens.numElements()
+    var total = 0
+    var i = 0
+    while (i < k) {
+      starts(i) = total
+      total += tokens.getUTF8String(i).numBytes() + 1
+      i += 1
+    }
+    starts(k) = total
+    val buf = new Array[Byte](total)
+    i = 0
+    while (i < k) {
+      tokens.getUTF8String(i).writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + starts(i))
+      buf(starts(i + 1) - 1) = ' '
+      i += 1
+    }
+    buf
+  }
+
+  /** Top `bits` bits of md5 over each window of `n` consecutive
+    * elements joined by single spaces: the first 8 digest bytes as a
+    * big-endian long, shifted right by 64 − bits — the value
+    * conv(substring(md5(window), 1, bits/4), 16, 10) reads. With
+    * `distinct`, later repeats of a key are dropped (array_distinct).
+    */
+  def keys(tokens: ArrayData, n: Int, bits: Int, distinct: Boolean): ArrayData = {
+    val k = tokens.numElements()
+    val m = math.max(k - n + 1, 0)
+    val out = new Array[Long](m)
+    var len = 0
+    if (m > 0) {
+      val starts = new Array[Int](k + 1)
+      val buf = spaced(tokens, starts)
+      val md = md5.get()
+      val d = new Array[Byte](16)
+      // open-addressing set of the keys seen so far; keys are ≥ 0, so
+      // -1 marks an empty slot
+      var mask = 0
+      var seen: Array[Long] = null
+      if (distinct) {
+        var cap = 2
+        while (cap < 2 * m) cap <<= 1
+        mask = cap - 1
+        seen = Array.fill(cap)(-1L)
+      }
+      var w = 0
+      while (w < m) {
+        md.update(buf, starts(w), starts(w + n) - 1 - starts(w))
+        md.digest(d, 0, 16)
+        var h = 0L
+        var b = 0
+        while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
+        val key = h >>> (64 - bits)
+        var fresh = true
+        if (distinct) {
+          var s = (key ^ (key >>> 32)).toInt & mask
+          while (seen(s) != -1L && seen(s) != key) s = (s + 1) & mask
+          fresh = seen(s) == -1L
+          seen(s) = key
+        }
+        if (fresh) { out(len) = key; len += 1 }
+        w += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(
+      if (len == m) out else java.util.Arrays.copyOf(out, len))
+  }
+
+  /** 32-char bitstring: bit j is '1' iff more than half of the elements'
+    * md5 digests have the top bit of hex nibble j set.
+    */
+  def simhash32(tokens: ArrayData): UTF8String = {
+    val k = tokens.numElements()
+    val starts = new Array[Int](k + 1)
+    val buf = spaced(tokens, starts)
+    val md = md5.get()
+    val d = new Array[Byte](16)
     val w = new Array[Int](32)
     var i = 0
-    while (i < arr.numElements()) {
-      val bytes = arr.getUTF8String(i).getBytes
+    while (i < k) {
+      md.update(buf, starts(i), starts(i + 1) - 1 - starts(i))
+      md.digest(d, 0, 16)
       var j = 0
       while (j < 32) {
-        if (bytes(j) >= '8') w(j) += 1 else w(j) -= 1
+        // nibble j is the high half of byte j/2 for even j, the low half for odd j
+        if ((d(j >> 1) & (if ((j & 1) == 0) 0x80 else 0x08)) != 0) w(j) += 1 else w(j) -= 1
         j += 1
       }
       i += 1
@@ -95,26 +183,45 @@ case class SimHash32(child: Expression) extends UnaryExpression {
     while (j < 32) { out(j) = if (w(j) > 0) '1' else '0'; j += 1 }
     UTF8String.fromBytes(out)
   }
+}
+
+/** Per-window md5 keys of a string array in one native pass: for each
+  * window of `n` consecutive elements, the top `bits` bits of md5 over
+  * the window joined by single spaces ([[Md5KeysHelper.keys]]); `n` = 1
+  * gives one key per element. Null array → null; fewer than `n`
+  * elements → empty. Bit-identical to the per-element lambda
+  * transform(posRange(size(a) − n + 1), i => conv(substring(md5(
+  * array_join(slice(a, i, n), ' ')), 1, bits/4), 16, 10)) (wrapped in
+  * array_distinct when `distinct`), which Spark interprets element by
+  * element: a slice, a join, a hex digest, a substring and a base
+  * conversion per window. The DuckDB oracles still spell that form.
+  */
+case class Md5Keys(child: Expression, n: Int, bits: Int, distinct: Boolean)
+    extends UnaryExpression {
+  require(n >= 1 && bits >= 1 && bits <= 63, s"md5_keys: n=$n, bits=$bits")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "md5_keys"
+  override def nullSafeEval(v: Any): Any =
+    Md5KeysHelper.keys(v.asInstanceOf[ArrayData], n, bits, distinct)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val w = ctx.freshName("w"); val i = ctx.freshName("i")
-      val j = ctx.freshName("j"); val bs = ctx.freshName("bs")
-      val out = ctx.freshName("out")
-      s"""
-        int[] $w = new int[32];
-        for (int $i = 0; $i < $arr.numElements(); $i++) {
-          byte[] $bs = $arr.getUTF8String($i).getBytes();
-          for (int $j = 0; $j < 32; $j++) {
-            if ($bs[$j] >= '8') $w[$j]++; else $w[$j]--;
-          }
-        }
-        byte[] $out = new byte[32];
-        for (int $j = 0; $j < 32; $j++) {
-          $out[$j] = $w[$j] > 0 ? (byte) '1' : (byte) '0';
-        }
-        ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromBytes($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.Md5KeysHelper.keys($a, $n, $bits, $distinct);")
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+/** 32-bit SimHash of a token array: bit j set iff the majority of the
+  * tokens' md5 digests have the top bit of hex nibble j set, read from
+  * the raw digest bytes ([[Md5KeysHelper.simhash32]]).
+  */
+case class SimHash32(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def prettyName: String = "simhash32"
+  override def nullSafeEval(v: Any): Any =
+    Md5KeysHelper.simhash32(v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.Md5KeysHelper.simhash32($a);")
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 

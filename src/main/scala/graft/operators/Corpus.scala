@@ -1255,27 +1255,33 @@ object Corpus {
   val DsirBuckets: Int = 128
 
   /** The hashed n-gram feature stream (doc_id, bucket): unigrams +
-    * adjacent bigrams. ONE md5 per TOKEN (28-bit ints, materialized
-    * in their own projection — referenced three times and non-cheap,
-    * so CollapseProject keeps it), then bigram keys by arithmetic
-    * combination h₀·2²⁸ + h₁ (56-bit exact) — the `repetition`
-    * operator's lesson verbatim: HOF lambda bodies run INTERPRETED,
-    * so per-gram work must be shallow (a digest per gram measured
-    * ~20 s at sf0.1 in the r16 first cut; the combine form is the
-    * ~1 s shape). Both engines hash identically, so bucket ids are
-    * exact.
-    */
+    * adjacent bigrams. See [[dsirFeatureRows]]. */
   def dsirFeatures(documents: DataFrame, b: Int = DsirBuckets): DataFrame =
+    dsirFeatureRows(documents, Nil, b)
+
+  /** (doc_id, `carry`…, bucket) feature rows — the one definition
+    * behind [[dsirFeatures]] and [[dsirWeights]]. ONE md5 per TOKEN
+    * (28-bit ints from the native [[graft.functions.Md5Keys]] pass,
+    * materialized in their own projection — referenced three times and
+    * non-cheap, so CollapseProject keeps it), then bigram keys by
+    * arithmetic combination h₀·2²⁸ + h₁ (56-bit exact) in HOF lambdas,
+    * which Spark interprets per element, so the per-gram work stays
+    * shallow (a digest per gram in a lambda measured ~20 s at sf0.1 in
+    * the r16 first cut). Both engines hash identically, so bucket ids
+    * are exact.
+    */
+  private def dsirFeatureRows(documents: DataFrame, carry: Seq[String],
+      b: Int): DataFrame = {
+    val keep = col("doc_id") +: carry.map(col)
     documents
-      .select(col("doc_id"), split(lower(trim(col("text"))), " ").as("__tk"))
-      .select(col("doc_id"), transform(col("__tk"), w =>
-        conv(substring(md5(w.cast("binary")), 1, 7), 16, 10)
-          .cast(LongType)).as("__h"))
-      .select(col("doc_id"), explode(concat(
+      .select(keep :+ graft.functions.TextExpressions
+        .md5Keys(split(lower(trim(col("text"))), " "), 1, 28).as("__h"): _*)
+      .select(keep :+ explode(concat(
         transform(col("__h"), h => pmod(h, lit(b.toLong))),
         transform(graft.functions.ColUtil.posRange(size(col("__h")) - lit(1)),
           i => pmod(element_at(col("__h"), i) * lit(1L << 28) +
-            element_at(col("__h"), i + 1), lit(b.toLong))))).as("bucket"))
+            element_at(col("__h"), i + 1), lit(b.toLong))))).as("bucket"): _*)
+  }
 
   /** Bucket feature counts (bucket, n) — the DSIR model's carried
     * state: integer sums, exactly associative.
@@ -1357,18 +1363,9 @@ object Corpus {
     // models from half the document scans; the target model, the raw
     // model, and the probe stream are all filters over one
     // materialization.
-    val flagged = documents
-      .select(col("doc_id"), targetPred.as("__target"), col("text"))
-      .select(col("doc_id"), col("__target"),
-        split(lower(trim(col("text"))), " ").as("__tk"))
-      .select(col("doc_id"), col("__target"), transform(col("__tk"), w =>
-        conv(substring(md5(w.cast("binary")), 1, 7), 16, 10)
-          .cast(LongType)).as("__h"))
-      .select(col("doc_id"), col("__target"), explode(concat(
-        transform(col("__h"), h => pmod(h, lit(b.toLong))),
-        transform(graft.functions.ColUtil.posRange(size(col("__h")) - lit(1)),
-          i => pmod(element_at(col("__h"), i) * lit(1L << 28) +
-            element_at(col("__h"), i + 1), lit(b.toLong))))).as("bucket"))
+    val flagged = dsirFeatureRows(documents
+      .select(col("doc_id"), targetPred.as("__target"), col("text")),
+      Seq("__target"), b)
       .localCheckpoint(true)
     val raw = flagged.filter(!col("__target")).select("doc_id", "bucket")
     dsirWeightsFromFeatures(raw,

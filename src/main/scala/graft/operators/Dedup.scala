@@ -32,29 +32,15 @@ object Dedup {
   def fingerprintSet(corpus: DataFrame): DataFrame =
     corpus.select(fingerprint.as("fp_md5")).distinct()
 
-  /** 5-char shingle array of the normalized text (empty when the text
-    * is shorter than one shingle — a short doc has no shingles, no
-    * bands, and can never be an LSH candidate, which is what every
-    * shingle oracle already states; the unguarded sequence() produced
-    * phantom negative-offset shingles instead, see ColUtil.posRange).
-    */
-  private def shingles(n: Column, len: Int = 5): Column =
-    transform(graft.functions.ColUtil.posRange(length(n) - lit(len - 1)),
-      i => n.substr(i, lit(len)))
-
-  /** Carter-Wegman mix constants for the 12 minhash functions: one md5
-    * per shingle (28 bits of it parsed to int) + 12 cheap (a·x+b) mod p
-    * mixes — ~12× fewer digests than hashing shingle‖seed per function.
+  /** Carter-Wegman mix constants for the 12 minhash functions: one
+    * base-31 hash per shingle + 12 cheap (a·x+b) mod p mixes — ~12×
+    * fewer hashes than hashing shingle‖seed per function.
     * Shared with the generated oracle SQL (single source of truth in
     * graft.functions.TextExpressions).
     */
   val MixP: Long = graft.functions.TextExpressions.MixP
   val MixA: Seq[Long] = graft.functions.TextExpressions.MixA
   val MixB: Seq[Long] = graft.functions.TextExpressions.MixB
-
-  /** 28-bit integer per shingle from one md5. */
-  private def shingleInts(sh: Column): Column =
-    transform(sh, s => conv(substring(md5(s.cast("binary")), 1, 7), 16, 10).cast("long"))
 
   /** Exact dedup on normalized-text hash; canonical = min doc_id in the
     * hash group (ref data_validator.py:299 keep-first semantics).
@@ -302,16 +288,9 @@ object Dedup {
     * exact, and both engines hash identically so parity is exact.
     * Sorted so the native merge-walk intersect can stream both sides.
     */
-  private def gramSets(documents: DataFrame): DataFrame = {
-    val toks = split(col("nt"), " ")
-    val grams = sort_array(array_distinct(transform(
-      transform(graft.functions.ColUtil.posRange(size(toks) - lit(2)),
-        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1),
-          element_at(toks, i + 2))),
-      g => conv(substring(md5(g.cast("binary")), 1, 15), 16, 10).cast(LongType))))
-    documents.select(col("doc_id"), norm.as("nt"))
-      .select(col("doc_id"), grams.as("gs"))
-  }
+  private def gramSets(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), sort_array(graft.functions.TextExpressions
+      .md5Keys(split(norm, " "), 3, 60, distinct = true)).as("gs"))
 
   /** LSH band candidates joined to both sides' exact gram sets — the
     * shared head of the exact-similarity pair operators.
@@ -645,12 +624,9 @@ object Dedup {
     * in few bits. Emitted as a 32-char bitstring (portable, groupable).
     */
   def simhash(documents: DataFrame): DataFrame =
-    // md5 once per token (codegen'd), then one native pass for all 32
-    // nibble-majority counters (graft.functions.SimHash32)
-    documents.select(col("doc_id"), norm.as("nt"))
-      .select(col("doc_id"),
-        transform(split(col("nt"), " "), t => md5(t.cast("binary"))).as("tms"))
-      .select(col("doc_id"),
-        graft.functions.TextExpressions.simhash32(col("tms")).as("simhash"))
+    // one native pass: md5 of every token and all 32 nibble-majority
+    // counters (graft.functions.SimHash32)
+    documents.select(col("doc_id"),
+        graft.functions.TextExpressions.simhash32(split(norm, " ")).as("simhash"))
       .orderBy("doc_id")
 }

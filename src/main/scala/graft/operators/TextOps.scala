@@ -16,6 +16,14 @@ object TextOps {
   private def norm: Column = lower(trim(col("text")))
   private def toks: Column = split(norm, " ")
 
+  /** 60-bit md5 key of every `n`-token window of [[toks]], in one
+    * native pass ([[graft.functions.Md5Keys]]). `distinct` keeps first
+    * occurrences (the gram SET of decontaminate and novelty); the span
+    * family keeps every position.
+    */
+  private def gramKeys(n: Int, distinct: Boolean): Column =
+    graft.functions.TextExpressions.md5Keys(toks, n, 60, distinct)
+
   /** Tokens/chars/word-length/punct/stopword profile per document. */
   def textStats(documents: DataFrame): DataFrame = {
     val stop = Seq("the", "a", "and", "of", "to")
@@ -306,14 +314,8 @@ object TextOps {
     * — also the compact retro input the streaming twin sinks (8-byte
     * hashes, no text).
     */
-  def gramPairs(documents: DataFrame, n: Int = 8): DataFrame = {
-    val tk = toks
-    val grams = array_distinct(transform(
-      graft.functions.ColUtil.posRange(size(tk) - lit(n - 1)),
-      i => conv(substring(md5(array_join(slice(tk, i, lit(n)), " ").cast("binary")),
-        1, 15), 16, 10).cast(LongType)))
-    documents.select(col("doc_id"), explode(grams).as("g8"))
-  }
+  def gramPairs(documents: DataFrame, n: Int = 8): DataFrame =
+    documents.select(col("doc_id"), explode(gramKeys(n, distinct = true)).as("g8"))
 
   /** Score every doc present in `pairs` against a first-introducer
     * index (g8, first_doc): novel = the index attributes the gram to
@@ -450,17 +452,13 @@ object TextOps {
   private def decontaminateCore(documents: DataFrame, n: Int,
       maxGramDf: Int): DataFrame = {
     // one md5 digest per gram position (60-bit key from the joined
-    // window). Measured alternatives at sf0.1: a per-position
-    // element_at(i+k) polynomial fold re-evaluates the token-hash
-    // array per access after projection collapse (~20× slower), and a
-    // zip_with chain over shifted slices allocates n−1 intermediate
-    // arrays per row (~2× slower) — the single digest per position
-    // wins.
-    val tk = toks
-    val grams = array_distinct(transform(
-      graft.functions.ColUtil.posRange(size(tk) - lit(n - 1)),
-      i => conv(substring(md5(array_join(slice(tk, i, lit(n)), " ").cast("binary")),
-        1, 15), 16, 10).cast(LongType)))
+    // window), all positions of a row in one native pass. As a HOF
+    // lambda the same digest ran interpreted per position (slice,
+    // join, hex digest, substring, base conversion each); per-token
+    // hashes combined by an element_at polynomial fold or a zip_with
+    // chain over shifted slices were slower still at sf0.1 (~20× and
+    // ~2×).
+    val grams = gramKeys(n, distinct = true)
     val base = documents
       .select(col("doc_id"), splitBucket.as("b"), grams.as("gs"),
         col("__fresh"))
@@ -513,16 +511,11 @@ object TextOps {
     */
   def decontaminateBloom(documents: DataFrame, n: Int = 8,
       maxGramDf: Int = GramDfCap, log2Bits: Int = 20): DataFrame = {
-    val tk = toks
-    val grams = array_distinct(transform(
-      graft.functions.ColUtil.posRange(size(tk) - lit(n - 1)),
-      i => conv(substring(md5(array_join(slice(tk, i, lit(n)), " ").cast("binary")),
-        1, 15), 16, 10).cast(LongType)))
     // same checkpointed single tokenize+md5 pass as decontaminate: the
     // exploded stream feeds the df aggregate, the bloom build, and
     // both join sides
     val exploded = documents
-      .select(col("doc_id"), splitBucket.as("b"), grams.as("gs"))
+      .select(col("doc_id"), splitBucket.as("b"), gramKeys(n, distinct = true).as("gs"))
       .select(col("doc_id"), col("b"), explode(col("gs")).as("g8"))
       .localCheckpoint(true)
     val rare = exploded.groupBy("g8")
@@ -596,13 +589,8 @@ object TextOps {
     */
   def decontaminateV2(documents: DataFrame, n: Int = 8,
       maxGramDf: Int = GramDfCap): DataFrame = {
-    val tk = toks
-    val grams = array_distinct(transform(
-      graft.functions.ColUtil.posRange(size(tk) - lit(n - 1)),
-      i => conv(substring(md5(array_join(slice(tk, i, lit(n)), " ").cast("binary")),
-        1, 15), 16, 10).cast(LongType)))
     val base = documents
-      .select(col("doc_id"), splitBucket.as("b"), grams.as("gs"))
+      .select(col("doc_id"), splitBucket.as("b"), gramKeys(n, distinct = true).as("gs"))
     val exploded = base.select(col("doc_id"), col("b"), explode(col("gs")).as("g8"))
     val hot = exploded.groupBy("g8")
       .agg(count(lit(1)).as("gram_df"))
@@ -1512,16 +1500,16 @@ object TextOps {
     * three stats reading each array share ONE evaluation.
     */
   def repetition(documents: DataFrame): DataFrame = {
-    // ONE md5 per token (28-bit ints), then gram keys by arithmetic
-    // combination — HOF lambda bodies run interpreted, so the per-gram
-    // work must be shallow: a digest per gram was ~7 s at sf0.1, the
-    // combine form is ~1 s. Keys: bigram = t0·2^28 + t1 (56-bit exact);
-    // trigram folds through mod 2^31−1 to stay in 59 bits. Both engines
-    // build identical keys, so distinct counts agree exactly.
+    // ONE md5 per token (28-bit ints, one native pass), then gram keys
+    // by arithmetic combination in HOF lambdas, which Spark interprets
+    // per element — so the per-gram work stays shallow (a digest per
+    // gram in a lambda was ~7 s at sf0.1, the combine form ~1 s). Keys:
+    // bigram = t0·2^28 + t1 (56-bit exact); trigram folds through
+    // mod 2^31−1 to stay in 59 bits. Both engines build identical keys,
+    // so distinct counts agree exactly.
     val B = 268435456L      // 2^28
     val P = 2147483647L     // 2^31 − 1
-    val tm = transform(toks,
-      t => conv(substring(md5(t.cast("binary")), 1, 7), 16, 10).cast(LongType))
+    val tm = graft.functions.TextExpressions.md5Keys(toks, 1, 28)
     val g2 = transform(
       graft.functions.ColUtil.posRange(size(col("__tm")) - 1),
       i => element_at(col("__tm"), i) * B + element_at(col("__tm"), i + 1))
@@ -1768,21 +1756,13 @@ object TextOps {
     repeatedSpansCore(documents.withColumn("__fresh", lit(true)), n, minSpan,
       checkpoint = false)
 
-  /** One md5 digest per gram position — the decontaminate 60-bit key
-    * recipe, but NO array_distinct: the position IS the payload.
-    */
-  private def spanGramHashes(n: Int): Column = transform(
-    graft.functions.ColUtil.posRange(size(toks) - lit(n - 1)),
-    i => conv(substring(md5(array_join(slice(toks, i, lit(n)), " ").cast("binary")),
-      1, 15), 16, 10).cast(LongType))
-
   /** The positional n-gram stream (doc_id, pos, g8), positions
     * 1-based — the compact per-document record the streaming twin
     * sinks (8-byte key + position, never the text).
     */
   def spanGramPositions(documents: DataFrame, n: Int = SpanGramN): DataFrame =
     documents
-      .select(col("doc_id"), posexplode(spanGramHashes(n)).as(Seq("p0", "g8")))
+      .select(col("doc_id"), posexplode(gramKeys(n, distinct = false)).as(Seq("p0", "g8")))
       .select(col("doc_id"), (col("p0") + 1).cast(LongType).as("pos"), col("g8"))
 
   /** Gram occurrence counts (g8, n_occ) — the span family's carried
@@ -1846,7 +1826,7 @@ object TextOps {
       minSpan: Int, checkpoint: Boolean = true): DataFrame = {
     val explodedPlan = documents
       .select(col("doc_id"), col("__fresh"),
-        posexplode(spanGramHashes(n)).as(Seq("p0", "g8")))
+        posexplode(gramKeys(n, distinct = false)).as(Seq("p0", "g8")))
       .select(col("doc_id"), col("__fresh"),
         (col("p0") + 1).cast(LongType).as("pos"), col("g8"))
     val exploded =
