@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.sources.Fs
 object Bench {
   // DCE guard for the calibration workloads: results land here so
   // neither the JVM spin nor the Spark aggregate can be eliminated
@@ -156,10 +157,6 @@ object Bench {
         .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_))
         .mkString.substring(0, 8)
       val dir = s"target/bench_rechunk/$digest"
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(deleteRec)
-        f.delete(); ()
-      }
       // Sweep stale work dirs from crashed writers (r9 ADVICE): a
       // bench killed mid-rewrite leaves `.tmp_*` (half-written copy)
       // or `.old_*` (swapped-aside previous copy) behind forever.
@@ -191,7 +188,7 @@ object Bench {
       Option(new java.io.File(dir).listFiles()).toSeq.flatten
         .filter(f => (f.getName.startsWith(".tmp_") ||
           f.getName.startsWith(".old_")) && newestMtime(f) < staleMs)
-        .foreach(deleteRec)
+        .foreach(Fs.deleteLocal)
       // Chunk count follows per-table WORK, not a blanket 8 (r9 —
       // VERDICT #3): the r7 blanket 8-way split parallelized the heavy
       // tokenize+md5 gram stages (decontaminate 4.4 -> 1.7 s) but
@@ -226,7 +223,7 @@ object Bench {
             stamp.getBytes("UTF-8"))
           // Swap by rename-aside, not delete-then-rename (r9 ADVICE):
           // the old order had a window where a concurrent reader saw
-          // NO table at all between deleteRec(dst) and the rename.
+          // NO table at all between deleting dst and the rename.
           // Now the stale copy moves aside in one rename (readers see
           // old or new, never nothing) and is deleted only after the
           // new copy is live.
@@ -236,14 +233,14 @@ object Bench {
           // own leftover from a crashed earlier run with a recycled
           // pid (r11 ADVICE) — clear it or the renameTo below fails
           // with a misleading 'concurrent writer?' abort
-          if (aside.exists) deleteRec(aside)
+          if (aside.exists) Fs.deleteLocal(aside)
           if (dst.exists && !dst.renameTo(aside))
             throw new IllegalStateException(
               s"bench re-chunk aside-swap failed for $t (concurrent writer?)")
           if (!tmp.renameTo(dst))
             throw new IllegalStateException(
               s"bench re-chunk swap failed for $t (concurrent writer?)")
-          deleteRec(aside)
+          Fs.deleteLocal(aside)
         }
       }
       dir

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
-import graft.sources.Tables
+import graft.sources.{Fs, Tables}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   * Each `queries` entry is one operator from the survey; `oracleSql`
@@ -78,11 +78,6 @@ object SparkEntry {
     } catch { case _: java.io.IOException => None }
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
   /** Derive + persist + read back the truth — the `ann_exact_truth`
     * entry body. Swap is rename-aside (readers see old or new, never
     * half-written); a reader that catches the between-renames gap
@@ -92,21 +87,21 @@ object SparkEntry {
     val truth = Similarity.knnBrute(t(s, d, "embeddings"))
     val root = truthArtifactRoot(d)
     val tmp = new java.io.File(root, s".tmp_${ProcessHandle.current.pid}")
-    if (tmp.exists) deleteRecursively(tmp)
+    if (tmp.exists) Fs.deleteLocal(tmp)
     truth.write.mode("overwrite")
       .parquet(new java.io.File(tmp, "knn_truth.parquet").toString)
     java.nio.file.Files.write(new java.io.File(tmp, "_stamp").toPath,
       truthStamp(d).getBytes("UTF-8"))
     val live = new java.io.File(root, "live")
     val aside = new java.io.File(root, s".old_${ProcessHandle.current.pid}")
-    if (aside.exists) deleteRecursively(aside)
+    if (aside.exists) Fs.deleteLocal(aside)
     if (live.exists && !live.renameTo(aside))
       throw new IllegalStateException(
         "knn-truth artifact aside-swap failed (concurrent writer?)")
     if (!tmp.renameTo(live))
       throw new IllegalStateException(
         "knn-truth artifact swap failed (concurrent writer?)")
-    deleteRecursively(aside)
+    Fs.deleteLocal(aside)
     Tables.parquet(s, new java.io.File(live, "knn_truth.parquet").toString)
       .orderBy("qid", "rank")
   }
@@ -2133,12 +2128,22 @@ object SparkEntry {
     * verify gate runs.
     */
   def bpeDictValues(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.functions.{col, concat_ws, size}
     val (_, words) = Bpe.train(t(spark, sfDir, "documents"), nMerges = 8)
-    val rows = words.select(col("word"), concat_ws(" ", col("syms")).as("syms"),
-        size(col("syms")).cast("long").as("n_syms"))
-      .orderBy("word").collect()
+    val values = dictValues(words, "syms")
     org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(words)
+    values
+  }
+
+  /** One trained dictionary as DuckDB VALUES rows
+    * `('word', 'sym sym …', CAST(n AS BIGINT))`: `words` carries
+    * `word` and the string-array column `syms`; rows sorted by word,
+    * quotes SQL-escaped.
+    */
+  private def dictValues(words: DataFrame, syms: String): String = {
+    import org.apache.spark.sql.functions.{col, concat_ws, size}
+    val rows = words.select(col("word"), concat_ws(" ", col(syms)),
+        size(col(syms)).cast("long"))
+      .orderBy("word").collect()
     def esc(x: String) = x.replace("'", "''")
     // empty corpus → VALUES needs at least one row to parse; the
     // empty-string word can never join (words are non-empty by filter)
@@ -2156,18 +2161,11 @@ object SparkEntry {
   val BpeBytesDictPlaceholder: String = "/*BPE_BYTES_DICT*/"
 
   def bpeBytesDictValues(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.functions.{col, concat_ws, size}
     val (_, words) =
       Bpe.train(t(spark, sfDir, "documents"), nMerges = 8, byteLevel = true)
-    val rows = words.select(col("word"), concat_ws(" ", col("syms")).as("syms"),
-        size(col("syms")).cast("long").as("n_syms"))
-      .orderBy("word").collect()
+    val values = dictValues(words, "syms")
     org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(words)
-    def esc(x: String) = x.replace("'", "''")
-    if (rows.isEmpty) "('', '', CAST(0 AS BIGINT))"
-    else rows.map(r => s"('${esc(r.getString(0))}', '${esc(r.getString(1))}', " +
-        s"CAST(${r.getLong(2)} AS BIGINT))")
-      .mkString(", ")
+    values
   }
 
   /** The BATCHED-trainer twin of [[BpeDictPlaceholder]] (r14 VERDICT
@@ -2180,18 +2178,11 @@ object SparkEntry {
   val BpeBatchedDictPlaceholder: String = "/*BPE_BATCHED_DICT*/"
 
   def bpeBatchedDictValues(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.functions.{col, concat_ws, size}
     val (_, words, _) =
       Bpe.trainBatched(t(spark, sfDir, "documents"), nMerges = 8, batchK = 4)
-    val rows = words.select(col("word"), concat_ws(" ", col("syms")).as("syms"),
-        size(col("syms")).cast("long").as("n_syms"))
-      .orderBy("word").collect()
+    val values = dictValues(words, "syms")
     org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(words)
-    def esc(x: String) = x.replace("'", "''")
-    if (rows.isEmpty) "('', '', CAST(0 AS BIGINT))"
-    else rows.map(r => s"('${esc(r.getString(0))}', '${esc(r.getString(1))}', " +
-        s"CAST(${r.getLong(2)} AS BIGINT))")
-      .mkString(", ")
+    values
   }
 
   /** The unigram-LM twin of [[BpeDictPlaceholder]]: the trained
@@ -2202,23 +2193,12 @@ object SparkEntry {
     */
   val UnigramDictPlaceholder: String = "/*UNIGRAM_DICT*/"
 
-  def unigramDictValues(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.functions.{col, concat_ws, size}
+  def unigramDictValues(spark: SparkSession, sfDir: String): String =
     // (word, syms, n_pieces) — the syms column serves unigram_encode's
     // positional reassembly, n_pieces serves unigram_token_counts;
     // one trained dictionary feeds both oracles (the bpeDictValues
     // 3-column shape)
-    val rows = UnigramLm.wordPieces(t(spark, sfDir, "documents"))
-      .select(col("word"), concat_ws(" ", col("pieces")).as("syms"),
-        size(col("pieces")).cast("long").as("n_pieces"))
-      .orderBy("word").collect()
-    def esc(x: String) = x.replace("'", "''")
-    // empty corpus → VALUES needs one row; ''-word can never join
-    if (rows.isEmpty) "('', '', CAST(0 AS BIGINT))"
-    else rows.map(r => s"('${esc(r.getString(0))}', '${esc(r.getString(1))}', " +
-        s"CAST(${r.getLong(2)} AS BIGINT))")
-      .mkString(", ")
-  }
+    dictValues(UnigramLm.wordPieces(t(spark, sfDir, "documents")), "pieces")
 
   /** The SOFT-EM twin of [[UnigramDictPlaceholder]] (r13 VERDICT #7 —
     * the soft-EM trainer wired to the full pipeline surface): word →
@@ -2231,19 +2211,9 @@ object SparkEntry {
   val UnigramSoftDictPlaceholder: String = "/*UNIGRAM_SOFT_DICT*/"
 
   def unigramSoftDictValues(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.functions.{col, concat_ws, size}
     val docs = t(spark, sfDir, "documents")
-    val rows = UnigramLm
-      .wordPiecesWith(docs, UnigramLm.train(docs, softEm = true))
-      .select(col("word"), concat_ws(" ", col("pieces")).as("syms"),
-        size(col("pieces")).cast("long").as("n_pieces"))
-      .orderBy("word").collect()
-    def esc(x: String) = x.replace("'", "''")
-    // empty corpus → VALUES needs one row; ''-word can never join
-    if (rows.isEmpty) "('', '', CAST(0 AS BIGINT))"
-    else rows.map(r => s"('${esc(r.getString(0))}', '${esc(r.getString(1))}', " +
-        s"CAST(${r.getLong(2)} AS BIGINT))")
-      .mkString(", ")
+    dictValues(UnigramLm.wordPiecesWith(docs, UnigramLm.train(docs, softEm = true)),
+      "pieces")
   }
 
   /** The learned OPQ rotation's dump-time literal — a nested DuckDB

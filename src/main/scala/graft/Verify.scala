@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.concurrent.{Await, Future, TimeoutException}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
+import graft.sources.Fs
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -93,11 +94,6 @@ object Verify {
     * plan cannot starve the queries after it. `queries` is a
     * parameter so the spec can inject a deliberately-hanging entry.
     */
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(deleteRec)
-    f.delete(); ()
-  }
-
   def dumpQueries(spark: SparkSession, sfDir: String, outDir: String,
                   keep: String => Boolean, capSec: Long,
                   queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -119,7 +115,7 @@ object Verify {
       // eventually wrote, so a timed-out query can neither leave a
       // misleading artifact nor keep holding the cluster.
       val poisoned = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def purge(): Unit = deleteRec(new java.io.File(s"$outDir/$name"))
+      def purge(): Unit = Fs.deleteLocal(new java.io.File(s"$outDir/$name"))
       val fut = Future {
         spark.sparkContext
           .setJobGroup(group, s"verify dump $name", interruptOnCancel = true)

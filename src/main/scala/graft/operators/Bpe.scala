@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
   * vocabulary under it is 32k sequential Spark rounds (the
   * training-side scale bound, r14 VERDICT #1). [[trainBatched]] is
   * the production trainer: top-K non-conflicting merges per round, so
-  * the round count collapses to ≈ nMerges / K (measured in
-  * BpeScaleTime) — see its scaladoc for the conflict rule and the
-  * honest equivalence class vs the unbatched table.
+  * the round count collapses to ≈ nMerges / K — see its scaladoc for
+  * the conflict rule and the honest equivalence class vs the
+  * unbatched table.
   *
   * Not oracle-expressible: the greedy merge fold is inherently
   * sequential per word (DuckDB `replace` cannot reproduce greedy
@@ -455,8 +455,7 @@ object Bpe {
     * [[applyMerge]] fold chain grew the plan linearly and would blow
     * the Janino 64KB method limit at SentencePiece/GPT-scale
     * vocabularies (30k+ merges). The fold form is retained as
-    * [[applyTrainedWordsFold]]; the spec proves frame equality and
-    * BpeScaleTime measures both at ≥1k merges.
+    * [[applyTrainedWordsFold]]; the spec proves frame equality.
     */
   private[graft] def applyTrainedWords(documents: DataFrame,
                                         merges: Seq[Merge],
@@ -466,9 +465,9 @@ object Bpe {
         merges.map(m => (m.lhs, m.rhs)), byteLevel).as("syms"))
 
   /** The pre-r14 nested-fold apply — kept as the frame-equality
-    * reference for [[applyTrainedWords]]' native expression (and as
-    * the measured baseline in BpeScaleTime: plan depth linear in the
-    * merge count, the documented scale bound the expression removes).
+    * reference for [[applyTrainedWords]]' native expression (its plan
+    * depth is linear in the merge count, the documented scale bound
+    * the expression removes).
     */
   private[graft] def applyTrainedWordsFold(documents: DataFrame,
                                             merges: Seq[Merge],

@@ -1170,7 +1170,7 @@ object Corpus {
     * web-scale corpus build runs (one crawl dump must not dominate the
     * mix no matter how large it is).
     *
-    * SCALE NOTE — measured, not assumed (CapScaleTime): source size is
+    * SCALE NOTE — measured, not assumed: source size is
     * wildly skewed (one crawl can be half the corpus), and a naive
     * reading says a window partitioned by raw source funnels the
     * mega-source through one task. In Spark 4 that reading is WRONG:

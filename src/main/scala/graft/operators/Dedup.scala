@@ -67,8 +67,8 @@ object Dedup {
     // the normalize+md5 pipeline scans the full corpus TWICE. One
     // eager localCheckpoint pays the text scan once ((doc_id, 32-char
     // md5) rows — a sliver of corpus bytes); measured at sf0.1:
-    // 0.36 s vs 0.45–0.61 s warm (ExactTime), and the at-scale win is
-    // the avoided second full-text scan.
+    // 0.36 s vs 0.45–0.61 s warm, and the at-scale win is the avoided
+    // second full-text scan.
     val fps = documents.select(col("doc_id"), fingerprint.as("fp_md5"))
       .localCheckpoint(true)
     val canon = fps.groupBy("fp_md5").agg(min(col("doc_id")).as("canonical_id"))

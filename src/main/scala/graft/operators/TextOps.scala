@@ -578,35 +578,6 @@ object TextOps {
       .orderBy("train_doc", "eval_doc")
   }
 
-  /** Hot-LIST variant of the df cap: aggregate only the grams ABOVE the
-    * cap (a tiny set — bounded by total_grams/cap) and anti-join it,
-    * instead of semi-joining the full rare set. The anti-join side is
-    * small enough for AQE to broadcast, so boilerplate-gram rows are
-    * dropped map-side and never cross a shuffle — where the semi-join
-    * formulation moves every exploded row (hot ones included) through
-    * the join exchange. Same result set by construction (df > cap is
-    * the complement of df <= cap).
-    */
-  def decontaminateV2(documents: DataFrame, n: Int = 8,
-      maxGramDf: Int = GramDfCap): DataFrame = {
-    val base = documents
-      .select(col("doc_id"), splitBucket.as("b"), gramKeys(n, distinct = true).as("gs"))
-    val exploded = base.select(col("doc_id"), col("b"), explode(col("gs")).as("g8"))
-    val hot = exploded.groupBy("g8")
-      .agg(count(lit(1)).as("gram_df"))
-      .filter(col("gram_df") > maxGramDf)
-      .select("g8")
-    val capped = exploded.join(hot, Seq("g8"), "left_anti")
-    val train = capped.filter(col("b") < 8)
-      .select(col("doc_id").as("train_doc"), col("g8"))
-    val heldOut = capped.filter(col("b") >= 8)
-      .select(col("doc_id").as("eval_doc"), col("g8"))
-    train.join(heldOut, "g8")
-      .groupBy("train_doc", "eval_doc")
-      .agg(count(lit(1)).as("n_shared_grams"))
-      .orderBy("train_doc", "eval_doc")
-  }
-
   /** Document-length histogram in power-of-two character buckets — the
     * length-distribution diagnostic that sizes chunking and batch
     * shapes. Pure per-row bucket + one tiny groupBy.
@@ -1743,19 +1714,6 @@ object TextOps {
         .unionByName(batch.withColumn("__fresh", lit(true))),
       n, minSpan)
 
-  /** Measured-alternative twin for the SpanScaleTime harness:
-    * identical output, but the positional gram stream is RE-DERIVED
-    * for the probe side instead of checkpointed — the storage-vs-
-    * second-scan trade the 100 TB run has to make explicitly (the
-    * positional stream cannot be array_distinct'd, so its checkpoint
-    * is strictly larger than decontaminate's). Kept runnable so the
-    * choice stays a measurement, not an instinct.
-    */
-  private[graft] def repeatedSpansRescan(documents: DataFrame,
-      n: Int = SpanGramN, minSpan: Int = SpanGramN): DataFrame =
-    repeatedSpansCore(documents.withColumn("__fresh", lit(true)), n, minSpan,
-      checkpoint = false)
-
   /** The positional n-gram stream (doc_id, pos, g8), positions
     * 1-based — the compact per-document record the streaming twin
     * sinks (8-byte key + position, never the text).
@@ -1823,14 +1781,15 @@ object TextOps {
     * fresh rows only.
     */
   private def repeatedSpansCore(documents: DataFrame, n: Int,
-      minSpan: Int, checkpoint: Boolean = true): DataFrame = {
-    val explodedPlan = documents
+      minSpan: Int): DataFrame = {
+    // the positional stream feeds both the count and the probe side:
+    // one eager checkpoint pays the gram scan once instead of twice
+    val exploded = documents
       .select(col("doc_id"), col("__fresh"),
         posexplode(gramKeys(n, distinct = false)).as(Seq("p0", "g8")))
       .select(col("doc_id"), col("__fresh"),
         (col("p0") + 1).cast(LongType).as("pos"), col("g8"))
-    val exploded =
-      if (checkpoint) explodedPlan.localCheckpoint(true) else explodedPlan
+      .localCheckpoint(true)
     // duplicated grams: total occurrence count >= 2 (cross-doc or
     // self-repeat — the suffix-array criterion), one uniform-key agg.
     spansAgainstCounts(

@@ -49,4 +49,12 @@ object Fs {
     val fc = FileContext.getFileContext(qtmp.toUri, spark.sessionState.newHadoopConf())
     fc.rename(qtmp, fs.makeQualified(p), Options.Rename.OVERWRITE)
   }
+
+  /** Delete a file or directory tree on the driver's local disk (work
+    * dirs, staged fixtures, truth artifacts).
+    */
+  def deleteLocal(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteLocal))
+    f.delete(); ()
+  }
 }

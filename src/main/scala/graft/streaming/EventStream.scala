@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.TextOps
-import graft.sources.Tables
+import graft.sources.{Fs, Tables}
 
 /** Structured Streaming twins of the batch event pipeline
   * (graft.operators.EventOps). Same transforms, readStream source,
@@ -156,14 +156,11 @@ object EventStream {
         }
       case Some(cut) =>
         val marker = staged.resolve("_staged_flat")
-        def rmAll(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rmAll)); x.delete(); ()
-        }
         if (!java.nio.file.Files.exists(marker) ||
             new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") != srcFp) {
           // wipe any stale earlier staging of this fixture dir
           Option(new java.io.File(staged.toString).listFiles())
-            .foreach(_.foreach(rmAll))
+            .foreach(_.foreach(Fs.deleteLocal))
           val src = Tables.parquet(spark, s"$dir/$table.parquet")
           // the file source does not traverse nested non-partition
           // dirs: write each half via Spark, then lift the single part
@@ -184,7 +181,7 @@ object EventStream {
                 java.nio.file.StandardCopyOption.REPLACE_EXISTING)
               require(new java.io.File(target.toString).setLastModified(t),
                 s"staging fixture: cannot set mtime on $target — trigger order unpinned")
-              rmAll(new java.io.File(tmp.toString))
+              Fs.deleteLocal(new java.io.File(tmp.toString))
             }
           java.nio.file.Files.write(marker, srcFp.getBytes("UTF-8"))
           ()

@@ -847,8 +847,8 @@ class CorpusSpec extends AnyFunSuite {
     // the 100 TB guarantee: the rank filter must plan a
     // WindowGroupLimit pushdown (per-partition top-cap BEFORE the
     // exchange) — without it a mega source funnels through one task.
-    // Measured (CapScaleTime): this beats a hand-salted two-phase
-    // form 3x at 1M rows / 80% skew.
+    // Measured: this beats a hand-salted two-phase form 3x at 1M rows
+    // / 80% skew.
     val plan = capped.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert("""\(\d+\) WindowGroupLimit""".r.findAllIn(plan).size >= 2,
