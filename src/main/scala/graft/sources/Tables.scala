@@ -44,10 +44,15 @@ object Tables {
 
   /** A parquet path (file, directory or glob) as a DataFrame, with the
     * schema Spark's own inference would give, and no Spark job. */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
-      case Some(st) => spark.read.schema(st).parquet(path)
-      case None     => spark.read.parquet(path)
+  def parquet(spark: SparkSession, path: String): DataFrame = parquet(spark, Seq(path))
+
+  /** Several parquet paths read as one DataFrame (the multi-path
+    * `spark.read.parquet`), schema resolved the same way over all of
+    * their leaf files. */
+  def parquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(st) => spark.read.schema(st).parquet(paths: _*)
+      case None     => spark.read.parquet(paths: _*)
     }
 
   /** Rows under a parquet path, summed from the row groups in the
@@ -55,7 +60,7 @@ object Tables {
     * Equals `parquet(spark, path).count()`, which it hands off to when
     * the path holds no data file. */
   def rowCount(spark: SparkSession, path: String): Long = {
-    val files = fileIndex(spark, path).toSeq
+    val files = fileIndex(spark, Seq(path)).toSeq
       .flatMap(_.listFiles(Nil, Nil)).flatMap(_.files).map(_.fileStatus)
     if (files.isEmpty) parquet(spark, path).count()
     else {
@@ -67,26 +72,27 @@ object Tables {
     }
   }
 
-  /** The leaf files `DataSource` would index for `path`, or None when
-    * it names nothing (Spark raises its own not-found error then). */
-  private def fileIndex(spark: SparkSession, path: String): Option[InMemoryFileIndex] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val q = fs.makeQualified(p)
-    val roots =
+  /** The leaf files `DataSource` would index for `paths`, or None when
+    * they name nothing (Spark raises its own not-found error then). */
+  private def fileIndex(spark: SparkSession, paths: Seq[String]): Option[InMemoryFileIndex] = {
+    val roots = paths.flatMap { path =>
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val q = fs.makeQualified(p)
       if (path.exists("{}[]*?\\".contains(_)))
         Option(fs.globStatus(q)).toSeq.flatten.map(_.getPath)
       else if (fs.exists(q)) Seq(q)
       else Nil
+    }
     if (roots.isEmpty) None
     else Some(new InMemoryFileIndex(spark, roots, Map.empty[String, String], None))
   }
 
   /** The schema `ParquetUtils.inferSchema` would give with mergeSchema
     * off, read on the driver; None where Spark's inference must decide. */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
     if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
-    else fileIndex(spark, path).flatMap { index =>
+    else fileIndex(spark, paths).flatMap { index =>
       val leaves = index.allFiles().sortBy(_.getPath.toString)
       def named(n: String) = leaves.find(_.getPath.getName == n)
       val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
@@ -136,7 +142,12 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = apply(s, d, "events")
+    eventTs(apply(s, d, "events"))
+  }
+
+  /** The `ts` normalization of [[events]], for any frame read from the
+    * events parquet with nanosAsLong set (batch or stream). */
+  private[graft] def eventTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -144,7 +155,6 @@ object Tables {
         raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => raw
     }
-  }
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
-import graft.operators.TextOps
-import graft.sources.{Fs, Tables}
+import graft.operators.{Corpus, Dedup, EventOps, Similarity, TextOps}
+import graft.sources.{Fs, Loader, Tables}
 
 /** Structured Streaming twins of the batch event pipeline
   * (graft.operators.EventOps). Same transforms, readStream source,
@@ -15,6 +15,17 @@ import graft.sources.{Fs, Tables}
   */
 object EventStream {
 
+  /** readStream over the events table, staged like every other
+    * table stream ([[tableStream]]), with `ts` normalized by the
+    * OBSERVED physical type exactly as graft.sources.Tables.events
+    * does (the generator's layout has drifted across rounds).
+    */
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    // before tableStream reads the schema: TIMESTAMP(NANOS) reads as long
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.eventTs(tableStream(spark, dir, "events", "event_id").drop("ingest_ts"))
+  }
+
   /** Streaming tumbling 1-hour aggregate with a 2-hour watermark —
     * twin of EventOps.hourly. Equivalence caveat (applies to every
     * watermark-evicted state in this file): an event arriving more
@@ -22,38 +33,6 @@ object EventStream {
     * window's state was finalized and is dropped — the batch twin
     * over the settled data is the reconciliation path.
     */
-  /** readStream over the raw parquet, normalizing `ts` by the OBSERVED
-    * physical type exactly like graft.sources.Tables.events (the
-    * generator's layout has drifted across rounds): long nanos →
-    * div-1000 + timestamp_micros; TIMESTAMP_NTZ → cast to session-zone
-    * timestamp (sessions run UTC, so the instant is unchanged).
-    */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
-    // the file stream source monitors a directory; the test fixture is a
-    // single file, so stage it into one (a production deployment points
-    // this at the landing directory new files arrive in)
-    val staged = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_events_stream",
-      Integer.toHexString(dir.hashCode))
-    java.nio.file.Files.createDirectories(staged)
-    // always refresh: a staged copy from a PRIOR testdata generation
-    // (same path, different contents/schema) must not shadow the
-    // current fixture
-    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "events.parquet"),
-      staged.resolve("events.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val raw = spark.readStream.schema(schema).parquet(staged.toString)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
-
   def hourlyStream(spark: SparkSession, dir: String): DataFrame = {
     eventsStream(spark, dir)
       .withWatermark("ts", "2 hours")
@@ -105,8 +84,8 @@ object EventStream {
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"), col("event_id"), col("value"))
 
-  /** readStream over the documents corpus, staged the same way as
-    * [[eventsStream]]. The corpus carries no arrival time, so a
+  /** readStream over the documents corpus, staged by
+    * [[tableStream]]. The corpus carries no arrival time, so a
     * deterministic ingest timestamp derives from doc_id (in production
     * this is the landing time of the file the row arrived in).
     *
@@ -129,6 +108,11 @@ object EventStream {
                                splitAt: Option[Long] = None): DataFrame =
     tableStream(spark, dir, "embeddings", "vec_id", splitAt)
 
+  /** A fixture table as a file stream. The file stream source monitors
+    * a directory and the fixture is a single file, so it is staged into
+    * one (a production deployment points this at the landing directory
+    * new files arrive in); `ingest_ts` derives from `idCol`.
+    */
   private def tableStream(spark: SparkSession, dir: String, table: String,
                           idCol: String,
                           splitAt: Option[Long] = None): DataFrame = {
@@ -331,42 +315,52 @@ object EventStream {
     }.select("doc_id")
   }
 
-  /** Latest committed per-batch state version strictly BEFORE
-    * `batchId`, from a directory of immutable `upto_<id>` parquet dirs
-    * — the versioned-state pattern the foreachBatch twins share: every
-    * per-batch output is a deterministic function of the (immutable)
-    * previous version plus the batch content and is written by
-    * OVERWRITE to a batch-suffixed path, so a micro-batch replay after
-    * a crash or restart rewrites identical content instead of
-    * double-applying. Resolved through the Hadoop FileSystem API
-    * (java.io.File would silently report "missing" on HDFS/S3A paths
-    * and reset the state every trigger).
+  /** The `<prefix>_<id>` directories under `dir` as (id, path), in
+    * numeric id order (a string sort ranks `upto_9` above `upto_10`):
+    * the per-trigger sink parts (`batch`, `pairs`, `feats`, `probes`)
+    * and the state versions (`upto`). Listed through the Hadoop
+    * FileSystem API — java.io.File would silently report "missing" on
+    * HDFS/S3A paths and reset the state every trigger.
     */
-  private def latestStateBefore(spark: SparkSession, stateDir: String,
-                                batchId: Long): Option[String] =
-    graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .filter(_ < batchId)
-      .reduceOption(_ max _)
-      .map(k => s"$stateDir/upto_$k")
+  private[graft] def parts(spark: SparkSession, dir: String,
+                           prefix: String): Seq[(Long, String)] = {
+    val Part = s"${java.util.regex.Pattern.quote(prefix)}_(\\d+)".r
+    Fs.childDirs(spark, dir)
+      .collect { case name @ Part(id) => (id.toLong, s"$dir/$name") }
+      .sortBy(_._1)
+  }
+
+  /** Every committed `<prefix>_<id>` part of a sink, read as one frame. */
+  private[graft] def readParts(spark: SparkSession, sinkPath: String,
+                               prefix: String = "batch"): DataFrame =
+    Tables.parquet(spark, parts(spark, sinkPath, prefix).map(_._2))
+
+  /** The newest state version, for a reconciler; `what` names the state
+    * in the error a stream that never committed a trigger raises. */
+  private def latestState(spark: SparkSession, stateDir: String,
+                          what: String): DataFrame =
+    parts(spark, stateDir, "upto").lastOption
+      .map(v => readStateVersion(spark, stateDir, v._2))
+      .getOrElse(throw new IllegalStateException(
+        s"no $what state under $stateDir — has the stream committed a trigger?"))
 
   /** Drop state versions a replay can no longer need: after `upto_N`
     * commits, only N (current) and the latest version below N (an
     * uncommitted N+1 replay reads it) are reachable — without pruning,
     * a long-running stream accumulates one full state copy per trigger.
+    * A bucketed version's catalog entry goes first, then its files
+    * (DROP on an external table leaves the data); a plain version has
+    * no entry and the DROP is a no-op.
     */
   private def pruneStateBefore(spark: SparkSession, stateDir: String,
                                keepFloor: Long): Unit =
-    graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .filter(_ < keepFloor)
-      .foreach { k =>
-        val (fs, p) = graft.sources.Fs.fileSystem(spark, s"$stateDir/upto_$k")
+    parts(spark, stateDir, "upto").takeWhile(_._1 < keepFloor).foreach {
+      case (k, path) =>
+        spark.sql(s"DROP TABLE IF EXISTS ${qualified(stateTableName(stateDir, k))}")
+        val (fs, p) = Fs.fileSystem(spark, path)
         fs.delete(p, true)
         ()
-      }
+    }
 
   /** Release the storage blocks of per-trigger localCheckpoints once
     * the trigger's writes are durable — a long-running stream would
@@ -374,7 +368,7 @@ object EventStream {
     * Dedup.clusters releases explicitly for the same reason). Safe
     * here: nothing references the frames after the batch returns.
     */
-  private def releaseCheckpoints(frames: org.apache.spark.sql.DataFrame*): Unit =
+  private def releaseCheckpoints(frames: DataFrame*): Unit =
     frames.foreach(org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint)
 
   /** Bucket count for the gram-scale carried states (novelty's
@@ -452,12 +446,11 @@ object EventStream {
     * distinct and the retro reconcile's pair aggregation then scan the
     * state pre-clustered — zero Exchange above the state scan, only
     * the O(batch) side shuffles (ScaleSpec pins both plans). Same
-    * overwrite-idempotent replay contract as the parquet states, and
-    * the returned frame IS the materialized state (replacing the
-    * per-trigger localCheckpoint the unbucketed form needed).
+    * overwrite-idempotent replay contract as the parquet states; the
+    * returned frame is the registered table.
     */
-  private def writeBucketedState(df: org.apache.spark.sql.DataFrame,
-      stateDir: String, batchId: Long, bucketCol: String): org.apache.spark.sql.DataFrame = {
+  private def writeBucketedState(df: DataFrame, stateDir: String, batchId: Long,
+                                 bucketCol: String): DataFrame = {
     val name = stateTableName(stateDir, batchId)
     df.write.mode("overwrite").format("parquet")
       .option("path", s"$stateDir/upto_$batchId")
@@ -469,33 +462,109 @@ object EventStream {
   /** Read a state version through its catalog entry (bucketed scan),
     * falling back to the bare parquet files when the entry is gone —
     * a restarted session keeps the files but not the in-memory
-    * catalog. Correctness never depends on the bucket metadata; only
-    * the Exchange elision does.
+    * catalog — or was never made (a plain state). Correctness never
+    * depends on the bucket metadata; only the Exchange elision does.
     */
   private[graft] def readStateVersion(spark: SparkSession, stateDir: String,
-                                      path: String): org.apache.spark.sql.DataFrame = {
+                                      path: String): DataFrame = {
     val id = path.substring(path.lastIndexOf("upto_") + 5).toLong
     val name = qualified(stateTableName(stateDir, id))
     if (spark.catalog.tableExists(name)) spark.table(name)
     else Tables.parquet(spark, path)
   }
 
-  /** [[pruneStateBefore]] plus the catalog entries of bucketed
-    * versions (entry first, then files — DROP on an external table
-    * leaves the data, which the file prune then removes).
+  /** One trigger of a [[versionedStream]] twin: the new state, and —
+    * from the state as LANDED — what the trigger publishes. */
+  private final case class Step(state: DataFrame, publish: DataFrame => Out)
+
+  /** A trigger's named outputs (`prefix -> frame`, each landed at
+    * `<sinkPath>/<prefix>_<id>`) and the per-trigger checkpoints to
+    * release once they are written. */
+  private final case class Out(outputs: Seq[(String, DataFrame)], release: DataFrame*)
+
+  /** The micro-batch skeleton every stateful twin below shares — the
+    * reference's incremental load (truncate-and-load / upsert) as one
+    * policy: state is VERSIONED, each trigger's writes are OVERWRITE
+    * replays, and the merge of a later batch into the carried state is
+    * associative.
+    *  - `source` streams into `foreachBatch` under a stable checkpoint
+    *    next to the sink (`sinkPath.ckpt`), so a restarted query
+    *    RESUMES batch ids instead of restarting at 0 with fresh state.
+    *  - `step` gets the batch (minus `ingest_ts`) and the latest state
+    *    version strictly before this batch id (`.state/upto_<k>`; the
+    *    empty `stateDdl` frame before the first commit).
+    *  - The new state lands at `.state/upto_<id>` FIRST — bucketed on
+    *    `bucketCol` through the catalog, else as plain parquet — and
+    *    is read back; the landed version is what the outputs see, so no
+    *    checkpoint exists only to share the new state between its write
+    *    and the outputs.
+    *  - Each output lands at `<prefix>_<id>`; then the trigger's
+    *    checkpoints are released and versions below `id - 1` pruned.
+    * Every write is a deterministic function of the immutable previous
+    * version plus the batch, written by overwrite to an id-suffixed
+    * path, so a replay after a crash or restart rewrites identical
+    * content instead of double-applying.
     */
-  private def pruneBucketedStateBefore(spark: SparkSession, stateDir: String,
-                                       keepFloor: Long): Unit = {
-    graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .filter(_ < keepFloor)
-      .foreach { k =>
-        spark.sql(s"DROP TABLE IF EXISTS ${qualified(stateTableName(stateDir, k))}")
+  private def versionedStream(source: DataFrame, sinkPath: String, stateDdl: String,
+                              bucketCol: Option[String] = None)
+                             (step: (DataFrame, DataFrame) => Step): StreamingQuery = {
+    val spark = source.sparkSession
+    val stateDir = sinkPath + ".state"
+    source.writeStream.outputMode("append")
+      .option("checkpointLocation", sinkPath + ".ckpt")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val prev = parts(spark, stateDir, "upto").takeWhile(_._1 < batchId).lastOption
+          .map(v => readStateVersion(spark, stateDir, v._2))
+          .getOrElse(spark.createDataFrame(
+            java.util.Collections.emptyList[Row](), StructType.fromDDL(stateDdl)))
+        val Step(state, publish) = step(batch.drop("ingest_ts"), prev)
+        val upto = s"$stateDir/upto_$batchId"
+        val landed = bucketCol match {
+          case Some(c) => writeBucketedState(state, stateDir, batchId, c)
+          case None =>
+            Loader.truncateAndLoad(state, upto)
+            Tables.parquet(spark, upto)
+        }
+        val out = publish(landed)
+        out.outputs.foreach { case (prefix, df) =>
+          Loader.truncateAndLoad(df, s"$sinkPath/${prefix}_$batchId")
+        }
+        releaseCheckpoints(out.release: _*)
+        pruneStateBefore(spark, stateDir, batchId - 1)
         ()
       }
-    pruneStateBefore(spark, stateDir, keepFloor)
+      .start()
   }
+
+  /** A packed state: several count tables sharing one versioned frame
+    * as (kind, <key>, n) rows. Each table is (kind, key column, count
+    * column); [[pack]] lands them in that order and [[unpack]] reads
+    * them back under their own names — the one codec the streams and
+    * their reconcilers share.
+    */
+  private final case class Packed(key: String, keyType: String,
+                                  tables: (String, String, String)*) {
+    def ddl: String = s"kind STRING, $key $keyType, n BIGINT"
+    def pack(frames: DataFrame*): DataFrame =
+      tables.zip(frames).map { case ((kind, k, n), t) =>
+        t.select(lit(kind).as("kind"), col(k).as(key), col(n).as("n"))
+      }.reduce(_ unionByName _)
+    def unpack(state: DataFrame): Seq[DataFrame] =
+      tables.map { case (kind, k, n) =>
+        state.filter(col("kind") === kind).select(col(key).as(k), col("n").as(n))
+      }
+  }
+
+  private val BigramModel = Packed("k", "STRING",
+    ("b", "bigram", "bigram_freq"), ("t", "term", "term_freq"))
+  private val TrigramModel = Packed("k", "STRING", ("3", "trigram", "trigram_freq"),
+    ("2", "bigram", "bigram_freq"), ("1", "term", "term_freq"))
+  private val DsirModel = Packed("bucket", "BIGINT",
+    ("t", "bucket", "n"), ("r", "bucket", "n"))
+  // histogram rows pack as kind="h", k="<lang>:<micro>" — langs are
+  // ISO codes, ':' can't appear, so the decode is exact
+  private val PerplexityState = Packed("k", "STRING",
+    BigramModel.tables :+ (("h", "lang_micro", "n")): _*)
 
   /** Streaming twin of Dedup.admitNearDup — the COMPLETE admission
     * pipeline as a continuous process: each micro-batch is tested
@@ -509,7 +578,7 @@ object EventStream {
     * batch operator per trigger through foreachBatch (the iterative
     * min-label flood has no single-pass streaming form; foreachBatch IS
     * the streaming shape for per-batch graph work). Admitted survivors
-    * land in per-batch sink dirs (read with `sinkPath/batch_*`).
+    * land in per-batch sink dirs (read with [[readParts]]).
     *
     * Contract vs the one-shot batch operator, under doc_id-ordered
     * arrival: every batch-canonical survivor is admitted (its
@@ -529,68 +598,41 @@ object EventStream {
     *
     * Each trigger computes the shingle-minhash band pipeline ONCE
     * (checkpointed), shared by the collision test, the survivor
-    * clustering and the state append. Restart-safety: the streaming
-    * checkpoint is pinned next to the sink, so a restarted query
-    * resumes batch ids and replays hit the versioned-state
-    * overwrite-idempotent path instead of resetting state.
+    * clustering and the state append.
     */
   def admissionPipelineStream(spark: SparkSession, dir: String,
                               corpus: DataFrame, batchPredicate: Column,
                               sinkPath: String,
-                              splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
+                              splitAt: Option[Long] = None): StreamingQuery = {
     // the static corpus side of the index, computed once per query
-    val corpusIndex = graft.operators.Dedup.bandIndex(corpus)
-      .localCheckpoint(eager = true)
-    documentsStream(spark, dir, splitAt)
-      .filter(batchPredicate)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val seenGraph = latestStateBefore(spark, stateDir, batchId)
-          .map(readStateVersion(spark, stateDir, _))
-          .getOrElse(Seq.empty[(Long, Int, String)]
-            .toDF("doc_id", "band_idx", "band_key"))
-        // ONE band pass per trigger, shared by every consumer below
-        val bands = graft.operators.Dedup.bandColumns(docs)
-          .localCheckpoint(eager = true)
-        // corpus-fresh = no collision with the STANDING corpus only —
-        // the one-shot operator's fresh universe, which is what the
-        // carried graph must cover for reconcile to rebuild components
-        // (a doc rejected here is a dup of the settled corpus in BOTH
-        // views and never needs revisiting)
-        val corpusFresh = graft.operators.Dedup
-          .freshBandsAgainstIndex(corpusIndex, bands)
-        // band_key-bucketed state landing (VERDICT r7 #5): the write
-        // IS the materialization (replacing the localCheckpoint), and
-        // the next trigger's carried-index distinct plus the retro
-        // reconcile's pair aggregation — both clustered on a superset
-        // of band_key — then scan the state with zero Exchange
-        writeBucketedState(
-          seenGraph.unionByName(graft.operators.Dedup.bandGraph(corpusFresh)),
-          stateDir, batchId, "band_key")
+    val corpusIndex = Dedup.bandIndex(corpus).localCheckpoint(eager = true)
+    versionedStream(documentsStream(spark, dir, splitAt).filter(batchPredicate),
+        sinkPath, "doc_id BIGINT, band_idx INT, band_key STRING",
+        bucketCol = Some("band_key")) { (docs, seenGraph) =>
+      // ONE band pass per trigger, shared by every consumer below
+      val bands = Dedup.bandColumns(docs).localCheckpoint(eager = true)
+      // corpus-fresh = no collision with the STANDING corpus only —
+      // the one-shot operator's fresh universe, which is what the
+      // carried graph must cover for reconcile to rebuild components
+      // (a doc rejected here is a dup of the settled corpus in BOTH
+      // views and never needs revisiting)
+      val corpusFresh = Dedup.freshBandsAgainstIndex(corpusIndex, bands)
+      Step(seenGraph.unionByName(Dedup.bandGraph(corpusFresh)), _ => {
         // admitted universe = fresh vs corpus AND vs every earlier
         // corpus-fresh doc (admitted or absorbed or even rejected —
         // colliding with a known near-dup group means joining it)
         val carriedIndex = seenGraph.select("band_idx", "band_key").distinct()
-        val admitted = graft.operators.Dedup.clustersFromBands(
-            graft.operators.Dedup.freshBandsAgainstIndex(
-              corpusIndex.unionByName(carriedIndex), bands))
+        val admitted = Dedup.clustersFromBands(
+            Dedup.freshBandsAgainstIndex(corpusIndex.unionByName(carriedIndex), bands))
           .filter(col("is_canonical"))
           .select(col("doc_id"), col("cluster_size"),
             (col("cluster_size") - 1).as("n_batch_dups"))
-        graft.sources.Loader.truncateAndLoad(admitted, s"$sinkPath/batch_$batchId")
         // `admitted` rides the labels checkpoint clustersFromBands left
-        // behind — releasing it here (after the sink write landed) is
-        // what keeps a long-running stream from pinning one labels
-        // checkpoint per trigger until a full GC
-        releaseCheckpoints(bands, admitted)
-        pruneBucketedStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
+        // behind — releasing it is what keeps a long-running stream
+        // from pinning one labels checkpoint per trigger
+        Out(Seq("batch" -> admitted), bands, admitted)
+      })
+    }
   }
 
   /** The batch half of [[admissionPipelineStream]]'s lambda split:
@@ -603,17 +645,8 @@ object EventStream {
     * (e.g. nightly) over the compact state — 4 short rows per fresh
     * doc, no texts.
     */
-  def reconcileAdmission(spark: SparkSession, sinkPath: String): DataFrame = {
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no admission state under $stateDir — has the stream committed a trigger?"))
-    graft.operators.Dedup.reconcileAdmission(
-      Tables.parquet(spark, s"$stateDir/upto_$latest"))
-  }
+  def reconcileAdmission(spark: SparkSession, sinkPath: String): DataFrame =
+    Dedup.reconcileAdmission(latestState(spark, sinkPath + ".state", "admission"))
 
   /** Streaming twin of TextOps.qualityGate — corpus-RELATIVE filtering
     * as a continuous process. A relative threshold depends on global
@@ -628,41 +661,20 @@ object EventStream {
     * the one-shot gate exactly where ANY online relative filter must —
     * early batches see a younger histogram; that tail is
     * [[reconcileQualityGate]]'s job (scores live in the sink, the
-    * final histogram in the state — no text re-scan). Same versioned
-    * replay-idempotent state, stable checkpoint, pruning and
-    * block-release discipline as [[admissionPipelineStream]].
+    * final histogram in the state — no text re-scan).
     */
   def qualityGateStream(spark: SparkSession, dir: String, sinkPath: String,
                         dropFraction: Double = TextOps.GateDropFraction,
-                        splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        // checkpointed: feeds the batch histogram AND the gate join
-        // AND the sink write
-        val scored = graft.operators.TextOps.qualityScores(docs)
-          .localCheckpoint(eager = true)
-        val prevHist = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, Long, Long)]
-            .toDF("lang", "score_micro", "n"))
-        val newHist = graft.operators.TextOps.mergeHistograms(prevHist,
-            graft.operators.TextOps.qualityHistogram(scored))
-          .localCheckpoint(eager = true)
-        val gated = graft.operators.TextOps.gateAgainstThresholds(scored,
-          graft.operators.TextOps.gateThresholds(newHist, dropFraction))
-        graft.sources.Loader.truncateAndLoad(gated, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(newHist, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(scored, newHist)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                        splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "lang STRING, score_micro BIGINT, n BIGINT") { (docs, prevHist) =>
+      // checkpointed: feeds the batch histogram AND the gate join AND
+      // the sink write
+      val scored = TextOps.qualityScores(docs).localCheckpoint(eager = true)
+      Step(TextOps.mergeHistograms(prevHist, TextOps.qualityHistogram(scored)), hist =>
+        Out(Seq("batch" -> TextOps.gateAgainstThresholds(scored,
+          TextOps.gateThresholds(hist, dropFraction))), scored))
+    }
 
   /** The batch half of [[qualityGateStream]]'s lambda split: re-gate
     * every doc the stream has seen against the FINAL histogram. Reads
@@ -673,18 +685,10 @@ object EventStream {
     */
   def reconcileQualityGate(spark: SparkSession, sinkPath: String,
                            dropFraction: Double = TextOps.GateDropFraction): DataFrame = {
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no gate state under $stateDir — has the stream committed a trigger?"))
-    val hist = Tables.parquet(spark, s"$stateDir/upto_$latest")
-    val scored = Tables.parquet(spark, s"$sinkPath/batch_*")
+    val hist = latestState(spark, sinkPath + ".state", "gate")
+    val scored = readParts(spark, sinkPath)
       .select("doc_id", "lang", "n_tokens", "n_distinct_tokens", "score_micro")
-    graft.operators.TextOps.gateAgainstThresholds(scored,
-        graft.operators.TextOps.gateThresholds(hist, dropFraction))
+    TextOps.gateAgainstThresholds(scored, TextOps.gateThresholds(hist, dropFraction))
       .orderBy("doc_id")
   }
 
@@ -708,46 +712,22 @@ object EventStream {
     * over the same `.state/upto_N` files, so the stationary-join
     * merge, the score join and the retro re-score all scan the state
     * with zero Exchange — only the O(batch) side ever shuffles
-    * (ScaleSpec pins the plan). Same versioned
-    * replay-idempotent state, stable checkpoint, pruning and
-    * block-release discipline as [[admissionPipelineStream]].
+    * (ScaleSpec pins the plan).
     */
   def noveltyStream(spark: SparkSession, dir: String, sinkPath: String,
-                    splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        // checkpointed: feeds the batch index, the score join, AND the
-        // pairs sink
-        val pairs = graft.operators.TextOps.gramPairs(docs)
-          .localCheckpoint(eager = true)
-        val batchIdx = pairs.groupBy("g8")
-          .agg(org.apache.spark.sql.functions.min(
-            org.apache.spark.sql.functions.col("doc_id")).as("first_doc"))
-        val prevIdx = latestStateBefore(spark, stateDir, batchId)
-          .map(readStateVersion(spark, stateDir, _))
-          .getOrElse(Seq.empty[(Long, Long)].toDF("g8", "first_doc"))
-        // stationary-state merge + bucketed landing (VERDICT r7 #5):
-        // the g8-bucketed previous version scans with no Exchange,
-        // only the O(batch) aggregate shuffles; the written table is
-        // the materialized state the score join reads back (its scan
-        // is bucketed too — the index side of the join never shuffles)
-        val newIdx = writeBucketedState(
-          graft.operators.TextOps.mergeGramFirstIndexStationary(prevIdx, batchIdx),
-          stateDir, batchId, "g8")
-        val scored = graft.operators.TextOps.noveltyAgainstIndex(pairs, newIdx)
-        graft.sources.Loader.truncateAndLoad(scored, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(pairs, s"$sinkPath/pairs_$batchId")
-        releaseCheckpoints(pairs)
-        pruneBucketedStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                    splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "g8 BIGINT, first_doc BIGINT", bucketCol = Some("g8")) { (docs, prevIdx) =>
+      // checkpointed: feeds the batch index, the score join, AND the
+      // pairs sink
+      val pairs = TextOps.gramPairs(docs).localCheckpoint(eager = true)
+      val batchIdx = pairs.groupBy("g8").agg(min(col("doc_id")).as("first_doc"))
+      // stationary-state merge: the g8-bucketed previous version scans
+      // with no Exchange, only the O(batch) aggregate shuffles
+      Step(TextOps.mergeGramFirstIndexStationary(prevIdx, batchIdx), idx =>
+        Out(Seq("batch" -> TextOps.noveltyAgainstIndex(pairs, idx), "pairs" -> pairs),
+          pairs))
+    }
 
   /** Streaming twin of TextOps.repeatedSpans — ExactSubstr duplicated-
     * span detection as a continuous admission process. Carried state =
@@ -763,9 +743,8 @@ object EventStream {
     * only the sunk COMPACT positional streams (8-byte gram + position
     * per token, never the texts) against the final counts and equals
     * the one-shot TextOps.repeatedSpans (spec-asserted frame
-    * equality). Same versioned replay-idempotent bucketed state,
-    * checkpoint, pruning and block-release discipline as
-    * [[noveltyStream]]. Gram width / min span default to
+    * equality). The state is g8-bucketed like [[noveltyStream]]'s.
+    * Gram width / min span default to
     * TextOps.SpanGramN, the batch operators' default;
     * [[reconcileRepeatedSpans]] must be called with the SAME n/minSpan
     * the stream ran at (the sunk positional streams are
@@ -775,41 +754,17 @@ object EventStream {
   def repeatedSpansStream(spark: SparkSession, dir: String, sinkPath: String,
                           splitAt: Option[Long] = None,
                           n: Int = TextOps.SpanGramN,
-                          minSpan: Int = TextOps.SpanGramN): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        // checkpointed: feeds the batch count aggregate, the span
-        // probe, AND the positions sink
-        val positions = graft.operators.TextOps.spanGramPositions(docs, n)
-          .localCheckpoint(eager = true)
-        val batchCounts = graft.operators.TextOps.spanGramCounts(positions)
-        val prevCounts = latestStateBefore(spark, stateDir, batchId)
-          .map(readStateVersion(spark, stateDir, _))
-          .getOrElse(Seq.empty[(Long, Long)].toDF("g8", "n_occ"))
-        // stationary-state merge + bucketed landing: the g8-bucketed
-        // previous version scans with no Exchange; only the O(batch)
-        // aggregate shuffles; the written table is the state the span
-        // probe reads back (bucketed scan — the index side never
-        // shuffles)
-        val newCounts = writeBucketedState(
-          graft.operators.TextOps.mergeSpanGramCountsStationary(
-            prevCounts, batchCounts),
-          stateDir, batchId, "g8")
-        val spans = graft.operators.TextOps.spansAgainstCounts(
-          positions, newCounts, n, minSpan)
-        graft.sources.Loader.truncateAndLoad(spans, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(positions, s"$sinkPath/pairs_$batchId")
-        releaseCheckpoints(positions)
-        pruneBucketedStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                          minSpan: Int = TextOps.SpanGramN): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "g8 BIGINT, n_occ BIGINT", bucketCol = Some("g8")) { (docs, prevCounts) =>
+      // checkpointed: feeds the batch count aggregate, the span probe,
+      // AND the positions sink
+      val positions = TextOps.spanGramPositions(docs, n).localCheckpoint(eager = true)
+      Step(TextOps.mergeSpanGramCountsStationary(prevCounts,
+          TextOps.spanGramCounts(positions)), counts =>
+        Out(Seq("batch" -> TextOps.spansAgainstCounts(positions, counts, n, minSpan),
+          "pairs" -> positions), positions))
+    }
 
   /** The batch half of [[repeatedSpansStream]]'s lambda split:
     * re-derive EVERY arrived doc's spans against the FINAL gram-count
@@ -822,18 +777,9 @@ object EventStream {
     */
   def reconcileRepeatedSpans(spark: SparkSession, sinkPath: String,
       n: Int = TextOps.SpanGramN,
-      minSpan: Int = TextOps.SpanGramN): DataFrame = {
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no span state under $stateDir — has the stream committed a trigger?"))
-    val counts = readStateVersion(spark, stateDir, s"$stateDir/upto_$latest")
-    val positions = Tables.parquet(spark, s"$sinkPath/pairs_*")
-    graft.operators.TextOps.spansAgainstCounts(positions, counts, n, minSpan)
-  }
+      minSpan: Int = TextOps.SpanGramN): DataFrame =
+    TextOps.spansAgainstCounts(readParts(spark, sinkPath, "pairs"),
+      latestState(spark, sinkPath + ".state", "span"), n, minSpan)
 
   /** The batch half of [[noveltyStream]]'s lambda split: re-score
     * every sunk gram pair against the FINAL index — settles the
@@ -842,18 +788,9 @@ object EventStream {
     * TextOps.ngramNovelty over everything that arrived. Compact
     * inputs only: 8-byte gram pairs + the index, never the texts.
     */
-  def reconcileNovelty(spark: SparkSession, sinkPath: String): DataFrame = {
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no novelty state under $stateDir — has the stream committed a trigger?"))
-    val idx = readStateVersion(spark, stateDir, s"$stateDir/upto_$latest")
-    val pairs = Tables.parquet(spark, s"$sinkPath/pairs_*")
-    graft.operators.TextOps.noveltyAgainstIndex(pairs, idx)
-  }
+  def reconcileNovelty(spark: SparkSession, sinkPath: String): DataFrame =
+    TextOps.noveltyAgainstIndex(readParts(spark, sinkPath, "pairs"),
+      latestState(spark, sinkPath + ".state", "novelty"))
 
   /** Streaming twin of Similarity.covariance — corpus second-moment
     * tracking as a continuous process (the drift monitor an encoder
@@ -868,39 +805,19 @@ object EventStream {
     * the final view against their one-shot twins). Each trigger: batch
     * term scan, metadata-scale merge, land the finished view in
     * batch_<id> (a full snapshot — covariance is a statistic, not an
-    * append stream) and the term state in upto_<id>. Same versioned
-    * replay-idempotent state, stable checkpoint, pruning and
-    * block-release discipline as [[admissionPipelineStream]].
+    * append stream) and the term state in upto_<id>.
     */
   def covarianceStream(spark: SparkSession, dir: String, sinkPath: String,
-                       splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    embeddingsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val vecs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(Long, Long, Long, Long)]
-            .toDF("di", "dj", "s", "n"))
-        val newTerms = graft.operators.Similarity
-          .mergeCovarianceTerms(prev,
-            graft.operators.Similarity.covarianceTerms(vecs))
-          .localCheckpoint(eager = true)
-        val view = graft.operators.Similarity.covarianceFromTerms(newTerms)
-        graft.sources.Loader.truncateAndLoad(view, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(newTerms, s"$stateDir/upto_$batchId")
-        // view carries its own finish-step checkpoint — release it too
-        // (the admission-stream lesson: a per-trigger checkpoint left
-        // to a full GC pins blocks for the stream's lifetime)
-        releaseCheckpoints(newTerms, view)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                       splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(embeddingsStream(spark, dir, splitAt), sinkPath,
+        "di BIGINT, dj BIGINT, s BIGINT, n BIGINT") { (vecs, prev) =>
+      Step(Similarity.mergeCovarianceTerms(prev, Similarity.covarianceTerms(vecs)),
+        terms => {
+          // the view carries its own finish-step checkpoint
+          val view = Similarity.covarianceFromTerms(terms)
+          Out(Seq("batch" -> view), view)
+        })
+    }
 
   /** Streaming SEMANTIC-dedup admission (r17 — the semantic member of
     * the admission family: exact fingerprints, LSH bands, image
@@ -927,44 +844,28 @@ object EventStream {
     * equality against the batch operator replayed sequentially over
     * the same splits, plus the index-maintenance invariant (state
     * after trigger t = state before ∪ admitted rows) — ScaleSpec
-    * asserts both. Same versioned replay-idempotent state, stable
-    * checkpoint, pruning and block-release discipline as the family.
+    * asserts both.
     */
   def semdedupAdmissionStream(spark: SparkSession, dir: String,
                               sinkPath: String,
                               code: Seq[(Long, Seq[Double])],
                               tau: Double = 0.4,
-                              splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    embeddingsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val vecs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(Long, Long, Array[Float])]
-            .toDF("vec_id", "cell_id", "embedding"))
-        val admitted = graft.operators.Similarity
-          .semdedupAdmitWithIndex(prev, vecs, code, tau)
-          .localCheckpoint(eager = true)
-        graft.sources.Loader.truncateAndLoad(admitted,
-          s"$sinkPath/batch_$batchId")
-        // append-only index maintenance: admitted vectors join back to
-        // the batch for their embeddings (the admitted frame carries
-        // cell_id already — one ≤batch-scale join, never a corpus scan)
-        val newRows = admitted.select(col("vec_id"), col("cell_id"))
-          .join(vecs.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-          .select("vec_id", "cell_id", "embedding")
-        graft.sources.Loader.truncateAndLoad(
-          prev.unionByName(newRows), s"$stateDir/upto_$batchId")
-        releaseCheckpoints(admitted)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                              splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(embeddingsStream(spark, dir, splitAt), sinkPath,
+        "vec_id BIGINT, cell_id BIGINT, embedding ARRAY<FLOAT>") { (vecs, prev) =>
+      // the admit operator checkpoints its cell assignment inside; the
+      // admitted set is checkpointed again for its two consumers, so
+      // both frames are released
+      val admit = Similarity.semdedupAdmitWithIndex(prev, vecs, code, tau)
+      val admitted = admit.localCheckpoint(eager = true)
+      // append-only index maintenance: admitted vectors join back to
+      // the batch for their embeddings (the admitted frame carries
+      // cell_id already — one ≤batch-scale join, never a corpus scan)
+      val newRows = admitted.select(col("vec_id"), col("cell_id"))
+        .join(vecs.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+        .select("vec_id", "cell_id", "embedding")
+      Step(prev.unionByName(newRows), _ => Out(Seq("batch" -> admitted), admit, admitted))
+    }
 
   /** Streaming twin of TextOps.bigramLogloss (r8) — corpus-relative
     * perplexity filtering as a continuous process, in the
@@ -981,52 +882,21 @@ object EventStream {
     * frame equals the one-shot operator over everything arrived
     * (spec-asserted). State is vocabulary²-scale (the novelty-class
     * cost, not the bounded-histogram one — at 100 TB the same
-    * g8-bucketed-store treatment applies). Same versioned
-    * replay-idempotent state, stable checkpoint, pruning and
-    * block-release discipline as the family.
+    * g8-bucketed-store treatment applies).
     */
   def bigramLoglossStream(spark: SparkSession, dir: String, sinkPath: String,
-                          splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, String, Long)].toDF("kind", "k", "n"))
-        val mb = graft.operators.TextOps.mergeBigramCounts(
-            prev.filter(col("kind") === "b")
-              .select(col("k").as("bigram"), col("n").as("bigram_freq")),
-            graft.operators.TextOps.bigramCounts(docs))
-          .localCheckpoint(eager = true)
-        val mt = graft.operators.TextOps.mergeTermCounts(
-            prev.filter(col("kind") === "t")
-              .select(col("k").as("term"), col("n").as("term_freq")),
-            graft.operators.TextOps.termCounts(docs))
-          .localCheckpoint(eager = true)
-        // the scoring tail is checkpoint-free since the window-based
-        // history sum (r12) — mb/mt are each consumed once inside it,
-        // and their own checkpoints above exist because they ALSO
-        // feed the packed state write below
-        val scored = graft.operators.TextOps
-          .bigramLoglossAgainstModel(docs, mb, mt)
-        graft.sources.Loader.truncateAndLoad(scored, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(
-          graft.operators.TextOps.bigramPairsOf(docs), s"$sinkPath/pairs_$batchId")
-        val packed = mb.select(lit("b").as("kind"), col("bigram").as("k"),
-            col("bigram_freq").as("n"))
-          .unionByName(mt.select(lit("t").as("kind"), col("term").as("k"),
-            col("term_freq").as("n")))
-        graft.sources.Loader.truncateAndLoad(packed, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(mb, mt)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                          splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        BigramModel.ddl) { (docs, prev) =>
+      val Seq(pb, pt) = BigramModel.unpack(prev)
+      Step(BigramModel.pack(
+          TextOps.mergeBigramCounts(pb, TextOps.bigramCounts(docs)),
+          TextOps.mergeTermCounts(pt, TextOps.termCounts(docs))), model => {
+        val Seq(mb, mt) = BigramModel.unpack(model)
+        Out(Seq("batch" -> TextOps.bigramLoglossAgainstModel(docs, mb, mt),
+          "pairs" -> TextOps.bigramPairsOf(docs)))
+      })
+    }
 
   /** The batch half of [[bigramLoglossStream]]'s lambda split:
     * re-score every sunk (doc_id, bigram) pair against the FINAL
@@ -1036,20 +906,9 @@ object EventStream {
     * and the carried count tables, never the texts.
     */
   def reconcileBigramLogloss(spark: SparkSession, sinkPath: String): DataFrame = {
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no bigram-model state under $stateDir — has the stream committed a trigger?"))
-    val st = Tables.parquet(spark, s"$stateDir/upto_$latest")
-    graft.operators.TextOps.bigramLoglossFromPairs(
-      Tables.parquet(spark, s"$sinkPath/pairs_*"),
-      st.filter(col("kind") === "b")
-        .select(col("k").as("bigram"), col("n").as("bigram_freq")),
-      st.filter(col("kind") === "t")
-        .select(col("k").as("term"), col("n").as("term_freq")))
+    val Seq(mb, mt) = BigramModel.unpack(
+      latestState(spark, sinkPath + ".state", "bigram-model"))
+    TextOps.bigramLoglossFromPairs(readParts(spark, sinkPath, "pairs"), mb, mt)
   }
 
   /** Streaming twin of Corpus.dsirWeights (r16) — DSIR importance
@@ -1067,46 +926,26 @@ object EventStream {
     * settles them by re-scoring the sunk features against the final
     * models — no text re-scan — and equals the one-shot
     * Corpus.dsirWeights over everything arrived (spec-asserted).
-    * Same versioned replay-idempotent state, checkpoint, pruning and
-    * block-release discipline as the family.
     */
   def dsirWeightsStream(spark: SparkSession, dir: String, sinkPath: String,
-                        splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
+                        splitAt: Option[Long] = None): StreamingQuery = {
     val tgt = col("lang") === "en"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, Long, Long)].toDF("kind", "bucket", "n"))
-        val mt = graft.operators.Corpus.mergeDsirCounts(
-            prev.filter(col("kind") === "t").select("bucket", "n"),
-            graft.operators.Corpus.dsirBucketCounts(docs.filter(tgt)))
-          .localCheckpoint(eager = true)
-        val mr = graft.operators.Corpus.mergeDsirCounts(
-            prev.filter(col("kind") === "r").select("bucket", "n"),
-            graft.operators.Corpus.dsirBucketCounts(docs.filter(!tgt)))
-          .localCheckpoint(eager = true)
-        // checkpointed once: the raw feature stream feeds the scoring
-        // tail AND the compact sink
-        val feats = graft.operators.Corpus.dsirFeatures(docs.filter(!tgt))
-          .localCheckpoint(eager = true)
-        val scored = graft.operators.Corpus
-          .dsirWeightsFromFeatures(feats, mt, mr)
-        graft.sources.Loader.truncateAndLoad(scored, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(feats, s"$sinkPath/feats_$batchId")
-        val packed = mt.select(lit("t").as("kind"), col("bucket"), col("n"))
-          .unionByName(mr.select(lit("r").as("kind"), col("bucket"), col("n")))
-        graft.sources.Loader.truncateAndLoad(packed, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(mt, mr, feats)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        DsirModel.ddl) { (docs, prev) =>
+      val Seq(pt, pr) = DsirModel.unpack(prev)
+      Step(DsirModel.pack(
+          Corpus.mergeDsirCounts(pt, Corpus.dsirBucketCounts(docs.filter(tgt))),
+          Corpus.mergeDsirCounts(pr, Corpus.dsirBucketCounts(docs.filter(!tgt)))),
+        models => {
+          // checkpointed once: the raw feature stream feeds the scoring
+          // tail AND the compact sink
+          val feats = Corpus.dsirFeatures(docs.filter(!tgt)).localCheckpoint(eager = true)
+          val Seq(mt, mr) = DsirModel.unpack(models)
+          // the scoring tail checkpoints both models inside: released too
+          val scored = Corpus.dsirWeightsFromFeatures(feats, mt, mr)
+          Out(Seq("batch" -> scored, "feats" -> feats), feats, scored)
+        })
+    }
   }
 
   /** The batch half of [[dsirWeightsStream]]'s lambda split: re-score
@@ -1117,18 +956,9 @@ object EventStream {
     * carried ≤2·DsirBuckets-row count tables, never the texts.
     */
   def reconcileDsirWeights(spark: SparkSession, sinkPath: String): DataFrame = {
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no DSIR model state under $stateDir — has the stream committed a trigger?"))
-    val st = Tables.parquet(spark, s"$stateDir/upto_$latest")
-    graft.operators.Corpus.dsirWeightsFromFeatures(
-      Tables.parquet(spark, s"$sinkPath/feats_*"),
-      st.filter(col("kind") === "t").select("bucket", "n"),
-      st.filter(col("kind") === "r").select("bucket", "n"))
+    val Seq(mt, mr) = DsirModel.unpack(
+      latestState(spark, sinkPath + ".state", "DSIR model"))
+    Corpus.dsirWeightsFromFeatures(readParts(spark, sinkPath, "feats"), mt, mr)
   }
 
   /** Streaming twin of TextOps.trigramBackoff (r17 — the mechanical
@@ -1148,61 +978,28 @@ object EventStream {
     * TextOps.trigramBackoff(odd, even) over everything arrived
     * (spec-asserted). State is vocabulary³-scale in the worst case
     * (the novelty-class cost — the g8-bucketed-store treatment
-    * applies at 100 TB). Same versioned replay-idempotent state,
-    * stable checkpoint, pruning and block-release discipline as the
-    * family.
+    * applies at 100 TB).
     */
   def trigramBackoffStream(spark: SparkSession, dir: String, sinkPath: String,
-                           splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val model = docs.filter(col("doc_id") % 2 === 0)
-        val probesDocs = docs.filter(col("doc_id") % 2 =!= 0)
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, String, Long)].toDF("kind", "k", "n"))
-        val m3 = graft.operators.TextOps.mergeTrigramCounts(
-            prev.filter(col("kind") === "3")
-              .select(col("k").as("trigram"), col("n").as("trigram_freq")),
-            graft.operators.TextOps.trigramCounts(model))
-          .localCheckpoint(eager = true)
-        val m2 = graft.operators.TextOps.mergeBigramCounts(
-            prev.filter(col("kind") === "2")
-              .select(col("k").as("bigram"), col("n").as("bigram_freq")),
-            graft.operators.TextOps.bigramCounts(model))
-          .localCheckpoint(eager = true)
-        val m1 = graft.operators.TextOps.mergeTermCounts(
-            prev.filter(col("kind") === "1")
-              .select(col("k").as("term"), col("n").as("term_freq")),
-            graft.operators.TextOps.termCounts(model))
-          .localCheckpoint(eager = true)
+                           splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        TrigramModel.ddl) { (docs, prev) =>
+      val model = docs.filter(col("doc_id") % 2 === 0)
+      val Seq(p3, p2, p1) = TrigramModel.unpack(prev)
+      Step(TrigramModel.pack(
+          TextOps.mergeTrigramCounts(p3, TextOps.trigramCounts(model)),
+          TextOps.mergeBigramCounts(p2, TextOps.bigramCounts(model)),
+          TextOps.mergeTermCounts(p1, TextOps.termCounts(model))), counts => {
         // one tokenize+explode pass, shared by the scoring tail and
         // the compact sink (trigramBackoffScore re-checkpoints its
-        // probe input — a ≤sunk-rows re-materialization, no-op-sized)
-        val probes = graft.operators.TextOps.trigramPairsOf(probesDocs)
+        // probe input — released with the scores)
+        val probes = TextOps.trigramPairsOf(docs.filter(col("doc_id") % 2 =!= 0))
           .localCheckpoint(eager = true)
-        val scored = graft.operators.TextOps
-          .trigramBackoffScore(probes, m3, m2, m1)
-        graft.sources.Loader.truncateAndLoad(scored, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(probes, s"$sinkPath/probes_$batchId")
-        val packed = m3.select(lit("3").as("kind"), col("trigram").as("k"),
-            col("trigram_freq").as("n"))
-          .unionByName(m2.select(lit("2").as("kind"), col("bigram").as("k"),
-            col("bigram_freq").as("n")))
-          .unionByName(m1.select(lit("1").as("kind"), col("term").as("k"),
-            col("term_freq").as("n")))
-        graft.sources.Loader.truncateAndLoad(packed, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(m3, m2, m1, probes)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+        val Seq(m3, m2, m1) = TrigramModel.unpack(counts)
+        val scored = TextOps.trigramBackoffScore(probes, m3, m2, m1)
+        Out(Seq("batch" -> scored, "probes" -> probes), probes, scored)
+      })
+    }
 
   /** The batch half of [[trigramBackoffStream]]'s lambda split:
     * re-score every sunk (doc_id, trigram) probe against the FINAL
@@ -1212,22 +1009,9 @@ object EventStream {
     * count tables, never the texts.
     */
   def reconcileTrigramBackoff(spark: SparkSession, sinkPath: String): DataFrame = {
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no trigram-model state under $stateDir — has the stream committed a trigger?"))
-    val st = Tables.parquet(spark, s"$stateDir/upto_$latest")
-    graft.operators.TextOps.trigramBackoffScore(
-      Tables.parquet(spark, s"$sinkPath/probes_*"),
-      st.filter(col("kind") === "3")
-        .select(col("k").as("trigram"), col("n").as("trigram_freq")),
-      st.filter(col("kind") === "2")
-        .select(col("k").as("bigram"), col("n").as("bigram_freq")),
-      st.filter(col("kind") === "1")
-        .select(col("k").as("term"), col("n").as("term_freq")))
+    val Seq(m3, m2, m1) = TrigramModel.unpack(
+      latestState(spark, sinkPath + ".state", "trigram-model"))
+    TextOps.trigramBackoffScore(readParts(spark, sinkPath, "probes"), m3, m2, m1)
   }
 
   /** Streaming twin of TextOps.perplexityBuckets (r8 VERDICT #2 /
@@ -1250,71 +1034,42 @@ object EventStream {
     * honest semantics of any online corpus-relative decision;
     * [[reconcilePerplexityBuckets]] settles both at once and equals
     * the one-shot operator (spec-asserted, riding the
-    * doc_perplexity_bucket oracle). Same versioned
-    * replay-idempotent state, stable checkpoint, pruning and
-    * block-release discipline as the family.
+    * doc_perplexity_bucket oracle).
     */
   def perplexityBucketStream(spark: SparkSession, dir: String, sinkPath: String,
                              splitAt: Option[Long] = None,
-                             kept: (Int, Int) = TextOps.PerplexityKept): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
+                             kept: (Int, Int) = TextOps.PerplexityKept): StreamingQuery = {
     val (keptN, keptD) = kept
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, String, Long)].toDF("kind", "k", "n"))
-        val mb = graft.operators.TextOps.mergeBigramCounts(
-            prev.filter(col("kind") === "b")
-              .select(col("k").as("bigram"), col("n").as("bigram_freq")),
-            graft.operators.TextOps.bigramCounts(docs))
-          .localCheckpoint(eager = true)
-        val mt = graft.operators.TextOps.mergeTermCounts(
-            prev.filter(col("kind") === "t")
-              .select(col("k").as("term"), col("n").as("term_freq")),
-            graft.operators.TextOps.termCounts(docs))
-          .localCheckpoint(eager = true)
-        // checkpoint-free scoring tail (r12) — see bigramLoglossStream
-        val scored0 = graft.operators.TextOps
-          .bigramLoglossAgainstModel(docs, mb, mt)
-        // checkpointed: feeds the batch histogram AND the bucket join
-        // AND (via the merged histogram) the state write
-        val scored = scored0
-          .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-          .select(col("doc_id"), col("lang"), col("logloss_microbits"))
-          .localCheckpoint(eager = true)
-        // histogram rows pack as kind="h", k="<lang>:<micro>" — langs
-        // are ISO codes, ':' can't appear, so the decode is exact
-        val prevHist = prev.filter(col("kind") === "h").select(
-          substring_index(col("k"), ":", 1).as("lang"),
-          substring_index(col("k"), ":", -1).cast("long").as("logloss_microbits"),
-          col("n"))
-        val newHist = graft.operators.TextOps.mergePerplexityHistograms(
-            prevHist, graft.operators.TextOps.perplexityHistogram(scored))
-          .localCheckpoint(eager = true)
-        val bucketed = graft.operators.TextOps.bucketAgainstThresholds(
-          scored,
-          graft.operators.TextOps.perplexityThresholds(newHist, keptN, keptD))
-        graft.sources.Loader.truncateAndLoad(bucketed, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(
-          graft.operators.TextOps.bigramPairsOf(docs), s"$sinkPath/pairs_$batchId")
-        val packed = mb.select(lit("b").as("kind"), col("bigram").as("k"),
-            col("bigram_freq").as("n"))
-          .unionByName(mt.select(lit("t").as("kind"), col("term").as("k"),
-            col("term_freq").as("n")))
-          .unionByName(newHist.select(lit("h").as("kind"),
-            concat_ws(":", col("lang"), col("logloss_microbits")).as("k"),
-            col("n")))
-        graft.sources.Loader.truncateAndLoad(packed, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(mb, mt, scored, newHist)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
+    def histRows(h: DataFrame): DataFrame = h.select(
+      substring_index(col("lang_micro"), ":", 1).as("lang"),
+      substring_index(col("lang_micro"), ":", -1).cast("long").as("logloss_microbits"),
+      col("n"))
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        PerplexityState.ddl) { (docs, prev) =>
+      val Seq(pb, pt, ph) = PerplexityState.unpack(prev)
+      // checkpointed: the model feeds the scoring below AND the state
+      // write (the histogram half of the state depends on the scores)
+      val mb = TextOps.mergeBigramCounts(pb, TextOps.bigramCounts(docs))
+        .localCheckpoint(eager = true)
+      val mt = TextOps.mergeTermCounts(pt, TextOps.termCounts(docs))
+        .localCheckpoint(eager = true)
+      // checkpointed: feeds the batch histogram AND the bucket join
+      val scored = TextOps.bigramLoglossAgainstModel(docs, mb, mt)
+        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+        .select(col("doc_id"), col("lang"), col("logloss_microbits"))
+        .localCheckpoint(eager = true)
+      val hist = TextOps.mergePerplexityHistograms(histRows(ph),
+        TextOps.perplexityHistogram(scored))
+      Step(PerplexityState.pack(mb, mt, hist.select(
+          concat_ws(":", col("lang"), col("logloss_microbits")).as("lang_micro"),
+          col("n"))), st => {
+        val bucketed = TextOps.bucketAgainstThresholds(scored,
+          TextOps.perplexityThresholds(histRows(PerplexityState.unpack(st)(2)),
+            keptN, keptD))
+        Out(Seq("batch" -> bucketed, "pairs" -> TextOps.bigramPairsOf(docs)),
+          mb, mt, scored)
+      })
+    }
   }
 
   /** The batch half of [[perplexityBucketStream]]'s lambda split:
@@ -1332,27 +1087,15 @@ object EventStream {
     // must match the kept fraction the stream ran at, or the reconcile
     // diverges from the one-shot it must equal
     val (keptN, keptD) = kept
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no perplexity state under $stateDir — has the stream committed a trigger?"))
-    val st = Tables.parquet(spark, s"$stateDir/upto_$latest")
-    val settled = graft.operators.TextOps.bigramLoglossFromPairs(
-        Tables.parquet(spark, s"$sinkPath/pairs_*"),
-        st.filter(col("kind") === "b")
-          .select(col("k").as("bigram"), col("n").as("bigram_freq")),
-        st.filter(col("kind") === "t")
-          .select(col("k").as("term"), col("n").as("term_freq")))
-      .join(Tables.parquet(spark, s"$sinkPath/batch_*")
-        .select(col("doc_id"), col("lang")).distinct(), Seq("doc_id"))
+    val Seq(mb, mt, _) = PerplexityState.unpack(
+      latestState(spark, sinkPath + ".state", "perplexity"))
+    val settled = TextOps.bigramLoglossFromPairs(readParts(spark, sinkPath, "pairs"), mb, mt)
+      .join(readParts(spark, sinkPath).select(col("doc_id"), col("lang")).distinct(),
+        Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("logloss_microbits"))
       .localCheckpoint(eager = true)
-    graft.operators.TextOps.bucketAgainstThresholds(settled,
-      graft.operators.TextOps.perplexityThresholds(
-        graft.operators.TextOps.perplexityHistogram(settled), keptN, keptD))
+    TextOps.bucketAgainstThresholds(settled,
+      TextOps.perplexityThresholds(TextOps.perplexityHistogram(settled), keptN, keptD))
   }
 
   /** Streaming twin of Corpus.capPerSource (r8) — the domain cap as a
@@ -1368,36 +1111,18 @@ object EventStream {
     * cap, a ≤2·cap-per-source re-rank against the state
     * (Corpus.capPerSourceIncremental), full snapshot to batch_<id>
     * (a cap is a selection, not an append stream), state to
-    * upto_<id>. Same versioned replay-idempotent state, stable
-    * checkpoint, pruning and block-release discipline as the family.
+    * upto_<id>.
     */
   def capPerSourceStream(spark: SparkSession, dir: String, sinkPath: String,
                          cap: Int = 15,
-                         splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, Long, Long)]
-            .toDF("source", "doc_id", "n_chars"))
-        // checkpointed: the snapshot feeds the sink AND the state write
-        val view = graft.operators.Corpus
-          .capPerSourceIncremental(docs, prev, cap)
-          .localCheckpoint(eager = true)
-        graft.sources.Loader.truncateAndLoad(view, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(
-          view.select("source", "doc_id", "n_chars"), s"$stateDir/upto_$batchId")
-        releaseCheckpoints(view)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                         splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "source STRING, doc_id BIGINT, n_chars BIGINT") { (docs, prev) =>
+      // checkpointed: the snapshot feeds the sink AND the state write
+      val view = Corpus.capPerSourceIncremental(docs, prev, cap)
+        .localCheckpoint(eager = true)
+      Step(view.select("source", "doc_id", "n_chars"), _ => Out(Seq("batch" -> view), view))
+    }
 
   /** Streaming twin of Corpus.selectBudget — token-budget data
     * selection as a continuous process. Same state discipline as
@@ -1413,35 +1138,16 @@ object EventStream {
     */
   def selectBudgetStream(spark: SparkSession, dir: String, sinkPath: String,
                          budgetTokens: Long = 2000L,
-                         splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        // checkpointed: feeds the batch histogram AND the selection
-        // join AND the sink write
-        val scored = graft.operators.TextOps.qualityScores(docs)
-          .localCheckpoint(eager = true)
-        val prevHist = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, Long, Long)]
-            .toDF("lang", "score_micro", "bucket_tokens"))
-        val newHist = graft.operators.Corpus.mergeBudgetHistograms(prevHist,
-            graft.operators.Corpus.budgetHistogram(scored))
-          .localCheckpoint(eager = true)
-        val selected = graft.operators.Corpus.selectAgainstThresholds(scored,
-          graft.operators.Corpus.budgetThresholds(newHist, budgetTokens))
-        graft.sources.Loader.truncateAndLoad(selected, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(newHist, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(scored, newHist)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                         splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "lang STRING, score_micro BIGINT, bucket_tokens BIGINT") { (docs, prevHist) =>
+      // checkpointed: feeds the batch histogram AND the selection join
+      // AND the sink write
+      val scored = TextOps.qualityScores(docs).localCheckpoint(eager = true)
+      Step(Corpus.mergeBudgetHistograms(prevHist, Corpus.budgetHistogram(scored)), hist =>
+        Out(Seq("batch" -> Corpus.selectAgainstThresholds(scored,
+          Corpus.budgetThresholds(hist, budgetTokens))), scored))
+    }
 
   /** The batch half of [[selectBudgetStream]]'s lambda split: re-select
     * every doc the stream has seen against the FINAL token histogram —
@@ -1450,18 +1156,10 @@ object EventStream {
     */
   def reconcileSelectBudget(spark: SparkSession, sinkPath: String,
                             budgetTokens: Long = 2000L): DataFrame = {
-    val stateDir = sinkPath + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_"))
-      .map(_.stripPrefix("upto_").toLong)
-      .reduceOption(_ max _)
-      .getOrElse(throw new IllegalStateException(
-        s"no selection state under $stateDir — has the stream committed a trigger?"))
-    val hist = Tables.parquet(spark, s"$stateDir/upto_$latest")
-    val scored = Tables.parquet(spark, s"$sinkPath/batch_*")
+    val hist = latestState(spark, sinkPath + ".state", "selection")
+    val scored = readParts(spark, sinkPath)
       .select("doc_id", "lang", "n_tokens", "score_micro")
-    graft.operators.Corpus.selectAgainstThresholds(scored,
-        graft.operators.Corpus.budgetThresholds(hist, budgetTokens))
+    Corpus.selectAgainstThresholds(scored, Corpus.budgetThresholds(hist, budgetTokens))
       .orderBy("doc_id")
   }
 
@@ -1481,30 +1179,12 @@ object EventStream {
     */
   def unimaxStream(spark: SparkSession, dir: String, sinkPath: String,
                    budgetTokens: Long = 20000L, maxEpochs: Int = 1,
-                   splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, Long)].toDF("lang", "n_tokens"))
-        val merged = graft.operators.Corpus.mergeLangTokenCounts(prev,
-            graft.operators.Corpus.langTokenCounts(docs))
-          .localCheckpoint(eager = true)
-        val alloc = graft.operators.Corpus
-          .unimaxFromLangTokens(merged, budgetTokens, maxEpochs)
-        graft.sources.Loader.truncateAndLoad(alloc, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(merged, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(merged)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                   splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "lang STRING, n_tokens BIGINT") { (docs, prev) =>
+      Step(Corpus.mergeLangTokenCounts(prev, Corpus.langTokenCounts(docs)), totals =>
+        Out(Seq("batch" -> Corpus.unimaxFromLangTokens(totals, budgetTokens, maxEpochs))))
+    }
 
   /** Streaming twin of Corpus.sample: the weighted mixing filter is a
     * stateless per-row predicate on a deterministic hash key, so it
@@ -1532,29 +1212,12 @@ object EventStream {
     * merge + a batch-key probe against the broadcast cells.
     */
   def heavyHittersStream(spark: SparkSession, dir: String, sinkPath: String,
-                         splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    tableStream(spark, dir, "events", "event_id", splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ev = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(Long, Long, Long)].toDF("i", "b", "cnt"))
-        val newCells = graft.operators.EventOps.mergeCmsCells(prev,
-            graft.operators.EventOps.cmsCells(ev))
-          .localCheckpoint(eager = true)
-        val probed = graft.operators.EventOps.probeCmsCells(newCells, ev)
-        graft.sources.Loader.truncateAndLoad(probed, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(newCells, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(newCells)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                         splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(tableStream(spark, dir, "events", "event_id", splitAt), sinkPath,
+        "i BIGINT, b BIGINT, cnt BIGINT") { (ev, prev) =>
+      Step(EventOps.mergeCmsCells(prev, EventOps.cmsCells(ev)), cells =>
+        Out(Seq("batch" -> EventOps.probeCmsCells(cells, ev))))
+    }
 
   /** Streaming Zipf-shape monitor — twin of Corpus.zipfSlope, the
     * distribution-drift alarm a corpus intake stream raises when a
@@ -1569,30 +1232,12 @@ object EventStream {
     * afford it trades exactness for the HLL/CMS sketch twins.
     */
   def zipfSlopeStream(spark: SparkSession, dir: String, sinkPath: String,
-                      splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, String, Long)]
-            .toDF("lang", "term", "freq"))
-        val newVocab = graft.operators.Corpus.mergeZipfVocab(prev,
-            graft.operators.Corpus.zipfVocab(docs))
-          .localCheckpoint(eager = true)
-        val view = graft.operators.Corpus.zipfSlopeFromVocab(newVocab)
-        graft.sources.Loader.truncateAndLoad(view, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(newVocab, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(newVocab, view)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                      splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "lang STRING, term STRING, freq BIGINT") { (docs, prev) =>
+      Step(Corpus.mergeZipfVocab(prev, Corpus.zipfVocab(docs)), vocab =>
+        Out(Seq("batch" -> Corpus.zipfSlopeFromVocab(vocab))))
+    }
 
   /** Streaming vocabulary-cardinality monitor — twin of
     * TextOps.vocabHll, in the covariance/reservoir STRONGEST
@@ -1604,33 +1249,15 @@ object EventStream {
     * countDistinct is the sketch's reason to exist; the one-shot
     * operator's n_exact column is where the error profile gets
     * measured). Per-trigger cost = the batch's token map scan + a
-    * ≤512-row merge. Same versioned replay-idempotent state, stable
-    * checkpoint, pruning and block-release discipline as the family.
+    * ≤512-row merge.
     */
   def vocabHllStream(spark: SparkSession, dir: String, sinkPath: String,
-                     splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(Long, Long)].toDF("bucket", "max_rank"))
-        val newRegs = graft.operators.TextOps.mergeHllRegisters(prev,
-            graft.operators.TextOps.vocabHllRegisters(docs))
-          .localCheckpoint(eager = true)
-        val view = graft.operators.TextOps.vocabHllFromRegisters(newRegs)
-        graft.sources.Loader.truncateAndLoad(view, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(newRegs, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(newRegs, view)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                     splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "bucket BIGINT, max_rank BIGINT") { (docs, prev) =>
+      Step(TextOps.mergeHllRegisters(prev, TextOps.vocabHllRegisters(docs)), regs =>
+        Out(Seq("batch" -> TextOps.vocabHllFromRegisters(regs))))
+    }
 
   /** Streaming twin of Corpus.prioritySample — with [[covarianceStream]]
     * in the STRONGEST twin equivalence class: A-Res priorities are pure
@@ -1641,36 +1268,18 @@ object EventStream {
     * everything arrived so far — no online drift, no reconcile pass
     * exists because none is needed. Per-trigger cost = one map scan of
     * the batch + a 2n-row merge (Corpus.prioritySampleIncremental).
-    * Same versioned replay-idempotent state, stable checkpoint,
-    * pruning and block-release discipline as the rest of the family.
     */
   def reservoirStream(spark: SparkSession, dir: String, sinkPath: String,
                       n: Int = 25,
-                      splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docs = batch.drop("ingest_ts")
-        val prev = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(Long, String, String, Double, Long)]
-            .toDF("doc_id", "source", "lang", "weight", "priority_micro"))
-        val merged = graft.operators.Corpus
-          .prioritySampleIncremental(docs, prev, n)
-          .localCheckpoint(eager = true)
-        // the reservoir is simultaneously the published snapshot and
-        // the carried state — one frame, two versioned landings
-        graft.sources.Loader.truncateAndLoad(merged, s"$sinkPath/batch_$batchId")
-        graft.sources.Loader.truncateAndLoad(merged, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(merged)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+                      splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt), sinkPath,
+        "doc_id BIGINT, source STRING, lang STRING, weight DOUBLE, priority_micro BIGINT") {
+      (docs, prev) =>
+        // the reservoir is simultaneously the carried state and the
+        // published snapshot — the landed version is landed again
+        Step(Corpus.prioritySampleIncremental(docs, prev, n), reservoir =>
+          Out(Seq("batch" -> reservoir)))
+    }
 
   /** Streaming tokenizer apply under a PRE-TRAINED artifact (r13) —
     * the deployment [[graft.operators.UnigramLm.encodeWith]] exists
@@ -1689,8 +1298,7 @@ object EventStream {
     */
   def tokenizeStream(spark: SparkSession, dir: String, sinkPath: String,
                      pieces: Seq[graft.operators.UnigramLm.Piece],
-                     splitAt: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+                     splitAt: Option[Long] = None): StreamingQuery =
     applyArtifactStream(spark, dir, sinkPath, splitAt,
       batch => graft.operators.UnigramLm.encodeWith(batch, pieces))
 
@@ -1700,15 +1308,13 @@ object EventStream {
     */
   def tokenizeBpeStream(spark: SparkSession, dir: String, sinkPath: String,
                         merges: Seq[graft.operators.Bpe.Merge],
-                        splitAt: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+                        splitAt: Option[Long] = None): StreamingQuery =
     applyArtifactStream(spark, dir, sinkPath, splitAt,
       batch => graft.operators.Bpe.encodeWith(batch, merges))
 
   private def applyArtifactStream(spark: SparkSession, dir: String,
                                   sinkPath: String, splitAt: Option[Long],
-                                  apply: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+                                  apply: DataFrame => DataFrame): StreamingQuery =
     documentsStream(spark, dir, splitAt)
       .writeStream.outputMode("append")
       .option("checkpointLocation", sinkPath + ".ckpt")
@@ -1733,48 +1339,25 @@ object EventStream {
     * order, which IS the contract for an append-only corpus feed (the
     * batch twin re-derives the same plan as long as doc_id order
     * matches arrival order — spec-asserted across real multi-trigger
-    * runs). Plans land in per-batch sink dirs (`sinkPath/batch_*`);
-    * state and sink writes follow the replay-idempotent versioned
-    * pattern of [[latestStateBefore]].
+    * runs). Plans land in per-batch sink dirs (read with
+    * [[readParts]]).
     */
   def packPlanStream(spark: SparkSession, dir: String, sinkPath: String,
                      capacity: Int = 2048,
-                     splitAt: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val stateDir = sinkPath + ".state"
-    documentsStream(spark, dir, splitAt)
-      .select(col("doc_id"), col("lang"), col("text"))
-      .writeStream.outputMode("append")
-      // stable checkpoint next to the sink: a restarted query RESUMES
-      // batch ids, so replays land on the versioned-state idempotent
-      // path instead of restarting at 0 with fresh temporary state
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // versioned state (see latestStateBefore): the plan and the new
-        // totals are deterministic functions of the immutable previous
-        // totals + the batch, written by overwrite to batch-suffixed
-        // paths — a replayed trigger rewrites identical content
-        val offsets = latestStateBefore(spark, stateDir, batchId)
-          .map(Tables.parquet(spark, _))
-          .getOrElse(Seq.empty[(String, Long)].toDF("lang", "base_tokens"))
-        // checkpoint: consumed by BOTH the sink write and the totals
-        // rollup (which reuses the plan's n_tokens instead of paying a
-        // second tokenization scan of the batch)
-        val planned = graft.operators.Corpus
-          .packPlanIncremental(batch, offsets, capacity)
-          .localCheckpoint(eager = true)
-        graft.sources.Loader.truncateAndLoad(planned, s"$sinkPath/batch_$batchId")
-        val newTotals = offsets.unionByName(
+                     splitAt: Option[Long] = None): StreamingQuery =
+    versionedStream(documentsStream(spark, dir, splitAt)
+        .select(col("doc_id"), col("lang"), col("text")), sinkPath,
+        "lang STRING, base_tokens BIGINT") { (batch, offsets) =>
+      // checkpoint: consumed by BOTH the sink write and the totals
+      // rollup (which reuses the plan's n_tokens instead of paying a
+      // second tokenization scan of the batch)
+      val planned = Corpus.packPlanIncremental(batch, offsets, capacity)
+        .localCheckpoint(eager = true)
+      Step(offsets.unionByName(
             planned.groupBy("lang").agg(sum(col("n_tokens")).as("base_tokens")))
-          .groupBy("lang").agg(sum(col("base_tokens")).as("base_tokens"))
-          .localCheckpoint(eager = true)
-        graft.sources.Loader.truncateAndLoad(newTotals, s"$stateDir/upto_$batchId")
-        releaseCheckpoints(planned, newTotals)
-        pruneStateBefore(spark, stateDir, batchId - 1)
-        ()
-      }
-      .start()
-  }
+          .groupBy("lang").agg(sum(col("base_tokens")).as("base_tokens")),
+        _ => Out(Seq("batch" -> planned), planned))
+    }
 
   case class Ev(user_id: Long, ts: java.sql.Timestamp, event_id: Long, value: Double)
   case class SessionOut(user_id: Long, session_n: Long, n_events: Long)

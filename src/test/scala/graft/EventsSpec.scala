@@ -123,7 +123,7 @@ class EventsSpec extends AnyFunSuite {
       .toString + "/pack_plan"
     val q = EventStream.packPlanStream(spark, sf, sink)
     q.processAllAvailable(); q.stop()
-    val streamed = spark.read.parquet(s"$sink/batch_*")
+    val streamed = EventStream.readParts(spark, sink)
       .select("doc_id", "lang", "n_tokens", "pack_id", "pack_offset")
     val batch = graft.operators.Corpus.packPlan(Tables.documents(spark, sf))
       .select("doc_id", "lang", "n_tokens", "pack_id", "pack_offset")
@@ -141,7 +141,7 @@ class EventsSpec extends AnyFunSuite {
     val batches = new java.io.File(sink).listFiles()
       .map(_.getName).filter(_.startsWith("batch_")).sorted
     assert(batches.length === 2, s"expected two triggers, got ${batches.toSeq}")
-    val streamed = spark.read.parquet(s"$sink/batch_*")
+    val streamed = EventStream.readParts(spark, sink)
       .select("doc_id", "lang", "n_tokens", "pack_id", "pack_offset")
     val batch = graft.operators.Corpus.packPlan(Tables.documents(spark, sf))
       .select("doc_id", "lang", "n_tokens", "pack_id", "pack_offset")

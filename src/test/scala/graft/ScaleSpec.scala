@@ -286,7 +286,7 @@ class ScaleSpec extends AnyFunSuite {
     val q = EventStream.admissionPipelineStream(spark, sf, corpus,
       col("doc_id") % 3 === 0, sink)
     q.processAllAvailable(); q.stop()
-    val streamed = spark.read.parquet(s"$sink/batch_*")
+    val streamed = EventStream.readParts(spark, sink)
     val batch = graft.operators.Dedup
       .admitNearDup(corpus, docs.filter(col("doc_id") % 3 === 0))
     assert(streamed.exceptAll(batch).count() === 0)
@@ -305,7 +305,7 @@ class ScaleSpec extends AnyFunSuite {
     val batches = new java.io.File(sink).listFiles()
       .map(_.getName).filter(_.startsWith("batch_")).sorted
     assert(batches.length === 2, s"expected two triggers, got ${batches.toSeq}")
-    val streamedIds = spark.read.parquet(s"$sink/batch_*").select("doc_id")
+    val streamedIds = EventStream.readParts(spark, sink).select("doc_id")
     val batchIds = graft.operators.Dedup
       .admitNearDup(corpus, docs.filter(col("doc_id") % 3 === 0))
       .select("doc_id")
@@ -333,7 +333,7 @@ class ScaleSpec extends AnyFunSuite {
       .toString + "/gated"
     val q = EventStream.qualityGateStream(spark, sf, sink)
     q.processAllAvailable(); q.stop()
-    val streamed = spark.read.parquet(s"$sink/batch_*")
+    val streamed = EventStream.readParts(spark, sink)
     val batch = graft.operators.TextOps.qualityGate(Tables.documents(spark, sf))
     assert(streamed.exceptAll(batch).count() === 0)
     assert(batch.exceptAll(streamed).count() === 0)
@@ -352,7 +352,7 @@ class ScaleSpec extends AnyFunSuite {
     // online decisions of the FIRST trigger used a younger histogram —
     // report the drift the lambda split exists for (not asserted: its
     // size is a property of the fixture)
-    val online = spark.read.parquet(s"$sink/batch_*")
+    val online = EventStream.readParts(spark, sink)
     val drift = online.select("doc_id", "kept")
       .exceptAll(oneShot.select("doc_id", "kept")).count()
     info(s"online-vs-settled gate drift: $drift docs")
@@ -369,7 +369,7 @@ class ScaleSpec extends AnyFunSuite {
     val batches = new java.io.File(sink).listFiles()
       .map(_.getName).filter(_.startsWith("batch_")).sorted
     assert(batches.length === 2, s"expected two triggers, got ${batches.toSeq}")
-    val online = spark.read.parquet(s"$sink/batch_*")
+    val online = EventStream.readParts(spark, sink)
     val oneShot = graft.operators.TextOps.ngramNovelty(Tables.documents(spark, sf))
     // the novelty twin's distinguishing property: per-gram-min state is
     // monotone, so unlike the gate/budget twins there is NO online
@@ -468,9 +468,8 @@ class ScaleSpec extends AnyFunSuite {
     val q = EventStream.noveltyStream(spark, sf, sink, splitAt = Some(250L))
     q.processAllAvailable(); q.stop()
     val stateDir = sink + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_")).map(_.stripPrefix("upto_").toLong).max
-    val state = EventStream.readStateVersion(spark, stateDir, s"$stateDir/upto_$latest")
+    val latest = EventStream.parts(spark, stateDir, "upto").last._2
+    val state = EventStream.readStateVersion(spark, stateDir, latest)
     // the next trigger's merge: full-outer join of the bucketed state
     // against a fresh batch aggregate — with broadcast off (full-outer
     // can't broadcast anyway) the ONLY Exchange allowed is the batch
@@ -514,9 +513,8 @@ class ScaleSpec extends AnyFunSuite {
       col("doc_id") % 3 === 0, sink, splitAt = Some(250L))
     q.processAllAvailable(); q.stop()
     val stateDir = sink + ".state"
-    val latest = graft.sources.Fs.childDirs(spark, stateDir)
-      .filter(_.startsWith("upto_")).map(_.stripPrefix("upto_").toLong).max
-    val state = EventStream.readStateVersion(spark, stateDir, s"$stateDir/upto_$latest")
+    val latest = EventStream.parts(spark, stateDir, "upto").last._2
+    val state = EventStream.readStateVersion(spark, stateDir, latest)
     // the per-trigger carried index AND the retro reconcile both start
     // from an aggregation clustered on (…, band_key); the band_key
     // buckets satisfy that distribution, so the state never reshuffles
@@ -552,6 +550,45 @@ class ScaleSpec extends AnyFunSuite {
     assert(fin.count() === 64L * 65 / 2)
   }
 
+  test("streaming twins leave no per-trigger checkpoint pinned after the query stops") {
+    // perplexity: model, scores and histogram checkpoints per trigger;
+    // covariance: the view's own finish-step checkpoint
+    val sc = spark.sparkContext
+    val floor = sc.emptyRDD[Int].id // RDD ids only grow: later ids are this run's
+    // Every RDD the run stores blocks for is held here: the persisted-RDD
+    // registry keeps RDDs weakly, so without a strong reference a GC
+    // would let the ContextCleaner reclaim a leaked checkpoint before the
+    // check below could see it.
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, org.apache.spark.rdd.RDD[_]]()
+    val stored = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onBlockUpdated(
+          e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId.asRDDId.foreach { b =>
+          stored.add(b.rddId)
+          sc.getPersistentRDDs.get(b.rddId).foreach(held.put(b.rddId, _))
+        }
+    }
+    sc.addSparkListener(listener)
+    val base = Files.createTempDirectory("graft_release").toString
+    try {
+      Seq(EventStream.perplexityBucketStream(spark, sf, s"$base/ppx", splitAt = Some(250L)),
+          EventStream.covarianceStream(spark, sf, s"$base/cov", splitAt = Some(250L)))
+        .foreach { q => q.processAllAvailable(); q.stop() }
+      assert(EventStream.parts(spark, s"$base/ppx", "batch").size === 2)
+      assert(EventStream.parts(spark, s"$base/cov", "batch").size === 2)
+      // releases are non-blocking: poll, and never force a GC
+      def pinned = sc.getRDDStorageInfo.map(_.id).filter(_ > floor).sorted.toSeq
+      val deadline = System.currentTimeMillis + 5000
+      while (pinned.nonEmpty && System.currentTimeMillis < deadline) Thread.sleep(100)
+      assert(!stored.isEmpty, "sanity: the triggers stored checkpoint blocks")
+      assert(pinned.isEmpty, s"cached RDDs left pinned by the streams: $pinned")
+    } finally {
+      sc.removeSparkListener(listener)
+      held.values.forEach(r => { r.unpersist(blocking = false); () })
+    }
+  }
+
   test("streaming bigram logloss: model carried across triggers; reconcile settles to one-shot") {
     val sink = Files.createTempDirectory("graft_bgstream").toString + "/bigram"
     val q = EventStream.bigramLoglossStream(spark, sf, sink, splitAt = Some(250L))
@@ -563,7 +600,7 @@ class ScaleSpec extends AnyFunSuite {
     val oneShot = graft.operators.TextOps.bigramLogloss(docs)
     // online drift exists by construction (trigger-1 docs were scored
     // under the prefix model) — report, don't assert its size
-    val online = spark.read.parquet(s"$sink/batch_*")
+    val online = EventStream.readParts(spark, sink)
     val drift = online.exceptAll(oneShot).count()
     info(s"online-vs-settled bigram score drift: $drift rows")
     // trigger-2 scores used the FULL model (merge associativity), so
@@ -590,7 +627,7 @@ class ScaleSpec extends AnyFunSuite {
     val oneShot = graft.operators.Corpus.dsirWeights(docs, tgt)
     // online drift exists by construction (trigger-1 raw docs scored
     // under the prefix models) — report, don't assert its size
-    val online = spark.read.parquet(s"$sink/batch_*")
+    val online = EventStream.readParts(spark, sink)
     info(s"online-vs-settled dsir weight drift: " +
       s"${online.exceptAll(oneShot).count()} rows")
     // trigger-2 scored under the merged (= full) models: exactly the
@@ -605,9 +642,8 @@ class ScaleSpec extends AnyFunSuite {
     assert(t2Inc.exceptAll(t2).count() === 0)
     // carried state is BOUNDED: ≤ 2·DsirBuckets rows regardless of
     // corpus size — the histogram class, not the vocabulary² class
-    val latest = new java.io.File(sink + ".state").listFiles()
-      .map(_.getName).filter(_.startsWith("upto_")).max
-    val st = spark.read.parquet(s"$sink.state/$latest")
+    val latest = EventStream.parts(spark, sink + ".state", "upto").last._2
+    val st = spark.read.parquet(latest)
     assert(st.count() <= 2L * graft.operators.Corpus.DsirBuckets)
     // the settled answer: sunk compact features + final models, no
     // text re-scan
@@ -628,7 +664,7 @@ class ScaleSpec extends AnyFunSuite {
       docs.filter(col("doc_id") % 2 =!= 0), docs.filter(col("doc_id") % 2 === 0))
     // online drift exists by construction (trigger-1 probes scored
     // under the prefix model) — report, don't assert its size
-    val online = spark.read.parquet(s"$sink/batch_*")
+    val online = EventStream.readParts(spark, sink)
     info(s"online-vs-settled trigram backoff drift: " +
       s"${online.exceptAll(oneShot).count()} rows")
     // trigger-2 scored under the merged (= full even-doc) model, so
@@ -662,10 +698,9 @@ class ScaleSpec extends AnyFunSuite {
     assert(t2.exceptAll(shot2).count() === 0)
     assert(shot2.exceptAll(t2).count() === 0)
     // the carried state is ≤|langs| rows — the bounded histogram class
-    val stDir = new java.io.File(sink + ".state").listFiles()
-      .map(_.getName).filter(_.startsWith("upto_")).max
+    val stDir = EventStream.parts(spark, sink + ".state", "upto").last._2
     val nLangs = docs.select("lang").distinct().count()
-    assert(spark.read.parquet(s"$sink.state/$stDir").count() <= nLangs)
+    assert(spark.read.parquet(stDir).count() <= nLangs)
   }
 
   test("streaming semantic admission: kept-exemplar index carried; per-trigger ≡ sequential batch admission") {
@@ -705,9 +740,8 @@ class ScaleSpec extends AnyFunSuite {
     assert(adm2.exceptAll(t2).count() === 0)
     // index-maintenance invariant: final carried state = trigger-1
     // index ∪ trigger-2 admitted rows (maintained, never recomputed)
-    val stDir = new java.io.File(sink + ".state").listFiles()
-      .map(_.getName).filter(_.startsWith("upto_")).max
-    val finalIdx = spark.read.parquet(s"$sink.state/$stDir")
+    val stDir = EventStream.parts(spark, sink + ".state", "upto").last._2
+    val finalIdx = spark.read.parquet(stDir)
       .select("vec_id", "cell_id")
     val expectIdx = idx1.select("vec_id", "cell_id")
       .unionByName(adm2.select("vec_id", "cell_id"))
@@ -716,7 +750,7 @@ class ScaleSpec extends AnyFunSuite {
     // boundedness argument carried across triggers: within every cell
     // the final index is pairwise cos < τ (τ-packing — the reason the
     // state can't grow unboundedly at fixed codebook)
-    val idxFull = spark.read.parquet(s"$sink.state/$stDir").collect()
+    val idxFull = spark.read.parquet(stDir).collect()
       .map(r => (r.getLong(0), r.getLong(1),
         r.getSeq[Float](2).map(_.toDouble).toArray))
     def cosv(a: Array[Double], b: Array[Double]): Double = {
@@ -740,7 +774,7 @@ class ScaleSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val oneShot = graft.operators.TextOps.perplexityBuckets(docs)
     // every arrived doc got an online decision, exactly once
-    val online = spark.read.parquet(s"$sink/batch_*")
+    val online = EventStream.readParts(spark, sink)
     assert(online.count() === oneShot.count())
     assert(online.select("doc_id").distinct().count() === oneShot.count())
     // online decisions drift TWICE over (younger model AND thresholds
@@ -784,7 +818,7 @@ class ScaleSpec extends AnyFunSuite {
     // must equal re-bucketing its own scores against thresholds cut
     // at 1/2 from the full online histogram (trigger-2 scores are
     // final — full model — so only the threshold side is in play)
-    val online = spark.read.parquet(s"$sink/batch_*")
+    val online = EventStream.readParts(spark, sink)
       .select(col("doc_id"), col("lang"), col("logloss_microbits"))
     val t2scores = spark.read.parquet(s"$sink/batch_1")
       .select(col("doc_id"), col("lang"), col("logloss_microbits"))
@@ -833,10 +867,8 @@ class ScaleSpec extends AnyFunSuite {
     // associativity — the covariance-class state contract). Read only
     // the LATEST version — pruning deliberately keeps one superseded
     // upto_* behind for replay safety.
-    val latestUpto = new java.io.File(s"$sink.state").listFiles()
-      .map(_.getName).filter(_.startsWith("upto_"))
-      .maxBy(_.stripPrefix("upto_").toLong)
-    val state = spark.read.parquet(s"$sink.state/$latestUpto")
+    val latestUpto = EventStream.parts(spark, s"$sink.state", "upto").last._2
+    val state = spark.read.parquet(latestUpto)
     val oneShotCells = graft.operators.EventOps.cmsCells(ev)
     assert(state.exceptAll(oneShotCells).count() === 0)
     assert(oneShotCells.exceptAll(state).count() === 0)
@@ -962,7 +994,7 @@ class ScaleSpec extends AnyFunSuite {
       .toString + "/selected"
     val q1 = EventStream.selectBudgetStream(spark, sf, sink1)
     q1.processAllAvailable(); q1.stop()
-    val streamed = spark.read.parquet(s"$sink1/batch_*")
+    val streamed = EventStream.readParts(spark, sink1)
     val oneShot = graft.operators.Corpus.selectBudget(Tables.documents(spark, sf))
     assert(streamed.exceptAll(oneShot).count() === 0)
     assert(oneShot.exceptAll(streamed).count() === 0)
@@ -976,7 +1008,7 @@ class ScaleSpec extends AnyFunSuite {
     val batches = new java.io.File(sink2).listFiles()
       .map(_.getName).filter(_.startsWith("batch_")).sorted
     assert(batches.length === 2, s"expected two triggers, got ${batches.toSeq}")
-    val online = spark.read.parquet(s"$sink2/batch_*")
+    val online = EventStream.readParts(spark, sink2)
     val drift = online.select("doc_id", "kept")
       .exceptAll(oneShot.select("doc_id", "kept")).count()
     info(s"online-vs-settled selection drift: $drift docs")
@@ -1007,7 +1039,7 @@ class ScaleSpec extends AnyFunSuite {
     q.processAllAvailable(); q.stop()
     // the online stream admits BOTH members — it cannot see the edge
     // that hasn't arrived (this is the gap, exercised for real)
-    val streamedIds = spark.read.parquet(s"$sink/batch_*")
+    val streamedIds = EventStream.readParts(spark, sink)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(streamedIds === Set(x, y),
       s"stream should admit both non-colliding members, got $streamedIds")

@@ -20,6 +20,11 @@ outdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_out"
 sfdir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
 con = duckdb.connect()
+# Explicit bounds: DuckDB's defaults (80% of RAM, every core) let this
+# check crowd out a Spark JVM running on the same machine. 4 GB is what
+# the ann_* oracles need at 2 threads (3 GB runs out of memory).
+con.execute("SET memory_limit = '4GB'")
+con.execute("SET threads = 2")
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
