@@ -486,7 +486,9 @@ object EventStream {
     * reference's incremental load (truncate-and-load / upsert) as one
     * policy: state is VERSIONED, each trigger's writes are OVERWRITE
     * replays, and the merge of a later batch into the carried state is
-    * associative.
+    * associative. Every twin declared through it has the same
+    * versioned replay-idempotent state, stable checkpoint, pruning and
+    * block-release discipline:
     *  - `source` streams into `foreachBatch` under a stable checkpoint
     *    next to the sink (`sinkPath.ckpt`), so a restarted query
     *    RESUMES batch ids instead of restarting at 0 with fresh state.
