@@ -31,6 +31,8 @@ object TextExpressions {
     ColumnBridge.column(SimHash32(ColumnBridge.expression(tokens)))
   def md5Keys(tokens: Column, n: Int, bits: Int, distinct: Boolean = false): Column =
     ColumnBridge.column(Md5Keys(ColumnBridge.expression(tokens), n, bits, distinct))
+  def md5LowNibbles(tokens: Column): Column =
+    ColumnBridge.column(Md5LowNibbles(ColumnBridge.expression(tokens)))
   def profileHitCounts(tokens: Column, profiles: Seq[Seq[String]]): Column =
     ColumnBridge.column(ProfileHitCounts(ColumnBridge.expression(tokens), profiles))
   def sortedIntersectCount(a: Column, b: Column): Column =
@@ -156,6 +158,26 @@ object Md5KeysHelper {
       if (len == m) out else java.util.Arrays.copyOf(out, len))
   }
 
+  /** The low nibble of each element's md5: the digest's last hex
+    * digit as a number, which substring(md5(x), 32, 1) reads.
+    */
+  def lowNibbles(tokens: ArrayData): ArrayData = {
+    val k = tokens.numElements()
+    val starts = new Array[Int](k + 1)
+    val buf = spaced(tokens, starts)
+    val md = md5.get()
+    val d = new Array[Byte](16)
+    val out = new Array[Int](k)
+    var i = 0
+    while (i < k) {
+      md.update(buf, starts(i), starts(i + 1) - 1 - starts(i))
+      md.digest(d, 0, 16)
+      out(i) = d(15) & 0xf
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
   /** 32-char bitstring: bit j is '1' iff more than half of the elements'
     * md5 digests have the top bit of hex nibble j set.
     */
@@ -208,6 +230,23 @@ case class Md5Keys(child: Expression, n: Int, bits: Int, distinct: Boolean)
       s"${ev.value} = graft.functions.Md5KeysHelper.keys($a, $n, $bits, $distinct);")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
+}
+
+/** Per-element low md5 nibble of a string array in one native pass
+  * ([[Md5KeysHelper.lowNibbles]]): element i is the last hex digit of
+  * md5(a[i]) as 0..15. Null array → null. Bit-identical to
+  * transform(a, x => conv(substring(md5(x), 32, 1), 16, 10)), which
+  * Spark interprets element by element.
+  */
+case class Md5LowNibbles(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "md5_low_nibbles"
+  override def nullSafeEval(v: Any): Any =
+    Md5KeysHelper.lowNibbles(v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.Md5KeysHelper.lowNibbles($a);")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** 32-bit SimHash of a token array: bit j set iff the majority of the

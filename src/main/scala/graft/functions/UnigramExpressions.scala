@@ -33,6 +33,25 @@ import org.apache.spark.unsafe.types.UTF8String
 object UnigramDpHelper {
   private val Inf = Long.MaxValue / 4
 
+  /** The micro-bit cost map keyed by UTF8String, as [[viterbi]] reads it. */
+  def costTable(costs: Map[String, Long]): java.util.HashMap[UTF8String, java.lang.Long] = {
+    val m = new java.util.HashMap[UTF8String, java.lang.Long](costs.size * 2)
+    costs.foreach { case (p, c) =>
+      m.put(UTF8String.fromString(p), java.lang.Long.valueOf(c)) }
+    m
+  }
+
+  /** Piece probabilities 2^(−cost/1e6) keyed by UTF8String, as
+    * [[fbExpected]] reads them.
+    */
+  def probTable(costs: Map[String, Long]): java.util.HashMap[UTF8String, java.lang.Double] = {
+    val m = new java.util.HashMap[UTF8String, java.lang.Double](costs.size * 2)
+    costs.foreach { case (p, c) =>
+      m.put(UTF8String.fromString(p),
+        java.lang.Double.valueOf(StrictMath.pow(2.0, -(c.toDouble / 1e6)))) }
+    m
+  }
+
   /** Viterbi segmentation — [[graft.operators.UnigramLm.viterbiPieces]]
     * as one Java DP (cost map lookups on UTF8String keys).
     */
@@ -182,12 +201,8 @@ case class UnigramViterbi(child: Expression, costs: Map[String, Long],
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "unigram_viterbi"
 
-  @transient private lazy val table: java.util.HashMap[UTF8String, java.lang.Long] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](costs.size * 2)
-    costs.foreach { case (p, c) =>
-      m.put(UTF8String.fromString(p), java.lang.Long.valueOf(c)) }
-    m
-  }
+  @transient private lazy val table: java.util.HashMap[UTF8String, java.lang.Long] =
+    UnigramDpHelper.costTable(costs)
 
   override def nullSafeEval(v: Any): Any =
     UnigramDpHelper.viterbi(v.asInstanceOf[UTF8String], table, maxLen)
@@ -214,13 +229,8 @@ case class UnigramFbExpected(child: Expression, costs: Map[String, Long],
     containsNull = false)
   override def prettyName: String = "unigram_fb_expected"
 
-  @transient private lazy val table: java.util.HashMap[UTF8String, java.lang.Double] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Double](costs.size * 2)
-    costs.foreach { case (p, c) =>
-      m.put(UTF8String.fromString(p),
-        java.lang.Double.valueOf(StrictMath.pow(2.0, -(c.toDouble / 1e6)))) }
-    m
-  }
+  @transient private lazy val table: java.util.HashMap[UTF8String, java.lang.Double] =
+    UnigramDpHelper.probTable(costs)
 
   override def nullSafeEval(v: Any): Any =
     UnigramDpHelper.fbExpected(v.asInstanceOf[UTF8String], table, quantum, maxLen)

@@ -120,14 +120,16 @@ object Dedup {
     * case), which is the property that holds at corpus scale.
     */
   def minhashPairs(documents: DataFrame): DataFrame =
-    pairsFromGraph(explodeBands(bandColumns(documents)))
+    pairsFromGraph(explodeBands(bandColumns(documents))).distinct()
       .orderBy("doc_a", "doc_b")
 
   /** Pair enumeration from an exploded (doc_id, band_idx, band_key)
     * band graph — the shared core of [[minhashPairs]], [[clusters]]
-    * and the admission/reconcile family. Unsorted: every consumer
-    * either re-shuffles (clustering) or sorts itself (the public
-    * pairs surface), so a sort here would be a dead range exchange.
+    * and the admission/reconcile family. Unsorted and with repeats (a
+    * pair sharing several bands is emitted once per band): the closure
+    * gives the same labels over repeated edges, so only the public
+    * pairs surface pays a distinct, and it sorts itself (a sort here
+    * would be a dead range exchange).
     */
   private def pairsFromGraph(exploded: DataFrame): DataFrame =
     exploded
@@ -138,7 +140,7 @@ object Dedup {
       .select(explode(flatten(transform(col("ids"), (a, i) =>
         transform(slice(col("ids"), i + 2, size(col("ids"))),
           b => struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b")).distinct()
+      .select(col("p.doc_a"), col("p.doc_b"))
 
   /** Connected-component cluster assignment over the MinHash/LSH
     * candidate-pair graph: every doc gets the minimum doc_id reachable
@@ -151,8 +153,10 @@ object Dedup {
     * label decreased. Rounds = graph diameter; LSH dup clusters are
     * band-bucket near-cliques, so diameters stay in low single digits
     * even at corpus scale (each round is one uniform-key shuffle —
-    * the standard large-graph CC shape). Iterations run through
-    * eager `localCheckpoint` so lineage stays flat instead of growing
+    * the standard large-graph CC shape). The rounds run as plain RDD
+    * rounds over materialized state (one Spark job each, no query
+    * planning or generated code per round), and each round's labels
+    * are locally checkpointed so lineage stays flat instead of growing
     * a join per round.
     */
   def clusters(documents: DataFrame): DataFrame =
@@ -165,7 +169,7 @@ object Dedup {
     * subtrees, so without this the expensive band pipeline ran once
     * per consumer). Callers passing a multiply-consumed `bands` should
     * hand in a materialized (checkpointed) frame; the propagation
-    * itself checkpoints everything it iterates on, so the returned
+    * itself materializes everything it iterates on, so the returned
     * plan does NOT retain `bands`.
     */
   def clustersFromBands(bands: DataFrame): DataFrame =
@@ -192,52 +196,76 @@ object Dedup {
     clustersCore(ids, pairs)
 
   private def clustersCore(docIds: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true)
-    val sym = edges.union(
-      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    var labels = docIds.select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint(true)
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    val sc = docIds.sparkSession.sparkContext
+    // a null id joins nothing and its row never survives the sizes
+    // join below, so null ids and null-ended edges are dropped here
+    val ids = ColumnBridge.rows(docIds.select(col("doc_id").cast(LongType)))
+      .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    val edges = ColumnBridge.rows(pairs.select(col("doc_a").cast(LongType),
+        col("doc_b").cast(LongType)))
+      .flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else Iterator((r.getLong(1), r.getLong(0)), (r.getLong(0), r.getLong(1)))
+      }
+    // labels and the symmetric edges (keyed by their far end) share one
+    // partitioner, so a round's two joins are narrow and its only
+    // shuffle is the per-doc min
+    val part = new org.apache.spark.HashPartitioner(
+      math.max(1, math.max(ids.getNumPartitions, edges.getNumPartitions)))
+    // read by every round; the first round's job computes and caches it
+    val sym = edges.partitionBy(part)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var labels = ids.map(id => (id, id)).partitionBy(part)
+      .mapPartitions(_.map { case (id, l) =>
+        new GenericInternalRow(Array[Any](id, l)): InternalRow
+      }, preservesPartitioning = true)
     var converged = false
     var rounds = 0
     while (!converged && rounds < 50) {
-      val neigh = sym.join(labels, sym("doc_b") === labels("doc_id"))
-        .groupBy(sym("doc_a").as("doc_id"))
-        .agg(min(col("cluster_id")).as("neigh_min"))
-      // the convergence probe rides the checkpoint's own
-      // materialization job (r18, VERDICT r17 #6 — an accumulator
-      // counts shrunk labels during the pass), where it used to be a
-      // separate filter+isEmpty job per round
-      val (next, nChanged) =
-        org.apache.spark.sql.graft.ColumnBridge.localCheckpointCounting(
-          labels.withColumnRenamed("cluster_id", "prev")
-            .join(neigh, Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              least(col("prev"), coalesce(col("neigh_min"), col("prev")))
-                .as("cluster_id"),
-              (coalesce(col("neigh_min"), col("prev")) < col("prev"))
-                .as("__chg")),
-          "__chg")
-      converged = nChanged == 0L
+      val cur = labels.mapPartitions(_.map(r => (r.getLong(0), r.getLong(1))),
+        preservesPartitioning = true)
+      val neighMin = sym.join(cur).values.reduceByKey(part, math.min(_, _))
+      // the convergence probe rides the round's own job: the
+      // accumulator counts shrunk labels while the checkpoint
+      // materializes. A retried task can only OVERcount (its updates
+      // may merge twice), never turn a nonzero count into zero, so the
+      // `== 0` test stays exact.
+      val changed = sc.longAccumulator
+      val next = cur.leftOuterJoin(neighMin, part).mapPartitions(_.map {
+        case (id, (prev, nm)) =>
+          val l = nm match {
+            case Some(m) if m < prev => changed.add(1L); m
+            case _ => prev
+          }
+          new GenericInternalRow(Array[Any](id, l)): InternalRow
+      }, preservesPartitioning = true)
+      next.localCheckpoint()
+      next.count()
+      converged = changed.value == 0L
       // `next` is materialized, so the previous round's checkpoint
       // blocks are dead weight — release them instead of letting every
-      // round pin more of the executor storage pool until a GC.
-      // (Dataset.unpersist is a no-op for checkpoint blocks — it only
-      // consults the CacheManager — so go through the RDD handle.)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(labels)
-      labels = next.select("doc_id", "cluster_id")
+      // round pin more of the executor storage pool until a GC
+      labels.unpersist(blocking = false)
+      labels = next
       rounds += 1
     }
-    // the returned plan depends only on the final labels checkpoint
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(edges)
+    sym.unpersist(blocking = false)
+    // a LogicalRDD over the final labels checkpoint itself, so the
+    // callers' unpersistCheckpoint releases its blocks
+    val labelsDf = ColumnBridge.fromRows(docIds.sparkSession, labels,
+      new org.apache.spark.sql.types.StructType()
+        .add("doc_id", LongType).add("cluster_id", LongType))
     // sizes via groupBy + join, not a cluster-partitioned window: a
     // mega-dup cluster (millions of members) would occupy one window
     // task, while the aggregate partial-combines and AQE can
     // skew-split the join back (labels is a checkpointed LogicalRDD,
     // so the double consumption reads materialized blocks, not a
     // recomputed lineage)
-    val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, Seq("cluster_id"))
+    val sizes = labelsDf.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
+    labelsDf.join(sizes, Seq("cluster_id"))
       .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
       .select("doc_id", "cluster_id", "cluster_size", "is_canonical")
       .orderBy("doc_id")
@@ -541,9 +569,9 @@ object Dedup {
     // operator. Eager checkpoint, released below.
     val bands = bandColumns(batch).localCheckpoint(true)
     val clustered = clustersFromBands(freshBandsAgainstIndex(index, bands))
-    // clustersFromBands checkpointed its edges and labels eagerly, so
-    // the returned plan reads the final labels checkpoint — nothing
-    // retains `bands`; release its blocks instead of waiting for a GC
+    // clustersFromBands checkpointed its final labels, so the returned
+    // plan reads that checkpoint — nothing retains `bands`; release
+    // its blocks instead of waiting for a GC
     org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(bands)
     clustered
       .filter(col("is_canonical"))

@@ -761,13 +761,17 @@ object TextOps {
   /** A token ANCHORS (starts) a new passage iff the last hex nibble of
     * its md5 is '0' — p = 1/16, so the expected passage length is 16
     * tokens, the same grain as the fixed windows this family used
-    * before r10. Content decides the boundary, not position: the
+    * before r10. Each token comes paired with its flag; the digests
+    * come from one native pass over the array
+    * ([[graft.functions.Md5LowNibbles]]), not one per lambda call.
+    * Content decides the boundary, not position: the
     * gear/Rabin trick behind CDC dedup (LBFS/Venti) applied at token
     * grain, and the reason a block shared by two docs chunks
     * IDENTICALLY in both no matter what offset it sits at.
     */
-  private def anchors(t: Column): Column =
-    substring(md5(t.cast("binary")), 32, 1) === lit("0")
+  private def anchors(tokens: Column): Column =
+    zip_with(tokens, graft.functions.TextExpressions.md5LowNibbles(tokens),
+      (t, nibble) => struct(t.as("t"), (nibble === lit(0)).as("anchor")))
 
   /** Standard CDC maximum-chunk bound (r10 ADVICE): a boundary is
     * FORCED once a chunk reaches this many tokens, so an anchor-free
@@ -796,16 +800,17 @@ object TextOps {
   private def cdcPassages: Column = {
     val empty = array().cast("array<string>")
     aggregate(
-      toks,
+      anchors(toks),
       struct(empty.as("done"), lit("").as("cur"), lit(0).as("n")),
-      (acc, t) => {
+      (acc, ta) => {
+        val t = ta.getField("t")
         // `n` = tokens in the pending chunk; 0 ⟺ nothing folded yet,
         // which distinguishes a genuinely empty accumulator from a
         // pending chunk whose only token is the empty string (split
         // on ' ' emits "" for empty/multi-space text)
         val n = acc.getField("n")
         val startNew =
-          (anchors(t) || n >= lit(MaxPassageTokens)) && n > lit(0)
+          (ta.getField("anchor") || n >= lit(MaxPassageTokens)) && n > lit(0)
         struct(
           when(startNew, concat(acc.getField("done"), array(acc.getField("cur"))))
             .otherwise(acc.getField("done")).as("done"),

@@ -14,12 +14,12 @@ import org.apache.spark.sql.types.LongType
   *
   * The 100 TB shape is [[Bpe.train]]'s verbatim: the corpus collapses
   * ONCE into the Zipf-bounded (word, count) dictionary; every EM
-  * round then runs over the dictionary only — one distributed
-  * Viterbi-segmentation scan (a per-word codegen fold under the
-  * LITERAL piece-cost map, the k-means literal-codebook bargain)
-  * feeding a map-side-combined usage aggregate with one
-  * vocabulary-bounded driver collect. No corpus rescan, no UDF, no
-  * per-word driver loop.
+  * round then runs over the dictionary only — one plain RDD job: a
+  * distributed Viterbi-segmentation scan (the native DP under the
+  * LITERAL piece-cost map, built once per partition — the k-means
+  * literal-codebook bargain) feeding a map-side-combined usage sum
+  * with one vocabulary-bounded driver collect. No corpus rescan, no
+  * UDF, no per-word driver loop, and no query planned per round.
   *
   * Faithfulness boundary, now fully closed: the DEFAULT E-step is
   * hard EM (Viterbi best segmentation, the `sample=false`
@@ -80,12 +80,10 @@ object UnigramLm {
     * occurrence counted ("aaa" yields "a"×3, "aa"×2, "aaa"×1) — the
     * over-complete seed universe, generated dictionary-side.
     */
-  private def substrings(word: Column): Column =
+  private[graft] def substringsNative(word: Column): Column =
     graft.functions.UnigramExpressions.allSubstrings(word, MaxPieceLen)
 
-  private[graft] def substringsNative(word: Column): Column = substrings(word)
-
-  /** The declarative HOF form of [[substrings]], kept as the portable
+  /** The declarative HOF form of [[substringsNative]], kept as the portable
     * reference the native expression is spec-pinned against (r17: the
     * HOF tree's per-call planning cost dominated the Zipf-tiny
     * dictionary scan; see UnigramExpressions).
@@ -253,6 +251,15 @@ object UnigramLm {
     dp(n)
   }
 
+  /** Per-piece usage sums — one Spark job; the sums stay exact Longs
+    * (an overflow fails, as the SQL sum does).
+    */
+  private def usageByPiece(usage: org.apache.spark.rdd.RDD[
+      (org.apache.spark.unsafe.types.UTF8String, Long)]): Array[(String, Long)] =
+    usage.reduceByKey((a, b) => Math.addExact(a, b))
+      .map { case (p, c) => (p.toString, c) }
+      .collect()
+
   /** The training loop: seed → `iters` hard-EM rounds → prune to
     * `vocabSize` (single chars always retained for coverage) → one
     * re-estimation round on the pruned vocabulary. Returns the
@@ -289,12 +296,18 @@ object UnigramLm {
   def train(documents: DataFrame, vocabSize: Int = 64, seedSize: Int = 256,
             iters: Int = 2, pruneByLoss: Boolean = false,
             softEm: Boolean = false, quantum: Double = 1e9): Seq[Piece] = {
+    import graft.functions.UnigramDpHelper
     val words = Bpe.wordCounts(documents).localCheckpoint(true)
+    // the checkpointed dictionary as a plain RDD: the seed count and
+    // every EM round are one RDD job each over it, with no query
+    // planning or generated code per round
+    val dict = org.apache.spark.sql.graft.ColumnBridge.checkpointRows(words)
+      .map(r => (r.getUTF8String(0), r.getLong(1)))
     try {
-      val seedRows = words
-        .select(explode(substrings(col("word"))).as("piece"), col("n"))
-        .groupBy("piece").agg(sum(col("n")).as("cnt"))
-        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val seedRows = usageByPiece(dict.flatMap { case (w, n) =>
+        val subs = UnigramDpHelper.substrings(w, MaxPieceLen)
+        Iterator.range(0, subs.numElements()).map(i => (subs.getUTF8String(i), n))
+      })
       if (seedRows.isEmpty) return Seq.empty
       val chars = seedRows.filter(_._1.length == 1)
       val top = seedRows.sortBy { case (p, c) => (-c, p) }.take(seedSize)
@@ -308,19 +321,25 @@ object UnigramLm {
       // scales feed the same cost map unchanged: toCosts is
       // scale-invariant up to its final micro-bit rounding.
       def emRound(vocab: Map[String, Long]): Map[String, Long] = {
+        val costs = toCosts(vocab)
         val usage =
-          if (!softEm) words
-            .select(explode(viterbiPieces(col("word"), toCosts(vocab)))
-              .as("piece"), col("n"))
-            .groupBy("piece").agg(sum(col("n")).as("cnt"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          else words
-            .select(explode(fbExpectedNano(col("word"), toCosts(vocab), quantum))
-              .as("o"), col("n"))
-            .select(col("o.piece").as("piece"),
-              (col("o.nano") * col("n")).as("u"))
-            .groupBy("piece").agg(sum(col("u")).as("cnt"))
-            .collect().map(r => r.getString(0) -> r.getLong(1))
+          if (!softEm) usageByPiece(dict.mapPartitions { it =>
+            val table = UnigramDpHelper.costTable(costs)
+            it.flatMap { case (w, n) =>
+              val ps = UnigramDpHelper.viterbi(w, table, MaxPieceLen)
+              Iterator.range(0, ps.numElements()).map(i => (ps.getUTF8String(i), n))
+            }
+          }).toMap
+          else usageByPiece(dict.mapPartitions { it =>
+            val probs = UnigramDpHelper.probTable(costs)
+            it.flatMap { case (w, n) =>
+              val os = UnigramDpHelper.fbExpected(w, probs, quantum, MaxPieceLen)
+              Iterator.range(0, os.numElements()).map { i =>
+                val o = os.getStruct(i, 2)
+                (o.getUTF8String(1), Math.multiplyExact(o.getLong(0), n))
+              }
+            }
+          })
             // a piece whose posterior rounded to zero everywhere has
             // died — drop it so log2(0) never reaches the cost map
             .filter(_._2 > 0L).toMap

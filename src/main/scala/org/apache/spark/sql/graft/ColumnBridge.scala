@@ -28,43 +28,40 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
 
-  /** localCheckpoint(eager) that ALSO counts rows satisfying the
-    * boolean column `flagCol` during the one materialization job
-    * (r18, VERDICT r17 #6): Dedup.clustersCore used to pay a separate
-    * convergence-probe job per propagation round on top of the
-    * round's checkpoint job — the count now rides the checkpoint's
-    * own materialization pass via an accumulator. Accumulator
-    * inflation from task retries can only OVERcount, never turn a
-    * nonzero count into zero, so the `== 0` convergence test stays
-    * exact. Returns the checkpointed frame and the flag count. This
-    * is Dataset.localCheckpoint's own construction (executedPlan
-    * .execute + row copy + RDD localCheckpoint + eager count +
-    * LogicalRDD.fromDataset) with one counting map inserted before
-    * the copy.
+  /** The rows `df` computes, as Spark's internal rows: one planning
+    * of the query (an adaptive plan runs its shuffle map stages here),
+    * after which the caller drives plain RDD operations over it.
+    * Rows may be reused buffers, so read fields out before holding on
+    * to anything.
     */
-  def localCheckpointCounting(df: org.apache.spark.sql.DataFrame,
-                              flagCol: String)
-      : (org.apache.spark.sql.DataFrame, Long) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val spark = ds.sparkSession
-    val idx = df.schema.fieldIndex(flagCol)
-    require(df.schema(idx).dataType ==
-      org.apache.spark.sql.types.BooleanType,
-      s"localCheckpointCounting: $flagCol must be boolean")
-    val acc = spark.sparkContext.longAccumulator
-    val rdd = ds.queryExecution.executedPlan.execute().mapPartitions { it =>
-      it.map { r =>
-        if (!r.isNullAt(idx) && r.getBoolean(idx)) acc.add(1L)
-        r.copy()
-      }
+  def rows(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.toRdd
+
+  /** The materialized rows behind a localCheckpointed Dataset — the
+    * RDD its LogicalRDD scans, read without planning a query. The rows
+    * are stable copies (the checkpoint stored them), so their string
+    * fields can be kept as they are.
+    */
+  def checkpointRows(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    logicalPlan(df) match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      case p => throw new IllegalArgumentException(
+        s"checkpointRows: expected a checkpointed frame, got ${p.nodeName}")
     }
-    rdd.localCheckpoint()
-    rdd.count() // eager materialization — the one job
-    val out = org.apache.spark.sql.classic.Dataset.ofRows(spark,
-      org.apache.spark.sql.execution.LogicalRDD
-        .fromDataset(rdd, ds, isStreaming = false))
-    (out, acc.value)
-  }
+
+  /** A DataFrame that scans `rows` directly: its plan is a LogicalRDD
+    * over exactly this RDD, so [[unpersistCheckpoint]] on the frame (or
+    * on any projection over it) releases `rows`' blocks. It carries no
+    * size statistics, so joins over it plan as joins over an unknown
+    * (large) input.
+    */
+  def fromRows(spark: org.apache.spark.sql.SparkSession,
+               rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+               schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 
   /** Release the storage blocks behind a localCheckpointed Dataset.
     * `Dataset.unpersist` only consults the CacheManager (df.cache
@@ -79,8 +76,8 @@ object ColumnBridge {
     * checkpoint becomes permanently unrecomputable once the blocks are
     * dropped. Only call this when the checkpointed frame has no other
     * referents (the Dedup.clusters round loop is the model: each
-    * round's checkpoint is released only after the next round's is
-    * materialized and nothing else holds the old one).
+    * round's labels are released only after the next round's are
+    * materialized and nothing else holds the old ones).
     */
   def unpersistCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     logicalPlan(df).collect {

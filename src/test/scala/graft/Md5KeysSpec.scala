@@ -117,6 +117,21 @@ class Md5KeysSpec extends AnyFunSuite {
     assert(keys(-7L, "tok").forall(k => k >= 0 && k < (1L << 28)))
   }
 
+  test("md5LowNibbles equals the last hex digit of each token's md5") {
+    val ref = transform(tokens,
+      t => conv(substring(md5(t.cast("binary")), 32, 1), 16, 10).cast("int"))
+    for ((mode, rows) <- bothPaths(corpus.select(col("doc_id"),
+        TextExpressions.md5LowNibbles(tokens), ref).collect())) {
+      assert(rows.length === 508)
+      for (r <- rows)
+        assert(r.get(1) === r.get(2), s"$mode doc ${r.getLong(0)}")
+      assert(rows.exists(r => r.getLong(0) == -1L && r.isNullAt(1)), mode)
+      // the passage anchor rate: about 1 token in 16 has nibble 0
+      val nib = rows.filterNot(_.isNullAt(1)).flatMap(_.getSeq[Int](1))
+      assert(nib.count(_ == 0) * 16 > nib.length / 2 && nib.forall(x => x >= 0 && x < 16), mode)
+    }
+  }
+
   test("simhash from raw digests equals the md5-hex nibble rule on sf0.01") {
     // the old form: Spark's md5 hex per token, bit j set iff most
     // digests have hex nibble j ≥ '8'
