@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import graft.sources.Fs
 object Bench {
@@ -100,6 +101,11 @@ object Bench {
       polls += 1
     }
   }
+
+  /** A bench artifact that could not be written is named on stderr;
+    * the run still prints its headline. */
+  private def artifactWriteFailed(path: String, e: Throwable): Unit =
+    System.err.println(s"[bench] could not write $path: $e")
 
   def main(args: Array[String]): Unit = {
     // file > env > defaults — see GraftConfig (config-file parity with
@@ -249,7 +255,7 @@ object Bench {
     // operator, not first-query classloading
     try SparkEntry.queries("q1_pricing_summary")(spark, benchDir)
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // calibration fingerprint, START point (r14 VERDICT #2 — see
     // calibrationJson): after warm-up so the yardstick measures the
     // box, not first-call classloading; its twin runs after the last
@@ -307,7 +313,7 @@ object Bench {
         // (a bare count() would let Spark prune the projections away)
         val err =
           try { fn(spark, benchDir).write.format("noop").mode("overwrite").save(); None }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             Some((e.getClass.getSimpleName + ": " +
               Option(e.getMessage).getOrElse("")).take(200)) }
         Rep((System.nanoTime() - t0) / 1e9,
@@ -481,7 +487,7 @@ object Bench {
         val p = java.nio.file.Paths.get(path)
         Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
         java.nio.file.Files.write(p, fullJson.getBytes("UTF-8"))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(e) => artifactWriteFailed(path, e) }
     }
     // r15 refresh (VERDICT r14 #7): the old 43-query subset predated
     // the ANN/tokenizer surface that now dominates suite cost — the
@@ -541,7 +547,7 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_HEADLINE.json"),
         headlineJson.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => artifactWriteFailed("BENCH_HEADLINE.json", e) }
     }
     spark.stop()
     println(headlineJson)

@@ -1,8 +1,9 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dims, Facts, Validation}
+import graft.operators.{Facts, Validation}
 import graft.sources.{Loader, Tables}
 
 /** Whole-warehouse orchestrator — the Spark shape of the reference's
@@ -34,142 +35,78 @@ object Etl {
   def buildAll(spark: SparkSession, config: GraftConfig): DataFrame =
     buildAll(spark, config.sfDir, config.outDir)
 
+  // The stages in report order. Dims, checks and all but three facts
+  // are the registry entries of their names. dim_orden, dim_line_item
+  // and dim_detalle_venta are degenerate dims: pure views over the
+  // facts (Dims.dimOrden & co.), so the orchestrator skips them by
+  // design (SURVEY §6) rather than duplicate fact-grain data.
+  private val Sources = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "documents", "embeddings")
+  private val Dimensions = Seq("dim_date", "dim_customer", "dim_product", "dim_supplier",
+    "dim_geography", "dim_order_status", "dim_brand", "dim_event_type", "dim_time_of_day",
+    "dim_fiscal_period", "dim_payment_method", "dim_tax_rate", "dim_promotion",
+    "dim_account", "dim_warehouse", "dim_shipping", "dim_cost_center",
+    "dim_transaction_type", "dim_movement_type", "dim_direccion", "dim_estado_pago",
+    "dim_categoria_producto", "dim_usuario", "dim_sitio_web", "scd2_customer")
+  private val FactTables = Seq("fact_sales", "fact_sales_promo", "fact_inventory",
+    "fact_inventory_wh", "fact_transactions", "fact_pnl", "fact_balance")
+  private val Checks = Seq("validate_nulls", "validate_ranges", "validate_ri",
+    "validate_duplicates", "reconcile_orders")
+  /** The findings columns of the checks; a non-zero one flags the row. */
+  private val FindingCols = Seq("n_violations", "n_orphans", "n_dup_keys", "n_mismatched")
+
   /** Build every dim + fact to `outDir`, run the validation suite, and
     * return the run report (stage, table, rows, seconds, status).
     * Tables land as parquet under `outDir/<table>`; the report itself
-    * is also written to `outDir/etl_run_report`.
+    * is also written to `outDir/etl_run_report`. The facts whose
+    * registry entries rebuild their dims from the sources read the
+    * warehouse's own landed dims here, as a real star build must.
     */
   def buildAll(spark: SparkSession, sfDir: String, outDir: String): DataFrame = {
+    val registry = SparkEntry.queries
     val report = scala.collection.mutable.ArrayBuffer[StageRow]()
-
-    def run(stage: String, table: String)(build: => DataFrame): Unit = {
+    /** Times `body` (rows, status) into one report row; a non-fatal
+      * error becomes an `error: <message>` row with rows = -1. */
+    def stage(phase: String, table: String)(body: => (Long, String)): Unit = {
       val t0 = System.nanoTime()
-      try {
-        Loader.truncateAndLoad(build, s"$outDir/$table")
-        // footer-metadata count — no second pass over the data
-        val n = Tables.rowCount(spark, s"$outDir/$table")
-        report += StageRow(stage, table, n, (System.nanoTime() - t0) / 1e9, "ok")
-      } catch {
-        case e: Exception =>
-          report += StageRow(stage, table, -1L,
-            (System.nanoTime() - t0) / 1e9, s"error: ${e.getMessage}")
-      }
+      val (rows, status) =
+        try body catch { case NonFatal(e) => (-1L, s"error: ${e.getMessage}") }
+      report += StageRow(phase, table, rows, (System.nanoTime() - t0) / 1e9, status)
     }
-
     def t(name: String) = Tables(spark, sfDir, name)
     def out(name: String) = Tables.parquet(spark, s"$outDir/$name")
-
-    // ---- phase 1: extraction (sources surfaced as-is; the reference
-    // copies DB tables into staging frames — parquet sources already
-    // are the staging layer, so this phase only verifies readability)
-    Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "documents", "embeddings").foreach { name =>
-      val t0 = System.nanoTime()
-      try {
-        val n = t(name).count()
-        report += StageRow("extract", name, n, (System.nanoTime() - t0) / 1e9, "ok")
-      } catch {
-        case e: Exception =>
-          report += StageRow("extract", name, -1L,
-            (System.nanoTime() - t0) / 1e9, s"error: ${e.getMessage}")
-      }
-    }
-
-    // ---- phase 2: dimensions (dependency-free; any order)
-    run("dim", "dim_date") { Dims.dimDate(t("orders")) }
-    run("dim", "dim_customer") { Dims.dimCustomer(t("customer"), t("nation"), t("region")) }
-    run("dim", "dim_product") { Dims.dimProduct(t("part")) }
-    run("dim", "dim_supplier") { Dims.dimSupplier(t("supplier"), t("nation"), t("region")) }
-    run("dim", "dim_geography") { Dims.dimGeography(t("nation"), t("region")) }
-    run("dim", "dim_order_status") { Dims.dimOrderStatus(t("orders")) }
-    run("dim", "dim_brand") { Dims.dimBrand(t("part")) }
-    run("dim", "dim_event_type") { Dims.dimEventType(Tables.events(spark, sfDir)) }
-    run("dim", "dim_time_of_day") { Dims.dimTimeOfDay(Tables.events(spark, sfDir)) }
-    run("dim", "dim_fiscal_period") { Dims.dimFiscalPeriod(t("orders")) }
-    run("dim", "dim_payment_method") { Dims.dimPaymentMethod(spark) }
-    run("dim", "dim_tax_rate") { Dims.dimTaxRate(t("lineitem")) }
-    run("dim", "dim_promotion") { Dims.dimPromotion(t("part")) }
-    run("dim", "dim_account") { Dims.dimAccount(spark) }
-    run("dim", "dim_warehouse") { Dims.dimWarehouse(t("nation"), t("region")) }
-    run("dim", "dim_shipping") { Dims.dimShipping(t("lineitem"), t("orders")) }
-    run("dim", "dim_cost_center") { Dims.dimCostCenter(spark) }
-    run("dim", "dim_transaction_type") { Dims.dimTransactionType(spark) }
-    run("dim", "dim_movement_type") { Dims.dimMovementType(t("lineitem")) }
-    run("dim", "dim_direccion") {
-      Dims.dimDireccion(t("customer"), t("supplier"), t("nation"), t("region"))
-    }
-    run("dim", "dim_estado_pago") { Dims.dimEstadoPago(spark) }
-    run("dim", "dim_categoria_producto") { Dims.dimProductCategory(t("part")) }
-    run("dim", "dim_usuario") { Dims.dimUsuario(Tables.events(spark, sfDir)) }
-    run("dim", "dim_sitio_web") { Dims.dimSitioWeb(spark) }
-    // dim_orden / dim_line_item / dim_detalle_venta are degenerate dims:
-    // pure views over the facts (Dims.dimOrden & co.) — materializing
-    // them would duplicate fact-grain data, so the orchestrator skips
-    // them by design (SURVEY §6).
-    run("dim", "scd2_customer") { Dims.scd2Customer(t("orders")) }
-
-    // ---- phase 3: facts (consume the dims just landed — the surrogate
-    // resolution reads the warehouse's own dim tables, as a real star
-    // build must)
-    run("fact", "fact_sales") {
-      Facts.factSales(t("lineitem"), t("orders"),
+    def build(table: String): DataFrame = table match {
+      case "fact_sales" => Facts.factSales(t("lineitem"), t("orders"),
         out("dim_customer"), out("dim_product"), out("dim_supplier"),
         out("dim_order_status"))
+      case "fact_sales_promo" =>
+        Facts.factSalesPromo(t("lineitem"), t("part"), out("dim_promotion"))
+      case "fact_inventory_wh" => Facts.factInventoryWarehouse(t("lineitem"),
+        t("supplier"), t("part"), out("dim_warehouse"))
+      case _ => registry(table)(spark, sfDir)
     }
-    run("fact", "fact_sales_promo") {
-      Facts.factSalesPromo(t("lineitem"), t("part"), out("dim_promotion"))
+    def land(table: String): (Long, String) = {
+      Loader.truncateAndLoad(build(table), s"$outDir/$table")
+      // footer-metadata count — no second pass over the data
+      (Tables.rowCount(spark, s"$outDir/$table"), "ok")
     }
-    run("fact", "fact_inventory") { Facts.factInventory(t("lineitem"), t("part"), t("supplier")) }
-    run("fact", "fact_inventory_wh") {
-      Facts.factInventoryWarehouse(t("lineitem"), t("supplier"), t("part"),
-        out("dim_warehouse"))
+    // a non-zero finding marks the stage "findings: N" — data-quality
+    // signal, NOT a failed build; one aggregation pass yields both the
+    // row count and the findings count
+    def check(name: String): (Long, String) = {
+      val df = registry(name)(spark, sfDir)
+      val flagged = df.columns.filter(FindingCols.contains)
+        .map(c => col(c) > 0).foldLeft(lit(false))(_ || _)
+      val r = df.agg(count(lit(1)), count(when(flagged, 1))).head
+      (r.getLong(0), if (r.getLong(1) == 0) "ok" else s"findings: ${r.getLong(1)}")
     }
-    run("fact", "fact_transactions") { Facts.factTransactions(Tables.events(spark, sfDir)) }
-    run("fact", "fact_pnl") { Facts.factPnl(t("lineitem"), t("orders")) }
-    run("fact", "fact_balance") { Facts.factBalance(t("orders")) }
-
-    // ---- phase 4: final validation. Each check's findings column is
-    // named per check (n_violations / n_orphans / n_dup_keys /
-    // n_mismatched); a non-zero finding marks the stage "findings: N"
-    // — data-quality signal, NOT a failed build — while exceptions
-    // mark it "error: …".
-    val findingCols = Seq("n_violations", "n_orphans", "n_dup_keys", "n_mismatched")
-    def validate(table: String)(build: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      try {
-        val df = build
-        val present = df.columns.filter(findingCols.contains)
-        // one aggregation pass yields both the row count and the
-        // findings count — each check's plan evaluates exactly once
-        val (rows, bad) =
-          if (present.isEmpty) (df.count(), 0L)
-          else {
-            val r = df.agg(count(lit(1)).as("n"),
-              count(when(present.map(c => col(c) > 0).reduce(_ || _), 1))
-                .as("bad")).head
-            (r.getLong(0), r.getLong(1))
-          }
-        report += StageRow("validate", table, rows,
-          (System.nanoTime() - t0) / 1e9, if (bad == 0) "ok" else s"findings: $bad")
-      } catch {
-        case e: Exception =>
-          report += StageRow("validate", table, -1L,
-            (System.nanoTime() - t0) / 1e9, s"error: ${e.getMessage}")
-      }
-    }
-    validate("validate_nulls") {
-      Validation.nullProfile(spark,
-        Seq("customer" -> t("customer"), "orders" -> t("orders")))
-    }
-    validate("validate_ranges") { Validation.rangeChecks(t("lineitem"), Tables.events(spark, sfDir)) }
-    validate("validate_ri") {
-      Validation.riChecks(t("lineitem"), t("orders"), t("customer"),
-        t("part"), t("supplier"), t("nation"), t("region"))
-    }
-    validate("validate_duplicates") {
-      Validation.duplicateProfile(t("documents"), Tables.events(spark, sfDir), t("lineitem"))
-    }
-    validate("reconcile_orders") { Validation.reconcileOrders(t("lineitem"), t("orders")) }
+    // extraction: parquet sources already are the staging layer, so
+    // this phase only verifies readability — footer row counts, no job
+    Sources.foreach(n => stage("extract", n)(
+      (Tables.rowCount(spark, s"$sfDir/$n.parquet"), "ok")))
+    Dimensions.foreach(n => stage("dim", n)(land(n)))
+    FactTables.foreach(n => stage("fact", n)(land(n)))
+    Checks.foreach(n => stage("validate", n)(check(n)))
 
     import spark.implicits._
     val reportDf = report.toSeq.toDF()

@@ -63,7 +63,8 @@ object SparkEntry {
           .map(c => s"${c.getName}:${c.lastModified}:${c.length}")
           .mkString("|")
       else s"${f.lastModified}:${f.length}"
-    s"$KnnTruthArtifactVersion;nProbes=20;k=5;${src.getAbsolutePath};${sig(src)}"
+    s"$KnnTruthArtifactVersion;nProbes=${Similarity.TruthNProbes};" +
+      s"k=${Similarity.TruthK};${src.getAbsolutePath};${sig(src)}"
   }
 
   /** The live artifact dir iff its stamp matches the fixture. */

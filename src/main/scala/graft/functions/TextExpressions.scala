@@ -38,8 +38,6 @@ object TextExpressions {
   def sortedIntersectCount(a: Column, b: Column): Column =
     ColumnBridge.column(SortedIntersectCount(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  def minhashSignature(xs: Column): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(xs)))
   def shingleMinhash(s: Column, width: Int = 5): Column =
     ColumnBridge.column(ShingleMinHash(ColumnBridge.expression(s), width))
   def rollingHash31(s: Column): Column =
@@ -320,54 +318,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     })
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-/** All 12 minhash values in one pass over the shingle-hash array —
-  * min of (a_k·x + b_k) mod p per mix — instead of 12 transform+min
-  * pipelines each materializing an intermediate array.
-  */
-case class MinHashSignature(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-  override def nullSafeEval(v: Any): Any = {
-    import TextExpressions._
-    val xs = v.asInstanceOf[ArrayData]
-    val mins = Array.fill(MixA.length)(Long.MaxValue)
-    var i = 0
-    while (i < xs.numElements()) {
-      val x = xs.getLong(i)
-      var k = 0
-      while (k < mins.length) {
-        val h = (MixA(k) * x + MixB(k)) % MixP
-        if (h < mins(k)) mins(k) = h
-        k += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, xs => {
-      import TextExpressions._
-      val mixA = ctx.addReferenceObj("mixA", MixA.toArray, "long[]")
-      val mixB = ctx.addReferenceObj("mixB", MixB.toArray, "long[]")
-      val mins = ctx.freshName("mins"); val i = ctx.freshName("i")
-      val k = ctx.freshName("k"); val x = ctx.freshName("x")
-      val h = ctx.freshName("h")
-      s"""
-        long[] $mins = new long[${MixA.length}];
-        java.util.Arrays.fill($mins, Long.MAX_VALUE);
-        for (int $i = 0; $i < $xs.numElements(); $i++) {
-          long $x = $xs.getLong($i);
-          for (int $k = 0; $k < ${MixA.length}; $k++) {
-            long $h = ($mixA[$k] * $x + $mixB[$k]) % ${MixP}L;
-            if ($h < $mins[$k]) $mins[$k] = $h;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-      """
-    })
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** The full minhash signature straight from the text: polynomial

@@ -98,7 +98,8 @@ object UnigramDpHelper {
   }
 
   /** Forward–backward expected piece usage —
-    * [[graft.operators.UnigramLm.fbExpectedNano]] as one Java pass.
+    * [[graft.operators.UnigramLm.fbExpectedNanoDeclarative]] as one Java
+    * pass (the soft E-step of `UnigramLm.train`).
     * Term-sum order and the ((α·p)·β)/Z association match the
     * declarative fold exactly, so every emitted nano Long is
     * bit-identical.
@@ -216,64 +217,9 @@ case class UnigramViterbi(child: Expression, costs: Map[String, Long],
     copy(child = c)
 }
 
-/** word → (nano, piece) expected-usage structs under the literal cost
-  * map (probabilities 2^(−cost/1e6) precomputed driver-side, exactly
-  * as the declarative form's literal map).
-  */
-case class UnigramFbExpected(child: Expression, costs: Map[String, Long],
-                             quantum: Double, maxLen: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("nano", LongType, nullable = true),
-      StructField("piece", StringType, nullable = true))),
-    containsNull = false)
-  override def prettyName: String = "unigram_fb_expected"
-
-  @transient private lazy val table: java.util.HashMap[UTF8String, java.lang.Double] =
-    UnigramDpHelper.probTable(costs)
-
-  override def nullSafeEval(v: Any): Any =
-    UnigramDpHelper.fbExpected(v.asInstanceOf[UTF8String], table, quantum, maxLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, w => {
-      val ref = ctx.addReferenceObj("unigramProbs", table, "java.util.HashMap")
-      s"${ev.value} = graft.functions.UnigramDpHelper.fbExpected($w, $ref, " +
-        s"${quantum}D, $maxLen);"
-    })
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** word → all substrings of length 1..maxLen (the over-complete seed
-  * universe) as one node.
-  */
-case class AllSubstrings(child: Expression, maxLen: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "all_substrings"
-
-  override def nullSafeEval(v: Any): Any =
-    UnigramDpHelper.substrings(v.asInstanceOf[UTF8String], maxLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, w =>
-      s"${ev.value} = graft.functions.UnigramDpHelper.substrings($w, $maxLen);")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 object UnigramExpressions {
   def unigramViterbi(word: Column, costs: Map[String, Long],
                      maxLen: Int): Column =
     ColumnBridge.column(UnigramViterbi(ColumnBridge.expression(word),
       costs, maxLen))
-
-  def unigramFbExpected(word: Column, costs: Map[String, Long],
-                        quantum: Double, maxLen: Int): Column =
-    ColumnBridge.column(UnigramFbExpected(ColumnBridge.expression(word),
-      costs, quantum, maxLen))
-
-  def allSubstrings(word: Column, maxLen: Int): Column =
-    ColumnBridge.column(AllSubstrings(ColumnBridge.expression(word), maxLen))
 }

@@ -35,10 +35,17 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.cosineSim(a, b)
 
+  /** The probe count and neighbor count of the exact-cosine truth
+    * ([[knnBrute]], [[knnTruthPairs]], [[knnTruthFrom]]); the persisted
+    * truth artifact's stamp names them too. */
+  val TruthNProbes = 20
+  val TruthK = 5
+
   /** Exact top-k cosine neighbors for probes (vec_id < nProbes).
     * Probe side broadcast; corpus streamed once.
     */
-  def knnBrute(embeddings: DataFrame, nProbes: Int = 20, k: Int = 5): DataFrame = {
+  def knnBrute(embeddings: DataFrame, nProbes: Int = TruthNProbes,
+               k: Int = TruthK): DataFrame = {
     val probes = embeddings.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val corpus = embeddings.select(col("vec_id").as("nid"), col("embedding").as("nv"))
@@ -64,8 +71,8 @@ object Similarity {
     * oracle-replay shape — DuckDB re-derives truth inside each query
     * anyway, so results are identical either way).
     */
-  def knnTruthPairs(embeddings: DataFrame, nProbes: Int = 20,
-                    k: Int = 5): DataFrame =
+  def knnTruthPairs(embeddings: DataFrame, nProbes: Int = TruthNProbes,
+                    k: Int = TruthK): DataFrame =
     knnBrute(embeddings, nProbes, k).select(col("qid"), col("nid"))
 
   /** Read a persisted [[knnBrute]]-shaped truth artifact (qid, rank,
@@ -78,8 +85,8 @@ object Similarity {
     * constant instead of a re-derived brute-force scan. Storage order
     * is irrelevant.
     */
-  def knnTruthFrom(truth: DataFrame, nProbes: Int = 20,
-                   k: Int = 5): DataFrame = {
+  def knnTruthFrom(truth: DataFrame, nProbes: Int = TruthNProbes,
+                   k: Int = TruthK): DataFrame = {
     val spark = truth.sparkSession
     import spark.implicits._
     val rows = truth.select(col("qid"), col("rank"), col("nid")).collect()

@@ -78,15 +78,9 @@ object UnigramLm {
 
   /** All substrings of length 1..[[MaxPieceLen]] of a word, every
     * occurrence counted ("aaa" yields "a"×3, "aa"×2, "aaa"×1) — the
-    * over-complete seed universe, generated dictionary-side.
-    */
-  private[graft] def substringsNative(word: Column): Column =
-    graft.functions.UnigramExpressions.allSubstrings(word, MaxPieceLen)
-
-  /** The declarative HOF form of [[substringsNative]], kept as the portable
-    * reference the native expression is spec-pinned against (r17: the
-    * HOF tree's per-call planning cost dominated the Zipf-tiny
-    * dictionary scan; see UnigramExpressions).
+    * over-complete seed universe, as a declarative HOF form. It is the
+    * portable reference `UnigramDpHelper.substrings` (what the trainer's
+    * seed round calls) is spec-pinned against.
     */
   private[graft] def substringsDeclarative(word: Column): Column =
     flatten(transform(graft.functions.ColUtil.posRange(length(word)),
@@ -170,17 +164,11 @@ object UnigramLm {
     * per piece, so a 100 TB corpus (~1e13 tokens) drops the quantum
     * to 1e3–1e6 — same discipline, wider headroom — instead of
     * silently wrapping the aggregate.
-    */
-  private[graft] def fbExpectedNano(word: Column,
-                                    costs: Map[String, Long],
-                                    quantum: Double = 1e9): Column =
-    graft.functions.UnigramExpressions.unigramFbExpected(word, costs,
-      quantum, MaxPieceLen)
-
-  /** The declarative HOF form of [[fbExpectedNano]] — the portable
-    * reference the native expression is spec-pinned bit-equal against
-    * (same term-sum order, same ((α·p)·β)/Z association, same
-    * round-half-up nano quantization).
+    *
+    * This is the declarative HOF form, the portable reference
+    * `UnigramDpHelper.fbExpected` (what the trainer's soft E-step
+    * calls) is spec-pinned bit-equal against: same term-sum order,
+    * same ((α·p)·β)/Z association, same round-half-up quantization.
     */
   private[graft] def fbExpectedNanoDeclarative(word: Column,
                                                costs: Map[String, Long],
@@ -267,9 +255,10 @@ object UnigramLm {
     * vocabSize) + alphabet rows at every step).
     *
     * `quantum` (soft mode only) is the expected-count quantization
-    * scale [[fbExpectedNano]] aggregates in — the 100 TB overflow
-    * escape hatch, now an actual parameter (r13 ADVICE: the scaladoc
-    * named the knob but nothing plumbed it): the Long usage sum holds
+    * scale of the soft E-step ([[fbExpectedNanoDeclarative]]) — the
+    * 100 TB overflow escape hatch, now an actual parameter (r13
+    * ADVICE: the scaladoc named the knob but nothing plumbed it): the
+    * Long usage sum holds
     * ~9.2e18/quantum expected occurrences per piece, so a ~1e13-token
     * corpus drops it to 1e3–1e6. The single-char coverage floor is
     * quantum-RELATIVE in soft mode (one whole expected occurrence,
@@ -429,8 +418,8 @@ object UnigramLm {
   }
 
   /** [[vocab]] under SOFT-EM training (forward–backward expected
-    * counts, [[fbExpectedNano]]) — the r12 scaladoc's remaining
-    * documented simplification, closed: published beside the hard-EM
+    * counts, [[fbExpectedNanoDeclarative]]) — the r12 scaladoc's
+    * remaining documented simplification, closed: published beside the hard-EM
     * default so the two E-steps stay individually inspectable.
     * n_count is in `quantum` usage units (default nano, 1e9 — the
     * expected-count scale; drop the quantum at extreme corpus scale,

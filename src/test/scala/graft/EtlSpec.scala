@@ -120,6 +120,32 @@ class EtlSpec extends AnyFunSuite {
     assert(csvCount === 1500L)
   }
 
+  test("a missing source turns its stages into error rows and the build goes on") {
+    import org.apache.commons.io.FileUtils
+    val src = Files.createTempDirectory("graft_etl_src").toFile
+    val out = Files.createTempDirectory("graft_etl_err").toString
+    try {
+      FileUtils.copyDirectory(new java.io.File("/root/testdata/sf0.001"), src)
+      FileUtils.forceDelete(new java.io.File(src, "documents.parquet"))
+      val report = Etl.buildAll(spark, src.toString, out).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getString(4)))
+      val byStage = report.toMap
+      val (docRows, docStatus) = byStage(("extract", "documents"))
+      assert(docStatus.startsWith("error: ") && docRows === -1L, docStatus)
+      val (dupRows, dupStatus) = byStage(("validate", "validate_duplicates"))
+      assert(dupStatus.startsWith("error: ") && dupRows === -1L, dupStatus)
+      val failing = Set(("extract", "documents"), ("validate", "validate_duplicates"))
+      report.filterNot(r => failing(r._1)).foreach { case (k, (_, status)) =>
+        assert(status === "ok" || status.startsWith("findings: "), s"$k: $status")
+      }
+      assert(report.length === 9 + 25 + 7 + 5)
+      assert(spark.read.parquet(s"$out/etl_run_report").count() === report.length.toLong)
+    } finally {
+      FileUtils.deleteDirectory(src)
+      FileUtils.deleteDirectory(new java.io.File(out))
+    }
+  }
+
   test("CDC-maintained fact_transactions is row-identical to a full rebuild") {
     val ev = graft.sources.Tables.events(spark, sf001)
     val oldEv = ev.filter(col("event_id") % 5 =!= 0)

@@ -185,9 +185,6 @@ class TextDedupSpec extends AnyFunSuite {
       val d = TextOps.langId(probe).collect().toSeq
       val c = probe.select(col("doc_id"),
         graft.functions.TextExpressions.rollingHash31(lower(trim(col("text")))).as("h"),
-        graft.functions.TextExpressions.minhashSignature(
-          transform(split(lower(trim(col("text"))), " "),
-            t => conv(substring(md5(t.cast("binary")), 1, 7), 16, 10).cast("long"))).as("sig"),
         graft.functions.TextExpressions.charCounts(lower(trim(col("text")))).as("cc"))
         .orderBy("doc_id").collect().toSeq
       (a, b, c, d)
