@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
-import graft.sources.{Fs, Tables}
+import graft.sources.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   * Each `queries` entry is one operator from the survey; `oracleSql`
@@ -16,126 +16,47 @@ object SparkEntry {
 
   private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
 
-  // ------------------------------------------------------------------
-  // Exact-cosine ANN ground truth as a PERSISTED FIXTURE ARTIFACT
-  // (r18, VERDICT r17 #4 — "re-land r16 verdict #6 the honest way"):
-  // the `ann_exact_truth` registry entry derives the brute-force truth
-  // from the parquet inputs, persists it (tmp + atomic rename, stamped
-  // with the source fixture's identity + params + a format version),
-  // and returns the read-back — its own timed region carries the full
-  // derivation + write + read cost, and the DuckDB oracle grades its
-  // output like any other query. Every truth CONSUMER then performs a
-  // validated artifact READ inside its own timed region
-  // (Similarity.knnTruthFrom — the kmeansCodebookFrom convention:
-  // bounded nProbes·k collect, shape-validated, returned as a literal
-  // frame). This replaces the r17-reverted module-level memo
-  // (knnTruthCache, commit 8c5a007): the build cost is owned by a
-  // separately-timed entry instead of silently skipped, and a missing
-  // or stale artifact makes each consumer fall back to deriving truth
-  // fresh per call — results are bit-identical either way (doubles
-  // round-trip parquet losslessly), which the oracle re-checks per
-  // consumer. `ann_exact_truth` sorts before every consumer
-  // (ann_family_comparison is the first), so one full bench/verify
-  // pass is self-sufficient and deterministic end to end.
-  // ------------------------------------------------------------------
-
-  /** Bump when the truth derivation or artifact layout changes — a
-    * stale artifact must never survive a code change.
+  /** A registry entry that takes another entry's output as an input.
+    * Called on its own, it derives `need` in the call; in a harness run
+    * ([[forRun]]) it is handed the frame the run materialized once.
     */
-  private val KnnTruthArtifactVersion = "v1"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private[graft] def truthArtifactRoot(d: String): java.io.File =
-    new java.io.File(s"target/graft_truth/${md5hex(d).substring(0, 8)}")
-
-  /** Identity of the fixture's embeddings table: every file's name,
-    * mtime and length (a directory for re-chunked benches, one file
-    * for the raw fixtures) plus params + format version.
-    */
-  private def truthStamp(d: String): String = {
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.lastModified}:${c.length}")
-          .mkString("|")
-      else s"${f.lastModified}:${f.length}"
-    s"$KnnTruthArtifactVersion;nProbes=${Similarity.TruthNProbes};" +
-      s"k=${Similarity.TruthK};${src.getAbsolutePath};${sig(src)}"
+  final case class Needs(need: String,
+                         build: (SparkSession, String, DataFrame) => DataFrame)
+      extends ((SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, d: String): DataFrame =
+      build(s, d, queries(need)(s, d))
   }
 
-  /** The live artifact dir iff its stamp matches the fixture. */
-  private def validTruthArtifact(d: String): Option[java.io.File] = {
-    val live = new java.io.File(truthArtifactRoot(d), "live")
-    val marker = new java.io.File(live, "_stamp")
-    try {
-      if (marker.isFile && new String(java.nio.file.Files
-          .readAllBytes(marker.toPath), "UTF-8") == truthStamp(d))
-        Some(new java.io.File(live, "knn_truth.parquet"))
-      else None
-    } catch { case _: java.io.IOException => None }
-  }
-
-  /** Derive + persist + read back the truth — the `ann_exact_truth`
-    * entry body. Swap is rename-aside (readers see old or new, never
-    * half-written); a reader that catches the between-renames gap
-    * falls back to fresh derivation (see [[knnTruth]]).
+  /** An ANN evaluator over the exact-cosine truth: it needs
+    * `ann_exact_truth` and passes that frame through the bounded,
+    * validated [[Similarity.knnTruthFrom]] collect in its own build, so
+    * the collect is part of the consumer's own call and its truth side
+    * is a literal relation. Nothing is memoized across calls.
     */
-  private def buildTruthArtifact(s: SparkSession, d: String): DataFrame = {
-    val truth = Similarity.knnBrute(t(s, d, "embeddings"))
-    val root = truthArtifactRoot(d)
-    val tmp = new java.io.File(root, s".tmp_${ProcessHandle.current.pid}")
-    if (tmp.exists) Fs.deleteLocal(tmp)
-    truth.write.mode("overwrite")
-      .parquet(new java.io.File(tmp, "knn_truth.parquet").toString)
-    java.nio.file.Files.write(new java.io.File(tmp, "_stamp").toPath,
-      truthStamp(d).getBytes("UTF-8"))
-    val live = new java.io.File(root, "live")
-    val aside = new java.io.File(root, s".old_${ProcessHandle.current.pid}")
-    if (aside.exists) Fs.deleteLocal(aside)
-    if (live.exists && !live.renameTo(aside))
-      throw new IllegalStateException(
-        "knn-truth artifact aside-swap failed (concurrent writer?)")
-    if (!tmp.renameTo(live))
-      throw new IllegalStateException(
-        "knn-truth artifact swap failed (concurrent writer?)")
-    Fs.deleteLocal(aside)
-    Tables.parquet(s, new java.io.File(live, "knn_truth.parquet").toString)
-      .orderBy("qid", "rank")
-  }
+  private def overTruth(
+      f: (SparkSession, String, Option[DataFrame]) => DataFrame): Needs =
+    Needs("ann_exact_truth",
+      (s, d, truth) => f(s, d, Some(Similarity.knnTruthFrom(truth))))
 
-  /** Exact-cosine ANN ground-truth frame threaded through every
-    * recall/operating-curve evaluator: a VALIDATED read of the
-    * persisted `ann_exact_truth` artifact when one matching this
-    * fixture exists (bounded nProbes·k collect inside the consumer's
-    * own timed region), else derived fresh from the parquet inputs
-    * per call. Results are bit-identical either way; no module-level
-    * memo, nothing shared across separately-timed entries except the
-    * stamped on-disk artifact whose build is itself a timed, oracled
-    * registry entry.
+  /** The registry for one harness run over `d`: the need of every kept
+    * entry is materialized once, as an eager local checkpoint outside
+    * any timed region, and the same frame is handed to each consumer.
+    * A need that fails to materialize fails each of its consumers with
+    * its error. Bench and Verify both run through here.
     */
-  private def knnTruth(s: SparkSession, d: String): Option[DataFrame] =
-    Some(validTruthArtifact(d).flatMap { p =>
-      try Some(Similarity.knnTruthFrom(Tables.parquet(s, p.toString)))
-      catch { case e: Exception if fileVanished(e) => // swapped mid-read → derive
-        System.err.println(s"[knnTruth] artifact read failed, deriving fresh: $e")
-        None }
-    }.getOrElse(Similarity.knnTruthPairs(t(s, d, "embeddings"))))
-
-  /** True iff `e` (or a cause) says a file disappeared under the read —
-    * the live truth dir swapped by a concurrent `ann_exact_truth`.
-    * Anything else, a malformed artifact above all, must propagate.
-    */
-  private def fileVanished(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
-      case _: java.io.FileNotFoundException => true
-      case st: org.apache.spark.SparkThrowable =>
-        Set("PATH_NOT_FOUND", "FAILED_READ_FILE.FILE_NOT_EXIST")(st.getCondition)
-      case _ => false
+  def forRun(s: SparkSession, d: String, keep: String => Boolean,
+             registry: Map[String, (SparkSession, String) => DataFrame] = queries)
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val frames = registry.collect { case (n, Needs(need, _)) if keep(n) => need }
+      .toSet[String].map(need =>
+        need -> scala.util.Try(registry(need)(s, d).localCheckpoint(eager = true)))
+      .toMap
+    registry.map {
+      case (n, Needs(need, build)) if keep(n) =>
+        n -> ((s: SparkSession, d: String) => build(s, d, frames(need).get))
+      case kv => kv
     }
+  }
 
   /** The composed OPQ-IVFPQ deployment artifact for the two
     * `_pretrained` entries — trained per call, inside the timed
@@ -148,7 +69,7 @@ object SparkEntry {
                           d: String): Similarity.IvfPqResidualOpqArtifact =
     Similarity.trainIvfPqResidualOpqArtifact(t(s, d, "embeddings"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- A. dimensional warehouse ----
     "dim_date" -> ((s, d) => Dims.dimDate(t(s, d, "orders"))),
     "dim_customer" -> ((s, d) =>
@@ -415,33 +336,30 @@ object SparkEntry {
     "dedup_containment" -> ((s, d) => Dedup.containmentTop(t(s, d, "documents"))),
     "dedup_simhash" -> ((s, d) => Dedup.simhash(t(s, d, "documents"))),
     "knn_cosine_bruteforce" -> ((s, d) => Similarity.knnBrute(t(s, d, "embeddings"))),
-    // the persisted exact-truth fixture artifact (r18, VERDICT r17
-    // #4): derive brute-force truth, persist it stamped, return the
-    // read-back — the build cost every ann_*/lsh curve consumer's
-    // validated artifact READ depends on, owned by its own timed,
-    // oracled entry (sorts before every consumer). See knnTruth.
-    "ann_exact_truth" -> ((s, d) => buildTruthArtifact(s, d)),
+    // the exact-cosine truth every ann_*/lsh curve evaluator needs
+    // (see overTruth); a harness run materializes it once (forRun)
+    "ann_exact_truth" -> ((s, d) => Similarity.knnBrute(t(s, d, "embeddings"))),
     "knn_lsh" -> ((s, d) => Similarity.knnLsh(t(s, d, "embeddings"))),
-    "ann_recall" -> ((s, d) =>
-      Similarity.annRecall(t(s, d, "embeddings"), truth = knnTruth(s, d))),
+    "ann_recall" -> overTruth((s, d, truth) =>
+      Similarity.annRecall(t(s, d, "embeddings"), truth = truth)),
     // NSW graph ANN: capped in-cell top-M edges + medoid mesh, beam
     // search unrolled to 3 hops — the HNSW-class recall-per-candidate
     // member the quantization families don't cover
     "knn_graph" -> ((s, d) => Similarity.knnGraph(t(s, d, "embeddings"))),
-    "ann_recall_graph" -> ((s, d) =>
-      Similarity.annRecallGraph(t(s, d, "embeddings"), truth = knnTruth(s, d))),
+    "ann_recall_graph" -> overTruth((s, d, truth) =>
+      Similarity.annRecallGraph(t(s, d, "embeddings"), truth = truth)),
     // per-hop recall/cost sweep from ONE walk (candidate sets nest in
     // hops structurally — the curve matrix's fourth member)
-    "ann_operating_curve_graph" -> ((s, d) =>
+    "ann_operating_curve_graph" -> overTruth((s, d, truth) =>
       Similarity.graphOperatingCurve(t(s, d, "embeddings"),
-        truth = knnTruth(s, d))),
+        truth = truth)),
     // the three point-sweep curves normalized and unioned — the
     // which-family-wins table over ONE shared truth
-    "ann_family_comparison" -> ((s, d) =>
+    "ann_family_comparison" -> overTruth((s, d, truth) =>
       Similarity.annFamilyComparison(t(s, d, "embeddings"),
-        truth = knnTruth(s, d))),
-    "ann_recall_ivf" -> ((s, d) =>
-      Similarity.annRecallIvf(t(s, d, "embeddings"), truth = knnTruth(s, d))),
+        truth = truth)),
+    "ann_recall_ivf" -> overTruth((s, d, truth) =>
+      Similarity.annRecallIvf(t(s, d, "embeddings"), truth = truth)),
     "knn_ivf" -> ((s, d) => Similarity.knnIvf(t(s, d, "embeddings"))),
     "multimodal_frames" -> ((s, d) => Multimodal.frameSample(t(s, d, "documents"))),
     "embedding_stats" -> ((s, d) => Similarity.embeddingStats(t(s, d, "embeddings"))),
@@ -494,8 +412,8 @@ object SparkEntry {
     "knn_ivf_pq" -> ((s, d) => Similarity.knnIvfPq(t(s, d, "embeddings"))),
     "knn_ivf_pq_residual" -> ((s, d) =>
       Similarity.knnIvfPqResidual(t(s, d, "embeddings"))),
-    "ann_recall_ivf_pq" -> ((s, d) =>
-      Similarity.annRecallIvfPq(t(s, d, "embeddings"), truth = knnTruth(s, d))),
+    "ann_recall_ivf_pq" -> overTruth((s, d, truth) =>
+      Similarity.annRecallIvfPq(t(s, d, "embeddings"), truth = truth)),
     // OPQ-style randomized-Hadamard pre-rotation (r8 VERDICT #4): PQ
     // trained and coded in the rotated space; recall scored against
     // the ORIGINAL-space exact truth (rotation preserves cosine)
@@ -505,53 +423,53 @@ object SparkEntry {
       // annRecallIvfPqOpq's pin note)
       Similarity.pqCodes(
         Similarity.opqRotate(t(s, d, "embeddings")).localCheckpoint(true))),
-    "ann_recall_ivf_pq_opq" -> ((s, d) =>
+    "ann_recall_ivf_pq_opq" -> overTruth((s, d, truth) =>
       Similarity.annRecallIvfPqOpq(t(s, d, "embeddings"),
-        truth = knnTruth(s, d))),
+        truth = truth)),
     // the LEARNED rotation in the Hadamard slot (r11 VERDICT #5):
     // Ge §4 eigenvalue allocation over the deflated PCA eigenbasis;
     // oracle inlines the trained matrix at dump time (the BPE
     // training-vs-apply boundary)
-    "ann_recall_ivf_pq_opq_learned" -> ((s, d) =>
+    "ann_recall_ivf_pq_opq_learned" -> overTruth((s, d, truth) =>
       Similarity.annRecallIvfPqOpqLearned(t(s, d, "embeddings"),
-        truth = knnTruth(s, d))),
-    "ann_operating_curve" -> ((s, d) =>
+        truth = truth)),
+    "ann_operating_curve" -> overTruth((s, d, truth) =>
       Similarity.annOperatingCurve(t(s, d, "embeddings"),
-        truthPairs = knnTruth(s, d))),
+        truthPairs = truth)),
     // the LSH family's cost-knob sweep (r11 VERDICT #6): signature
     // length grid over ONE shared candidate set; full-signature row
     // cross-pins to ann_recall
-    "lsh_operating_curve" -> ((s, d) =>
+    "lsh_operating_curve" -> overTruth((s, d, truth) =>
       Similarity.lshOperatingCurve(t(s, d, "embeddings"),
-        truthPairs = knnTruth(s, d))),
+        truthPairs = truth)),
     // the COMPOSED index's probeLists sweep (r12 VERDICT #4): one
     // shared candidate set at the widest config over the trained
     // IVF-PQ pipeline; np=2 row cross-pins to ann_recall_ivf_pq
-    "ann_operating_curve_ivf_pq" -> ((s, d) =>
+    "ann_operating_curve_ivf_pq" -> overTruth((s, d, truth) =>
       Similarity.annOperatingCurveIvfPq(t(s, d, "embeddings"),
-        truth = knnTruth(s, d))),
+        truth = truth)),
     // the r13 curve in the LEARNED rotation's space (the plain
     // curve's "ADC-limited" reading, answered with a measured table);
     // rotated frame checkpointed once (the annRecallIvfPqOpq pin)
-    "ann_operating_curve_ivf_pq_opq_learned" -> ((s, d) =>
+    "ann_operating_curve_ivf_pq_opq_learned" -> overTruth((s, d, truth) =>
       Similarity.annOperatingCurveIvfPqOpqLearned(t(s, d, "embeddings"),
-        truth = knnTruth(s, d))),
+        truth = truth)),
     // the residual member of the curve family (r13) — completes the
     // sweep matrix across raw / learned-rotation / residual
-    "ann_operating_curve_ivf_pq_residual" -> ((s, d) =>
+    "ann_operating_curve_ivf_pq_residual" -> overTruth((s, d, truth) =>
       Similarity.annOperatingCurveIvfPqResidual(t(s, d, "embeddings"),
-        truth = knnTruth(s, d))),
+        truth = truth)),
     // the COMPOSED production stack (r14, VERDICT r13 #3): learned
     // rotation THEN per-cell residual PQ — FAISS's real OPQ-IVFPQ;
     // search, point evaluator, and the curve matrix's fourth member
     "knn_ivf_pq_residual_opq_learned" -> ((s, d) =>
       Similarity.knnIvfPqResidualOpqLearned(t(s, d, "embeddings"))),
-    "ann_recall_ivf_pq_residual_opq_learned" -> ((s, d) =>
+    "ann_recall_ivf_pq_residual_opq_learned" -> overTruth((s, d, truth) =>
       Similarity.annRecallIvfPqResidualOpqLearned(t(s, d, "embeddings"),
-        truth = knnTruth(s, d))),
-    "ann_operating_curve_ivf_pq_residual_opq_learned" -> ((s, d) =>
+        truth = truth)),
+    "ann_operating_curve_ivf_pq_residual_opq_learned" -> overTruth((s, d, truth) =>
       Similarity.annOperatingCurveIvfPqResidualOpqLearned(
-        t(s, d, "embeddings"), truth = knnTruth(s, d))),
+        t(s, d, "embeddings"), truth = truth)),
     // r15 (VERDICT r14 #3): the APPLY-ONLY composed twins — the
     // deployment artifact trains per CALL, inside the timed region
     // (the mid-r17 once-per-session memo was REVERTED in commit
@@ -563,9 +481,9 @@ object SparkEntry {
     "knn_ivf_pq_residual_opq_pretrained" -> ((s, d) =>
       Similarity.knnIvfPqResidualOpqWith(t(s, d, "embeddings"),
         opqArtifact(s, d))),
-    "ann_recall_ivf_pq_residual_opq_pretrained" -> ((s, d) =>
+    "ann_recall_ivf_pq_residual_opq_pretrained" -> overTruth((s, d, truth) =>
       Similarity.annRecallIvfPqResidualOpqWith(t(s, d, "embeddings"),
-        opqArtifact(s, d), truth = knnTruth(s, d))),
+        opqArtifact(s, d), truth = truth)),
     // r15 (VERDICT r14 #5): the last SURVEY §2 row without a registry
     // entry — IVF search over the Lloyd-trained coarse codebook; FULL
     // oracle re-deriving the codebook via the shared unrolled-Lloyd

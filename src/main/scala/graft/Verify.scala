@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.concurrent.{Await, Future, TimeoutException}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
+import scala.util.control.NonFatal
 import graft.sources.Fs
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -91,15 +92,18 @@ object Verify {
     * stderr progress line; a wall cap enforced by running the dump in
     * a Future under its own job group and cancelling the group on
     * timeout (interruptOnCancel kills the running tasks), so one hung
-    * plan cannot starve the queries after it. `queries` is a
-    * parameter so the spec can inject a deliberately-hanging entry.
+    * plan cannot starve the queries after it. The needs of the kept
+    * entries are materialized once, before the first dump
+    * ([[SparkEntry.forRun]]). `queries` is a parameter so the spec can
+    * inject a deliberately-hanging entry.
     */
   def dumpQueries(spark: SparkSession, sfDir: String, outDir: String,
                   keep: String => Boolean, capSec: Long,
                   queries: Map[String, (SparkSession, String) => DataFrame] =
                     SparkEntry.queries): Unit = {
     new java.io.File(outDir).mkdirs()
-    val names = queries.keys.toSeq.sorted.filter(keep)
+    val run = SparkEntry.forRun(spark, sfDir, keep, queries)
+    val names = run.keys.toSeq.sorted.filter(keep)
     val total = names.length
     names.zipWithIndex.foreach { case (name, idx) =>
       val group = s"verify-$name"
@@ -119,7 +123,7 @@ object Verify {
       val fut = Future {
         spark.sparkContext
           .setJobGroup(group, s"verify dump $name", interruptOnCancel = true)
-        try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        try run(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         finally {
           spark.sparkContext.clearJobGroup()
@@ -140,7 +144,7 @@ object Verify {
           purge()
           System.err.println(
             s"[verify] ${idx + 1}/$total $name TIMEOUT after ${capSec}s — jobs cancelled, dump purged")
-        case e: Throwable =>
+        case NonFatal(e) =>
           purge()
           System.err.println(
             s"[verify] ${idx + 1}/$total $name FAILED: ${e.getMessage}")

@@ -36,8 +36,7 @@ object Similarity {
     graft.functions.VectorExpressions.cosineSim(a, b)
 
   /** The probe count and neighbor count of the exact-cosine truth
-    * ([[knnBrute]], [[knnTruthPairs]], [[knnTruthFrom]]); the persisted
-    * truth artifact's stamp names them too. */
+    * ([[knnBrute]], [[knnTruthPairs]], [[knnTruthFrom]]). */
   val TruthNProbes = 20
   val TruthK = 5
 
@@ -75,15 +74,14 @@ object Similarity {
                     k: Int = TruthK): DataFrame =
     knnBrute(embeddings, nProbes, k).select(col("qid"), col("nid"))
 
-  /** Read a persisted [[knnBrute]]-shaped truth artifact (qid, rank,
-    * nid, …) back into the literal pair frame every evaluator's
-    * `truth` parameter takes — the kmeansCodebookFrom convention
-    * (r18, VERDICT r17 #4): bounded nProbes·k collect, VALIDATED
-    * rather than trusted (qid within the probe range, per-qid ranks
-    * exactly 1..n with n ≤ k, no duplicate neighbor), returned as a
-    * local literal relation so consumers' truth side is a plan
-    * constant instead of a re-derived brute-force scan. Storage order
-    * is irrelevant.
+  /** Turn a [[knnBrute]]-shaped truth frame (qid, rank, nid, …) into
+    * the literal pair frame every evaluator's `truth` parameter takes —
+    * the kmeansCodebookFrom convention: bounded nProbes·k collect,
+    * VALIDATED rather than trusted (qid within the probe range, per-qid
+    * ranks exactly 1..n with n ≤ k, no duplicate neighbor), returned as
+    * a local literal relation so consumers' truth side is a plan
+    * constant instead of a re-derived brute-force scan. Row order is
+    * irrelevant.
     */
   def knnTruthFrom(truth: DataFrame, nProbes: Int = TruthNProbes,
                    k: Int = TruthK): DataFrame = {

@@ -51,7 +51,7 @@ object Fs {
   }
 
   /** Delete a file or directory tree on the driver's local disk (work
-    * dirs, staged fixtures, truth artifacts).
+    * dirs, staged fixtures).
     */
   def deleteLocal(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteLocal))

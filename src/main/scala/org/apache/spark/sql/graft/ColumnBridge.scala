@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import scala.util.control.NonFatal
 
 /** Spark 4 made Column wrap a ColumnNode and gated the
   * Expression↔Column converters behind private[sql]
@@ -110,5 +111,5 @@ object ColumnBridge {
   def numDiskBlocks: Long =
     try org.apache.spark.SparkEnv.get.blockManager
       .diskBlockManager.getAllBlocks().length.toLong
-    catch { case _: Throwable => 0L }
+    catch { case NonFatal(_) => 0L }
 }

@@ -273,13 +273,11 @@ class PlanShapeSpec extends AnyFunSuite {
     ("ann_operating_curve_ivf_pq", Shape(6, 2, 2, 3),
       "knn_ivf_pq's literal-codebook search widened to the grid: " +
         "corpus cell assign + broadcast probe join + config fan-out; " +
-        "the truth side is a VALIDATED READ of the ann_exact_truth " +
-        "fixture artifact (r18, VERDICT r17 #4 — a bounded " +
-        "nProbes·k collect into a literal relation, built up front " +
-        "by this spec), so the brute side's rank window + 2 " +
-        "WindowGroupLimit and 2 exchanges left the plan; with a " +
-        "missing/stale artifact the consumer falls back to per-call " +
-        "derivation (the r17 8/2/2/6 shape — results identical, " +
+        "the truth side is the ann_exact_truth need passed through " +
+        "knnTruthFrom (a bounded nProbes·k collect into a literal " +
+        "relation), so the brute side's rank window + 2 " +
+        "WindowGroupLimit and 2 exchanges are not in the plan (the " +
+        "r17 lazy-truth shape was 8/2/2/6, results identical, " +
         "oracle-checked); the 2 SMJs join CONFIG-scale aggregates " +
         "(4 grid rows x 20 probes x k) — metadata joins, " +
         "broadcast-vs-SMJ immaterial at any scale"),
@@ -292,7 +290,7 @@ class PlanShapeSpec extends AnyFunSuite {
     ("ann_operating_curve_ivf_pq_residual_opq_learned", Shape(6, 2, 2, 3),
       "EXACTLY ann_operating_curve_ivf_pq's shape for the same reason " +
         "(checkpointed rotated frame = plain scan; truth = the " +
-        "validated ann_exact_truth artifact read since r18): " +
+        "literal ann_exact_truth relation): " +
         "widest-config candidate set + config fan-out; the 2 SMJs " +
         "join CONFIG-scale aggregates — metadata joins"),
     ("knn_ivf_pq_residual_opq_pretrained", Shape(2, 1, 0, 3),
@@ -374,17 +372,7 @@ class PlanShapeSpec extends AnyFunSuite {
         "(distinct-lengths rows; the per-length sub-offset window IS " +
         "partitioned) + the 1-row n_docs scalar aggregate")))
 
-  // The two ann curve pins consume the exact-truth fixture artifact
-  // (r18, VERDICT r17 #4): build it up front so the pinned shapes are
-  // the deterministic artifact-read shapes regardless of what a prior
-  // run left in target/ (a missing/stale artifact would flip the truth
-  // side to the fresh-derivation plan family).
-  private lazy val truthArtifactBuilt: Unit = {
-    SparkEntry.queries("ann_exact_truth")(spark, sf); ()
-  }
-
   test("flagship physical plans match their audited fingerprints") {
-    truthArtifactBuilt
     val diffs = pinned.flatMap { case (name, want, why) =>
       val s = SparkEntry.queries(name)(spark, sf).queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -403,7 +391,6 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("no flagship plan hides a cartesian product or single-partition exchange") {
-    truthArtifactBuilt
     val diffs = pinned.flatMap { case (name, _, _) =>
       val s = SparkEntry.queries(name)(spark, sf).queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

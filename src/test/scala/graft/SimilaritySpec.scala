@@ -168,59 +168,6 @@ class SimilaritySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Similarity.knnTruthFrom(tooMany) }
   }
 
-  test("a stamped but malformed knn-truth artifact fails its consumer instead of being re-derived") {
-    import org.apache.commons.io.FileUtils
-    // a private fixture copy: the artifact is keyed by the fixture path
-    val dst = java.nio.file.Files.createTempDirectory("graft_truth_sf").toFile
-    FileUtils.copyDirectory(new java.io.File(sf), dst)
-    val d = dst.toString
-    val root = SparkEntry.truthArtifactRoot(d)
-    try {
-      SparkEntry.queries("ann_exact_truth")(spark, d).collect()
-      val live = new java.io.File(root, "live")
-      assert(new java.io.File(live, "_stamp").isFile)
-      // same stamp, corrupt body: probe 0 skips rank 2
-      Seq((0L, 1L, 3L), (0L, 3L, 4L)).toDF("qid", "rank", "nid")
-        .write.mode("overwrite")
-        .parquet(new java.io.File(live, "knn_truth.parquet").toString)
-      intercept[IllegalArgumentException] {
-        SparkEntry.queries("ann_recall")(spark, d).collect()
-      }
-    } finally {
-      FileUtils.deleteDirectory(root)
-      FileUtils.deleteDirectory(dst)
-    }
-  }
-
-  test("a knn-truth artifact stamped for another k is ignored, however malformed its body") {
-    import org.apache.commons.io.FileUtils
-    val dst = java.nio.file.Files.createTempDirectory("graft_truth_sf").toFile
-    FileUtils.copyDirectory(new java.io.File(sf), dst)
-    val d = dst.toString
-    val root = SparkEntry.truthArtifactRoot(d)
-    try {
-      SparkEntry.queries("ann_exact_truth")(spark, d).collect()
-      def recall() = SparkEntry.queries("ann_recall")(spark, d).collect()
-        .map(_.toString).sorted.toSeq
-      val expected = recall()
-      val live = new java.io.File(root, "live")
-      val stampFile = new java.io.File(live, "_stamp").toPath
-      val stamp = java.nio.file.Files.readString(stampFile)
-      // the stamp text standing artifacts carry
-      assert(stamp.startsWith("v1;nProbes=20;k=5;"), stamp)
-      java.nio.file.Files.writeString(stampFile,
-        stamp.replace(s";k=${Similarity.TruthK};", s";k=${Similarity.TruthK + 1};"))
-      // a body that would fail validation if it were read: probe 0 skips rank 2
-      Seq((0L, 1L, 3L), (0L, 3L, 4L)).toDF("qid", "rank", "nid")
-        .write.mode("overwrite")
-        .parquet(new java.io.File(live, "knn_truth.parquet").toString)
-      assert(recall() === expected)
-    } finally {
-      FileUtils.deleteDirectory(root)
-      FileUtils.deleteDirectory(dst)
-    }
-  }
-
   test("semdedup index and admission: single-scan forms bit-equal the compose-from-decision references (r18)") {
     val emb = Tables.embeddings(spark, sf)
     val code = Similarity.kmeansCodebook(emb, 8, 3)
